@@ -1,24 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // 113 queries × 2 runs in one JVM: the app-status store retains
-      // per-execution plan graphs and per-stage metrics that otherwise
-      // grow the heap all session (the r6 drift suspect) — cap retention
-      // hard since nothing reads the store with the UI off.
-      .config("spark.ui.retainedJobs", "50")
-      .config("spark.ui.retainedStages", "100")
-      .config("spark.ui.retainedTasks", "1000")
-      .config("spark.sql.ui.retainedExecutions", "10")
-      .getOrCreate()
+    val spark = Sessions.local("graft-bench", Sessions.width)
     spark.sparkContext.setLogLevel("WARN")
     Verify.muteBoundedWindowWarnings()
     // Generic session warmup (parquet footers, shuffle machinery, codegen

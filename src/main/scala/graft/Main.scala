@@ -202,15 +202,7 @@ object Main {
     // notebooks) getOrCreate returns the caller's session, which must
     // survive the scan
     val preexisting = SparkSession.getDefaultSession.isDefined
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .appName("graft-scan")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new plans.GraftExtensions)
-      .getOrCreate()
+    val spark = session("graft-scan")
     spark.sparkContext.setLogLevel(
       if (verbosity >= 2) "INFO" else if (verbosity == 1) "WARN" else "ERROR")
 
@@ -836,15 +828,7 @@ object Main {
     require(out.nonEmpty, s"compact: --out DIR required $usage")
     val outDir = out.get
     val preexisting = SparkSession.getDefaultSession.isDefined
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .appName("graft-compact")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new plans.GraftExtensions)
-      .getOrCreate()
+    val spark = session("graft-compact")
     spark.sparkContext.setLogLevel("ERROR")
     try {
       // no SOURCE named → every log under OUT/events (the sub-dir names
@@ -1270,16 +1254,7 @@ object Main {
     val explainOnly = args.contains("--explain")
     val fn = SparkEntry.queries.getOrElse(name,
       sys.error(s"unknown query '$name' — run `query list`"))
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .appName(s"graft-query-$name")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new plans.GraftExtensions)
-      .getOrCreate()
+    val spark = session(s"graft-query-$name")
     spark.sparkContext.setLogLevel("ERROR")
     val df = fn(spark, sfDir)
     if (explainOnly) { df.explain("formatted"); return }
@@ -1314,13 +1289,7 @@ object Main {
   private def runAudit(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: audit PATH [PATH...]")
     val preexisting = SparkSession.getDefaultSession.isDefined
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .appName("graft-audit")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new plans.GraftExtensions)
-      .getOrCreate()
+    val spark = session("graft-audit")
     spark.sparkContext.setLogLevel("ERROR")
     args.foreach { p =>
       val r = auditFrame(spark, p).collect()(0)
@@ -1330,6 +1299,16 @@ object Main {
     }
     if (!preexisting) spark.stop()
   }
+
+  /** The CLI modes' session: the shared factory plus
+    * [[plans.GraftExtensions]]. Only the CLI carries the planner rules:
+    * the range-join rewrite fires by default and would reshape the plans
+    * `Bench`, `Verify` and the tests check against oracles and the
+    * golden file. */
+  private def session(app: String): SparkSession =
+    Sessions.builder(app, Sessions.width)
+      .withExtensions(new plans.GraftExtensions)
+      .getOrCreate()
 
   /** `s3://` (reference scheme) → `s3a://` (Hadoop connector scheme). */
   private def normalize(p: String): String =

@@ -1,5 +1,8 @@
 package graft
 
+import java.nio.charset.StandardCharsets.UTF_8
+import java.util.concurrent.{ExecutorService, Executors}
+
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.apache.spark.sql.SparkSession
 
@@ -64,6 +67,102 @@ object ProductBench {
     (keep ++ fresh).toArray.sortBy((o: S3Object) => o.key)
   }
 
+  /** An in-JVM ListObjectsV2 endpoint over `served` (read per request, so
+    * a caller can swap the namespace between listings), with the
+    * [[S3Conf]] that lists it. The caller stops the server AND shuts the
+    * pool down: `server.stop(0)` leaves a user-supplied pool's
+    * non-daemon threads running, which pins the JVM open.
+    *
+    * `sun.net.httpserver.nodelay` turns Nagle off on the server's
+    * sockets: without it every listing page stalls on the client's
+    * delayed ACK (warm 8000-key list-only pass on a 4-core box,
+    * local[32]: 1.6–1.9 s with the stall, 0.64–0.70 s without). The JDK
+    * reads it once, when the first server in the JVM is created. */
+  private def endpoint(served: () => Array[S3Object])
+      : (HttpServer, ExecutorService, S3Conf) = {
+    System.setProperty("sun.net.httpserver.nodelay", "true")
+    val server = HttpServer.create(
+      new java.net.InetSocketAddress("127.0.0.1", 0), 0)
+    server.createContext("/", (ex: HttpExchange) => {
+      try handle(served())(ex) finally ex.close()
+    })
+    val pool = Executors.newFixedThreadPool(64)
+    server.setExecutor(pool)
+    server.start()
+    (server, pool, S3Conf(s"http://127.0.0.1:${server.getAddress.getPort}",
+      "us-east-1", "k", "s", pathStyle = true))
+  }
+
+  private def xesc(s: String): String = s.flatMap {
+    case '&' => "&amp;"; case '<' => "&lt;"; case '>' => "&gt;"
+    case c => c.toString
+  }
+
+  /** Lean ListObjectsV2 semantics over a sorted key array: prefix,
+    * delimiter grouping, max-keys, continuation-token == last covered
+    * key, start-after as an initial token. No signature check: the
+    * bench times listing and publishing, not signing (S3WireSpec's
+    * endpoint verifies signatures). */
+  private def handle(served: Array[S3Object])(ex: HttpExchange): Unit = {
+    val params = Option(ex.getRequestURI.getRawQuery).getOrElse("")
+      .split("&").filter(_.nonEmpty).map { kv =>
+        val Array(k, v) = kv.split("=", 2).padTo(2, "")
+        java.net.URLDecoder.decode(k, "UTF-8") ->
+          java.net.URLDecoder.decode(v, "UTF-8")
+      }.toMap
+    val prefix = params.getOrElse("prefix", "")
+    val delim = params.get("delimiter")
+    val maxKeys = params.get("max-keys").map(_.toInt).getOrElse(1000)
+    val after = params.get("continuation-token")
+      .orElse(params.get("start-after"))
+    val inPrefix = served.filter(_.key.startsWith(prefix))
+    val entries: Seq[Either[S3Object, (String, String)]] = delim match {
+      case None => inPrefix.toSeq.map(Left(_))
+      case Some(d) =>
+        val out = Seq.newBuilder[Either[S3Object, (String, String)]]
+        var i = 0
+        while (i < inPrefix.length) {
+          val o = inPrefix(i)
+          val rest = o.key.drop(prefix.length)
+          if (rest.contains(d)) {
+            val g = prefix + rest.takeWhile(_ != d.head) + d
+            var j = i
+            while (j < inPrefix.length && inPrefix(j).key.startsWith(g)) j += 1
+            out += Right((g, inPrefix(j - 1).key))
+            i = j
+          } else { out += Left(o); i += 1 }
+        }
+        out.result()
+    }
+    val remaining = entries.filter {
+      case Left(o) => after.forall(o.key > _)
+      case Right((_, lastKey)) => after.forall(lastKey > _)
+    }
+    val page = remaining.take(maxKeys)
+    val truncated = remaining.size > maxKeys
+    val lastCovered = page.lastOption.map {
+      case Left(o) => o.key
+      case Right((_, lk)) => lk
+    }
+    val next =
+      if (truncated) s"<NextContinuationToken>${xesc(lastCovered.get)}" +
+        "</NextContinuationToken><IsTruncated>true</IsTruncated>"
+      else "<IsTruncated>false</IsTruncated>"
+    val xml = (s"""<?xml version="1.0" encoding="UTF-8"?>""" +
+      "<ListBucketResult><Name>b</Name>" + next +
+      page.collect { case Left(o) =>
+        s"<Contents><Key>${xesc(o.key)}</Key><LastModified>" +
+          java.time.Instant.ofEpochMilli(o.modifiedMs).toString +
+          s"</LastModified><Size>${o.size}</Size></Contents>"
+      }.mkString +
+      page.collect { case Right((g, _)) =>
+        s"<CommonPrefixes><Prefix>${xesc(g)}</Prefix></CommonPrefixes>"
+      }.mkString + "</ListBucketResult>").getBytes(UTF_8)
+    ex.getResponseHeaders.set("Content-Type", "application/xml")
+    ex.sendResponseHeaders(200, xml.length)
+    ex.getResponseBody.write(xml)
+  }
+
   /** Standalone probe: `sbt "runMain graft.ProductBench [nObjects]
     * [--phases]"` — `--phases` additionally times the LISTING alone
     * (a `count()` over [[S3Wire.listDF]], which lists without
@@ -72,31 +171,14 @@ object ProductBench {
   def main(args: Array[String]): Unit = {
     val n = args.filterNot(_.startsWith("--")).headOption
       .map(_.toInt).getOrElse(100000)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[32]"))
-      .appName("product-bench")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.local("product-bench", Sessions.width)
     try {
       if (args.contains("--phases")) {
         // listing-only timings (warm, best effort): the publish share
         // of the cycle is (cycle - list)
-        val server = HttpServer.create(
-          new java.net.InetSocketAddress("127.0.0.1", 0), 0)
         val keys = namespace(n, churned = false)
-        server.createContext("/", (ex: HttpExchange) => {
-          try graft.dev.S3ShardProbe.handle(() => keys)(ex)
-          finally ex.close()
-        })
-        val probePool =
-          java.util.concurrent.Executors.newFixedThreadPool(64)
-        server.setExecutor(probePool)
-        server.start()
+        val (server, pool, conf) = endpoint(() => keys)
         try {
-          val conf = S3Conf(
-            s"http://127.0.0.1:${server.getAddress.getPort}",
-            "us-east-1", "k", "s", pathStyle = true)
           (1 to 3).foreach { i =>
             val t0 = System.nanoTime()
             val c = S3Wire.listDF(spark, conf, "bench", "", Some("p"))
@@ -104,7 +186,7 @@ object ProductBench {
             println(f"[product-bench] list-only pass $i%d: $c%d keys in " +
               f"${(System.nanoTime() - t0) / 1e9}%.2fs")
           }
-        } finally { server.stop(0); probePool.shutdownNow(); () }
+        } finally { server.stop(0); pool.shutdownNow(); () }
       }
       run(spark, n) match {
         case Some(st) => println(f"[product-bench] rows=${st.rows}%d " +
@@ -132,19 +214,9 @@ object ProductBench {
     }
     @volatile var served: Array[S3Object] = namespace(nObjects,
       churned = false)
-    val server = HttpServer.create(
-      new java.net.InetSocketAddress("127.0.0.1", 0), 0)
-    server.createContext("/", (ex: HttpExchange) => {
-      try graft.dev.S3ShardProbe.handle(() => served)(ex)
-      finally ex.close()
-    })
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(64)
-    server.setExecutor(pool)
-    server.start()
+    val (server, pool, conf) = endpoint(() => served)
     withClient(BenchPg.createTable)
     try {
-      val conf = S3Conf(s"http://127.0.0.1:${server.getAddress.getPort}",
-        "us-east-1", "k", "s", pathStyle = true)
       def cycle(): Double = {
         val t0 = System.nanoTime()
         val df = S3Wire.listDF(spark, conf, "bench", "", Some(src))

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.Column
 
+import scala.util.control.NonFatal
+
 /** Parquet table access for the driver-provided fixtures
   * (`/root/testdata/sf*`; see TESTDATA.md / FIXTURES.md).
   *
@@ -16,38 +18,25 @@ object Tables {
   def t(spark: SparkSession, dir: String, name: String): DataFrame =
     spark.read.parquet(s"$dir/$name.parquet")
 
-  /** Dev-only toggle so probes can A/B the fan-out against the plain
-    * scan in one session; always true in shipped paths. */
-  private[graft] var fanOutEnabled = true
-
-  /** Dev-only A/B toggle for the r21 cache-pin fix (same discipline as
-    * [[fanOutEnabled]]; always true in shipped paths). */
-  private[graft] var eagerPinEnabled = true
-
-  /** Dev-only fan-width override (interleaved width sweeps —
-    * dev.FanWidthSweep); None in every shipped path. Replaces the r21
-    * `GRAFT_FANOUT_PAR` env read (ADVICE r21: a stray env value in a
-    * production environment silently reshaped plan widths) with the
-    * same code-level-var discipline as [[fanOutEnabled]]. */
-  private[graft] var fanParOverride: Option[Int] = None
-
   /** Materialize a cached frame NOW (bounded count) so concurrently
     * submitted consumers read the cache instead of racing it — each
-    * racer re-runs the full pipeline (JobProfile r21: q_basket_lift ran
-    * its basket pipeline 4×). No-op when [[eagerPinEnabled]] is off. */
+    * racer re-runs the full pipeline (r21 per-job profile: q_basket_lift
+    * ran its basket pipeline 4×; OPTIMIZATION_r21.md "Cache discipline"). */
   private[graft] def pin(df: DataFrame): DataFrame = {
-    if (eagerPinEnabled) df.count()
+    df.count()
     df
   }
 
-
   /** Total on-disk bytes of a table path (driver-side metadata listing —
-    * no Spark job). Used only by the [[fanOut]] gate. */
-  private def tableBytes(spark: SparkSession, path: String): Long = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    fs.getContentSummary(p).getLength
-  }
+    * no Spark job), for the size gates below. A path that cannot be
+    * measured (missing, unreadable) reads as unbounded, so the gates
+    * stay shut; fatal errors (OOM, interrupts) propagate. */
+  private def tableBytes(spark: SparkSession, path: String): Long =
+    try {
+      val p = new org.apache.hadoop.fs.Path(path)
+      val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+      fs.getContentSummary(p).getLength
+    } catch { case NonFatal(_) => Long.MaxValue }
 
   /** Scale-adaptive scan fan-out (optimization guide §2.5 "input skew …
     * repartition immediately after the read" / §6): the bench fixtures
@@ -76,31 +65,28 @@ object Tables {
     */
   private def fanOut(spark: SparkSession, path: String, df: DataFrame,
       cap: Int, key: Column*): DataFrame = {
-    if (!fanOutEnabled) return df
-    // the dev override bypasses the site cap so width sweeps can probe
-    // above it; shipped paths always take min(cores, cap)
-    val par = fanParOverride
-      .getOrElse(spark.sparkContext.defaultParallelism.min(cap))
+    val par = spark.sparkContext.defaultParallelism.min(cap)
     val maxSplit = spark.sessionState.conf.filesMaxPartitionBytes
-    val bytes = try tableBytes(spark, path) catch { case _: Throwable => Long.MaxValue }
+    val bytes = tableBytes(spark, path)
     if (par > 1 && bytes >= 512L * 1024 && bytes < maxSplit)
       df.repartition(par, key: _*)
     else df
   }
 
   /** Read a fixture table with the scan fan-out applied on `key`.
-    * OPT-IN per call site: the A/B probe (dev.FanOutProbe) showed the
-    * fan-out exchange wins only where heavy per-row work follows the
-    * scan (codec kernels, shingle pipelines, wide decimal aggregates) —
-    * applied blanket at the named readers it taxed every near-floor
-    * query 0.1–0.35 s for an exchange nothing downstream amortizes.
+    * OPT-IN per call site: the r21 interleaved A/B (OPTIMIZATION_r21.md,
+    * fan-out decision table) showed the fan-out exchange wins only
+    * where heavy per-row work follows the scan (codec kernels, shingle
+    * pipelines, wide decimal aggregates) — applied blanket at the named
+    * readers it taxed every near-floor query 0.1–0.35 s for an exchange
+    * nothing downstream amortizes.
     * Key on the column downstream joins/groupBys cluster on, so the
     * fan-out REPLACES their first shuffle where possible.
     *
     * Width capped at [[scanFanCap]] (r22): the driver's own 8-core
     * artifact ran the whole batch 21% faster than 32-core (VERDICT r21
     * — every explicit width at defaultParallelism overshoots at this
-    * data volume), and the interleaved width sweep (dev.FanWidthSweep,
+    * data volume), and the interleaved width sweep (OPTIMIZATION_r22.md,
     * widths 0/4/8/16/32 × 4 rounds, 9 fanned queries) put the optimum
     * at 16 for EVERY lineitem/orders/documents fan site (total 5.53 s
     * at w16 vs 7.09 s at w32 vs 12.88 s unfanned). The cap only ever
@@ -123,8 +109,8 @@ object Tables {
     * wide operation is a high-cardinality partial aggregate (the
     * posting-list family) lose map-side combine quality as map width
     * grows (every extra map partition ships its own partial list per
-    * key), and the width sweep (FanOutProbe, r21) put their optimum at
-    * ~8 on this box while 32 was a net loss. */
+    * key), and the r21 width sweep (OPTIMIZATION_r21.md) put their
+    * optimum at ~8 on this box while 32 was a net loss. */
   private[graft] def fanIfSmall(spark: SparkSession, dir: String,
       name: String, df: DataFrame, cap: Int, key: Column*): DataFrame =
     fanOut(spark, s"$dir/$name.parquet", df, cap, key: _*)
@@ -142,9 +128,8 @@ object Tables {
     * repartition used to be unconditional). */
   private[graft] def belowOneSplit(spark: SparkSession, dir: String,
       name: String): Boolean = {
-    val bytes = try tableBytes(spark, s"$dir/$name.parquet")
-      catch { case _: Throwable => Long.MaxValue }
-    bytes < spark.sessionState.conf.filesMaxPartitionBytes
+    tableBytes(spark, s"$dir/$name.parquet") <
+      spark.sessionState.conf.filesMaxPartitionBytes
   }
 
   def lineitem(s: SparkSession, d: String): DataFrame = t(s, d, "lineitem")

@@ -29,6 +29,10 @@ object PlanGolden {
 
   val goldenPath = "src/test/resources/plan_golden.tsv"
 
+  /** The test session's width: fan-out widths follow it, so the file is
+    * taken at the width [[graft.PlanGoldenSpec]] checks it at. */
+  val width = 4
+
   /** (shuffle exchanges, broadcast exchanges, sorts) of the static
     * physical plan — `executedPlan` BEFORE any job runs, i.e. after
     * EnsureRequirements has inserted the exchanges (`sparkPlan` is the
@@ -65,13 +69,7 @@ object PlanGolden {
 
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Sessions.local("plan-golden", width)
     spark.sparkContext.setLogLevel("ERROR")
     val lines = snapshot(spark, dir).map { case (n, (sh, bc, so)) =>
       s"$n\t$sh\t$bc\t$so"

@@ -355,7 +355,7 @@ object Similarity {
   }
 
   /** Grading companion for [[qSimLsh]]: recall@3 vs exact top-3, gated
-    * at 30%. Measured (graft.dev.RecallProbe): 0.70 at sf0.001, 0.80 at
+    * at 30%. Measured raw recall: 0.70 at sf0.001, 0.80 at
     * sf0.01, 0.42 at sf0.1 — sign-LSH recall falls with corpus size on
     * isotropic gaussians (more planes → thinner buckets), so the gate
     * sits below the worst measured SF; chance recall is ~0.5%. */

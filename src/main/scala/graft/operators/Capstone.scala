@@ -47,7 +47,8 @@ object Capstone {
     */
   def qCapstoneCorpus(s: SparkSession, dir: String): DataFrame =
     // NOT fanned (A/B r21: −0.14 s — the 0.6 s single-task kernel job
-    // JobProfile flagged is still cheaper than the fan exchange here).
+    // the per-job profile flagged is still cheaper than the fan
+    // exchange here; OPTIMIZATION_r21.md).
     corpusBuild(documents(s, dir))
 
   /** [[corpusBuild]] with in-flight accounting via `Dataset.observe`:
@@ -69,7 +70,8 @@ object Capstone {
   }
 
   /** Frame-level form of the corpus build (the registered query binds it
-    * to the fixture; `dev.ScaleProbe` amplifies it 10×). */
+    * to the fixture; the 10× amplified run is in PLANS.md, "Scale
+    * probe"). */
   def corpusBuild(docs: DataFrame): DataFrame = {
     import graft.functions.TextAnalysis.qualityScore
     corpusBuildFrom(docs
@@ -352,7 +354,7 @@ object Capstone {
     // while every cache reader — blocking explode, survivorship window,
     // both verify joins — runs wide. Width = shuffle-width/4 (floor 8):
     // dimension-scale frame, and the 32-wide arm LOST to per-task
-    // overhead in the same A/B (dev.AbEntity: rep8 beat shipped 8/10
+    // overhead in the same A/B (OPTIMIZATION_r21.md: rep8 beat shipped 8/10
     // interleaved rounds, ~−0.2 s; rep32 lost). Row order inside
     // partitions is irrelevant: sorted_pairs canonicalizes +
     // distinct()s the candidate set and survivorship is a
@@ -369,7 +371,7 @@ object Capstone {
     // a BROADCAST hash join (the pre-explosion customer stats look
     // small), so the driver collected and hash-built ~26 exploded rows
     // per entity single-threaded — a ~1 s serial stall per run at
-    // sf0.1 (JobProfile); and the levenshtein verify ran per CANDIDATE
+    // sf0.1 (r21 per-job profile); and the levenshtein verify ran per CANDIDATE
     // row (~21 duplicate key hits per true pair) instead of per
     // distinct pair. Keys shuffle as 8-byte xxhash64, nation folded
     // into the grouping key, so the one wide exchange carries 24-byte

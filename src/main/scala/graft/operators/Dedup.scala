@@ -43,11 +43,12 @@ object Dedup {
   def corpus(s: SparkSession, dir: String): DataFrame = {
     // Deliberately NOT fanned (Tables.fanned): the dedup pipelines are
     // bound by their posting-list exchanges, which already run wide;
-    // A/B (dev.FanOutProbe) showed the extra scan exchange a net loss
-    // across the family (−0.07 … −1.5 s per query at sf0.1; re-measured
-    // in r21 with the same verdict — the corpus subtree's many consumers
-    // each pay the extra exchange + AQE stage round-trip, which costs
-    // more than the 3-task map narrowness it fixes).
+    // the r21 A/B (OPTIMIZATION_r21.md) showed the extra scan exchange
+    // a net loss across the family (−0.07 … −1.5 s per query at sf0.1;
+    // re-measured in r21 with the same verdict — the corpus subtree's
+    // many consumers each pay the extra exchange + AQE stage
+    // round-trip, which costs more than the 3-task map narrowness it
+    // fixes).
     val d = documents(s, dir)
     val exact = d.filter(col("doc_id") < 50)
       .select((col("doc_id") + 100000).as("doc_id"), col("text"))
@@ -234,15 +235,15 @@ object Dedup {
     //
     // `wideReduce` (r21, for the truthDf=512 recall ground truth only):
     // the posting aggregate's reduce gets AQE-coalesced to ~1 task
-    // (tiny shuffled bytes, big per-gram merge CPU — JobProfile showed
-    // a single 1.1 s task), so repartition the RAW gram rows on gram at
-    // the session's shuffle width first — an explicit width is
-    // AQE-exempt, and the aggregate above it plans as one wide COMPLETE
-    // agg (no map-side partial, but the merge work parallelizes).
-    // Interleaved A/B (dev.AbTruth): wideReduce+sizesByDfCap beat the
-    // shipped shape 9/10 rounds, ~−0.4 s; the cheap maxDf=8 family
-    // measured neutral-to-negative on the same lever and keeps the
-    // default shape.
+    // (tiny shuffled bytes, big per-gram merge CPU — the r21 per-job
+    // profile showed a single 1.1 s task), so repartition the RAW gram
+    // rows on gram at the session's shuffle width first — an explicit
+    // width is AQE-exempt, and the aggregate above it plans as one wide
+    // COMPLETE agg (no map-side partial, but the merge work
+    // parallelizes). Interleaved A/B (OPTIMIZATION_r21.md):
+    // wideReduce+sizesByDfCap beat the shipped shape 9/10 rounds,
+    // ~−0.4 s; the cheap maxDf=8 family measured neutral-to-negative on
+    // the same lever and keeps the default shape.
     val width = g.sparkSession.sessionState.conf.numShufflePartitions
     val gIn = if (wideReduce) g.repartition(width, col("gram")) else g
     val byGram = gIn.groupBy("gram")
@@ -358,7 +359,7 @@ object Dedup {
     // loss there), this pipeline's cost is the per-row token+gram-hash
     // projection feeding posexplode — map-side work that the
     // single-row-group fixture would run on 3 of 32 cores. A/B
-    // (dev.FanOutProbe, r21): 1.75 s → 1.29 s at sf0.1; gate is a
+    // (r21, OPTIMIZATION_r21.md): 1.75 s → 1.29 s at sf0.1; gate is a
     // no-op at scale.
     substringSpansOf(graft.Tables.fanIfSmall(s, dir, "documents",
       corpus(s, dir), col("doc_id"))).orderBy("doc_id", "span_start")
@@ -694,8 +695,8 @@ object Dedup {
   // first consumer is the recall row's PINNED `found` pair frame — one
   // consumer, no race — and for q_dedup_simhash the self-join's two
   // sides race at most one bounded fingerprint pass. Interleaved A/Bs
-  // (dev.AbToggles pin ×2, dev.AbSimhashRecall 4-arm) measured the pin
-  // here 0.00–0.08 s net cost, never a win; no static plan changes
+  // (pin on/off ×2 and a 4-arm pin A/B, OPTIMIZATION_r22.md) measured
+  // the pin here 0.00–0.08 s net cost, never a win; no static plan changes
   // (plan_golden byte-identical for both simhash rows with fp unpinned,
   // provided `found` stays pinned). The pin stays at the sites where it
   // measured neutral-to-positive: basket_lift counts, imagedup hashes,
@@ -833,17 +834,6 @@ object Dedup {
     * `recall_ok` (≥ 90% of true pairs found; measured 100% at all three
     * SFs, 138-366 pairs — fixture pairs have j ≥ 0.72, detection
     * ≥ 99.3% per pair at 16×4 banding). */
-  /** The exact Jaccard-≥0.5 ground-truth pair set — shared by the
-    * grading query and ProfileMinhash's attribution section so the
-    * profiler times exactly the pipeline the registry row runs. */
-  private[graft] def minhashExactTruth(s: SparkSession, dir: String): DataFrame =
-    interOfCorpus(corpus(s, dir), cappedListTruthDf)
-      .select(col("d1"), col("d2"),
-        (col("n_inter").cast("double") /
-          (col("s1") + col("s2") - col("n_inter"))).as("j"))
-      .filter(col("j") >= 0.5)
-      .select("d1", "d2")
-
   def qDedupMinhashRecall(s: SparkSession, dir: String): DataFrame = {
     // ONE cached scan+shingle pass feeds BOTH pipelines (r21): the
     // ground-truth side explodes the cached gram arrays (identical
@@ -851,7 +841,7 @@ object Dedup {
     // size>0 filter does) and the LSH side signatures/verifies from the
     // same frame. Before, truth and LSH each re-derived corpus+shingles
     // from the raw scan (~0.6 s of duplicated map work at sf0.1).
-    // NOT pinned (r22 probe): JobProfile counts ~14 overlapping
+    // NOT pinned (r22 probe): the per-job profile counts ~14 overlapping
     // corpus-scan-shaped ~0.3 s jobs here — every concurrent consumer
     // racing the unmaterialized signature cache re-runs the
     // scan+shingle+signature pass — but the duplicates are narrow map
@@ -868,7 +858,7 @@ object Dedup {
         cappedListTruthDf,
         // Wide reduce + df-count sizes (r21): the loose truthDf cap
         // makes the posting merge the row's dominant job — see the
-        // interOfGramFrame scaladoc; A/B'd in dev.AbTruth.
+        // interOfGramFrame scaladoc; A/B in OPTIMIZATION_r21.md.
         wideReduce = true, sizesByDfCap = Some(truthDf))
       .select(col("d1"), col("d2"),
         (col("n_inter").cast("double") /
@@ -921,7 +911,7 @@ object Dedup {
     // for the count.
     val fp = simhashFps(s, dir)
     // Kept pinned (r22 re-audit): a 4-arm interleaved A/B
-    // (dev.AbSimhashRecall: none/fp_only/found_only/both) put all pin
+    // (OPTIMIZATION_r22.md: none/fp_only/found_only/both) put all pin
     // combinations within noise (best 0.93–1.02 s, wins 1/2/1/2) — the
     // apparent 0.25–0.44 s nopin win in two earlier 2-arm sessions was
     // box weather. Dropping THIS pin also flips the static plan's

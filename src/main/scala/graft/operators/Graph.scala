@@ -236,7 +236,8 @@ object Graph {
     // Pinned (r22): under AQE every round's edge-side shuffle-map stage
     // is independent of the label recurrence, so all `rounds` of them
     // are submitted CONCURRENTLY and race the unmaterialized cache —
-    // JobProfile showed 6 overlapping 66-task jobs each re-deriving the
+    // the per-job profile (OPTIMIZATION_r22.md, wave 4) showed 6
+    // overlapping 66-task jobs each re-deriving the
     // full symmetrized-dedup edge frame (~0.5–1.1 s apiece at 32
     // cores). The racers duplicate WIDE work (scan + distinct), which
     // is exactly where the pin discipline pays (basket_lift, imagedup);
@@ -254,7 +255,7 @@ object Graph {
       // cannot use hash aggregation — it planned as a per-round
       // SortAggregate FALLBACK (plan_golden showed 7 sorts with 0
       // windows), and both the driver artifact (0.85×, r21→r21) and a
-      // 6/6 interleaved re-validation (dev.AbReval: window 2.31 s vs
+      // 6/6 interleaved re-validation (OPTIMIZATION_r22.md: window 2.31 s vs
       // aggregate 3.14 s best-of-6) measured the aggregate SLOWER than
       // the window it replaced. The two forms are exactly equivalent
       // for positive bigint counts (min over the lexicographic struct

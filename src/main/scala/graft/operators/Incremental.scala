@@ -85,7 +85,7 @@ object Incremental {
       math.max(64L, math.ceil(-n * math.log(p) / (math.log(2) * math.log(2))).toLong))
 
   /** The routing core over explicit frames (also driven at amplified
-    * scale by [[graft.dev.ScaleProbe]]): bloom over `corpus.text`, split
+    * scale in PLANS.md's scale-probe runs): bloom over `corpus.text`, split
     * `batch`, exact anti-join only the might-contain slice.
     *
     * The filter is built by Catalyst's [[BloomFilterAggregate]] — a real
@@ -93,7 +93,7 @@ object Incremental {
     * executor-side, so the driver receives ONE finished filter.
     * (`DataFrameStatFunctions.bloomFilter` instead ships every
     * partition's partial to the driver and merges them sequentially —
-    * measured 16× slower at 10× corpus in ScaleProbe, driver-bound.) */
+    * measured 16× slower at 10× corpus, driver-bound; PLANS.md.) */
   private[graft] def novelAgainst(corpus: DataFrame, batch0: DataFrame,
       expectedItems: Long, fpp: Double): DataFrame = {
     val n = math.max(64L, expectedItems)

@@ -120,8 +120,8 @@ object Multimodal {
     import s.implicits._
     // Fanned (Tables.fanned scaladoc): the encode+decode codec chain is
     // pure per-row CPU behind an opaque Dataset boundary — on the
-    // single-row-group fixture it ran as ONE 1.2 s task (JobProfile
-    // r21); gate is a no-op at scale.
+    // single-row-group fixture it ran as ONE 1.2 s task (r21 per-job
+    // profile); gate is a no-op at scale.
     val blobs = graft.Tables.fanned(s, dir, "documents", "doc_id")
       .select(col("doc_id"), col("text").cast("binary").as("content"))
       .as[(Long, Array[Byte])]
@@ -434,7 +434,7 @@ object Multimodal {
     // 3.2 s → 1.4 s at sf0.1). The gate is a no-op at scale. Width 8,
     // not the generic 16: this site's downstream is a pigeonhole
     // self-join over the PINNED cache, so extra map width buys nothing
-    // past the codec pass — the r22 width sweep (dev.FanWidthSweep) put
+    // past the codec pass — the r22 width sweep (OPTIMIZATION_r22.md) put
     // it alone at w8 (0.83 s vs 0.91 at w16, 1.09 at w32).
     val blobs = graft.Tables.fanIfSmall(s, dir, "documents",
         graft.operators.Dedup.corpus(s, dir), 8, col("doc_id"))
@@ -447,7 +447,7 @@ object Multimodal {
     // Materialize the cache BEFORE the self-join consumes it (r21): the
     // join's two map stages are submitted concurrently, and both sides
     // racing an unmaterialized cache each run the full PNG encode+aHash
-    // pipeline (JobProfile: two overlapping 0.78 s jobs for one 0.78 s
+    // pipeline (r21 per-job profile: two overlapping 0.78 s jobs for one 0.78 s
     // computation). One bounded count pins it; the codec work runs once.
     graft.Tables.pin(hashes)
     val chunked = hashes.select(col("doc_id"), col("hi"), col("lo"),

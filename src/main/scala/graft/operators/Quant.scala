@@ -14,7 +14,8 @@ import graft.Tables._
   *  - The only fact-scale work is one equi-join/aggregate pass; every
   *    rank/prefix window runs either PARTITIONED (per-nation) or over a
   *    frame bounded by construction (the calendar date domain) — the
-  *    partition-less-window fence in [[graft.dev.WindowLint]] covers both.
+  *    partition-less-window fence (WindowLint, pinned by WindowLintSpec)
+  *    covers both.
   *  - Money travels as exact integer cents; products that can pass 2^63
   *    at 100 TB (rank×cents, day-count×cents) accumulate in
   *    decimal(38,0), mirrored by HUGEINT in the oracle, and drop to

@@ -388,7 +388,7 @@ object Relational {
     // Materialize before fan-out (r21): the four consumers below (top
     // pairs + two broadcast frequency builds + the order count) are
     // submitted concurrently, and racing an unmaterialized cache each
-    // re-ran the whole basket pipeline (JobProfile: four overlapping
+    // re-ran the whole basket pipeline (r21 per-job profile: four overlapping
     // ~0.5 s jobs for one computation — the imagedup cache-race fix).
     graft.Tables.pin(counts)
     val pairs = counts.filter(col("d2") >= 0)

@@ -241,7 +241,7 @@ object Scrape {
   /** The deterministic change-event log (inserts, updates, deletes,
     * plus a same-instant `event_seq` tie) replayed from any
     * orders-shaped frame — shared by the snapshot row, the compact row
-    * (r19), and the ×N ScaleProbe kernel. */
+    * (r19), and the ×N amplified scale run (PLANS.md). */
   def eventLogOfOrders(ordersDf: DataFrame): DataFrame = {
     val b = baseOf(ordersDf)
       .withColumn("mime_guess", Mime.mimeOf(col("filename")))
@@ -271,7 +271,7 @@ object Scrape {
   }
 
   /** The event-log build + compaction over any orders-shaped frame —
-    * shared by the oracled query and the ×N ScaleProbe kernel. */
+    * shared by the oracled query and the ×N amplified scale run. */
   def snapshotOfOrders(ordersDf: DataFrame): DataFrame =
     graft.streaming.ScrapeTws.snapshotOf(eventLogOfOrders(ordersDf))
 

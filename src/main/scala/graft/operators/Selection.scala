@@ -378,8 +378,8 @@ object Selection {
   def qSelectDsir(s: SparkSession, dir: String): DataFrame = {
     val toks = graft.functions.TextAnalysis.tokens(col("text"))
     // NOT fanned (A/B r21: −0.07 s): the two single-task tokenize
-    // passes JobProfile flagged are cheaper than the fan exchange +
-    // extra AQE stage round-trips at fixture scale.
+    // passes the r21 per-job profile flagged are cheaper than the fan
+    // exchange + extra AQE stage round-trips at fixture scale.
     val d = documents(s, dir)
     val bucketed = d
       .select(col("doc_id"), col("lang"), explode(toks).as("tok"))

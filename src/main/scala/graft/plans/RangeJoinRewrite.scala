@@ -359,7 +359,7 @@ object RangeJoinRewrite extends PredicateHelper {
       // fires when BOTH sides' widths are plan-time constants — then
       // the bucket width derives from the proof and the rewrite is
       // guaranteed fallback-free, so auto mode can never make an
-      // unproven query worse. Width choice is MEASURED (dev/WidthProbe,
+      // unproven query worse. Width choice is MEASURED (PLANS.md,
       // sf0.1 best-of-3): with a point side, a finer bucket costs only
       // ~W/width interval copies while shrinking each point's candidate
       // window ∝ width — optimum ≈ W/4 (1.18 s vs 1.67 s at W); with

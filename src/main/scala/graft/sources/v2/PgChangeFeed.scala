@@ -818,7 +818,7 @@ private[v2] class PgCdcReaderFactory extends PartitionReaderFactory {
           // raw bytes — the hex transport doubled the WAL volume on
           // this single ordered connection and paid a decode pass per
           // message (measured +8% drain rate on localhost; the bigger
-          // r17 win was the positional decoder, +30% — CdcDecodeProbe
+          // r17 win was the positional decoder, +30% — PLANS.md
           // holds the layer-by-layer numbers). Binary is also
           // independent of the server's bytea_output setting, which is
           // what the hex encode existed to guarantee.

@@ -467,12 +467,7 @@ object StreamBench {
     * scale probe (VERDICT r12 #7: the scrape_tws shape at a 1M-file
     * universe, state rows == universe, throughput curve → PLANS.md). */
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Sessions.local("stream-bench", graft.Sessions.width)
     spark.sparkContext.setLogLevel("ERROR")
     def show(name: String, st: OpStats): Unit =
       println(f"$name%-12s ${st.rowsPerSec.toLong}%8d rows/s  " +

@@ -15,6 +15,8 @@ class PlanGoldenSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
   test("no query's static plan gained a shuffle/broadcast/sort vs golden") {
+    assert(spark.sparkContext.defaultParallelism == graft.dev.PlanGolden.width,
+      "the golden file is taken at the test session's width")
     val path = java.nio.file.Paths.get(graft.dev.PlanGolden.goldenPath)
     assert(java.nio.file.Files.exists(path),
       s"golden file missing — run: sbt \"runMain graft.dev.PlanGolden\"")

@@ -88,6 +88,15 @@ class ScaleSpec extends AnyFunSuite {
     assert(read.count() == expected)
   }
 
+  test("size gates stay shut when a table path cannot be measured") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_gate")
+      .resolve("absent").toString
+    assert(!Tables.belowOneSplit(spark, dir, "customer"))
+    val df = spark.range(1000).toDF("id")
+    assert(Tables.fanIfSmall(spark, dir, "customer", df, col("id")) eq df,
+      "an unmeasurable table must not fan out")
+  }
+
   test("salted join equals plain join") {
     val li = graft.Tables.lineitem(spark, TestSpark.sf0001)
       .select("l_orderkey", "l_quantity")
