@@ -98,11 +98,28 @@ object ProductBench {
     case c => c.toString
   }
 
+  /** First index of `keys` whose key is >= `k`, or > `k` when
+    * `strict` — the array is sorted by key. */
+  private def lowerBound(keys: Array[S3Object], k: String,
+      strict: Boolean): Int = {
+    var lo = 0
+    var hi = keys.length
+    while (lo < hi) {
+      val mid = (lo + hi) >>> 1
+      val c = keys(mid).key.compareTo(k)
+      if (c < 0 || (strict && c == 0)) lo = mid + 1 else hi = mid
+    }
+    lo
+  }
+
   /** Lean ListObjectsV2 semantics over a sorted key array: prefix,
     * delimiter grouping, max-keys, continuation-token == last covered
-    * key, start-after as an initial token. No signature check: the
-    * bench times listing and publishing, not signing (S3WireSpec's
-    * endpoint verifies signatures). */
+    * key, start-after as an initial token. A page starts at a binary
+    * search and walks only the keys it returns (a common prefix jumps
+    * over its whole group), so a request costs O(page · log n), not a
+    * scan of the namespace. No signature check: the bench times listing
+    * and publishing, not signing (S3WireSpec's endpoint verifies
+    * signatures). */
   private def handle(served: Array[S3Object])(ex: HttpExchange): Unit = {
     val params = Option(ex.getRequestURI.getRawQuery).getOrElse("")
       .split("&").filter(_.nonEmpty).map { kv =>
@@ -111,53 +128,46 @@ object ProductBench {
           java.net.URLDecoder.decode(v, "UTF-8")
       }.toMap
     val prefix = params.getOrElse("prefix", "")
-    val delim = params.get("delimiter")
+    val delim = params.get("delimiter").filter(_.nonEmpty)
     val maxKeys = params.get("max-keys").map(_.toInt).getOrElse(1000)
     val after = params.get("continuation-token")
       .orElse(params.get("start-after"))
-    val inPrefix = served.filter(_.key.startsWith(prefix))
-    val entries: Seq[Either[S3Object, (String, String)]] = delim match {
-      case None => inPrefix.toSeq.map(Left(_))
-      case Some(d) =>
-        val out = Seq.newBuilder[Either[S3Object, (String, String)]]
-        var i = 0
-        while (i < inPrefix.length) {
-          val o = inPrefix(i)
-          val rest = o.key.drop(prefix.length)
-          if (rest.contains(d)) {
-            val g = prefix + rest.takeWhile(_ != d.head) + d
-            var j = i
-            while (j < inPrefix.length && inPrefix(j).key.startsWith(g)) j += 1
-            out += Right((g, inPrefix(j - 1).key))
-            i = j
-          } else { out += Left(o); i += 1 }
-        }
-        out.result()
+    var i = after match {
+      case Some(t) if t >= prefix => lowerBound(served, t, strict = true)
+      case _ => lowerBound(served, prefix, strict = false)
     }
-    val remaining = entries.filter {
-      case Left(o) => after.forall(o.key > _)
-      case Right((_, lastKey)) => after.forall(lastKey > _)
+    val contents = new StringBuilder
+    val prefixes = new StringBuilder
+    var n = 0
+    var lastCovered = ""
+    while (i < served.length && n < maxKeys &&
+        served(i).key.startsWith(prefix)) {
+      val o = served(i)
+      val cut = delim.fold(-1)(d => o.key.indexOf(d, prefix.length))
+      if (cut >= 0) {
+        val group = o.key.substring(0, cut + delim.get.length)
+        val end = lowerBound(served, group + Char.MaxValue, strict = false)
+        prefixes ++= s"<CommonPrefixes><Prefix>${xesc(group)}</Prefix>" +
+          "</CommonPrefixes>"
+        lastCovered = served(end - 1).key
+        i = end
+      } else {
+        contents ++= s"<Contents><Key>${xesc(o.key)}</Key><LastModified>" +
+          java.time.Instant.ofEpochMilli(o.modifiedMs).toString +
+          s"</LastModified><Size>${o.size}</Size></Contents>"
+        lastCovered = o.key
+        i += 1
+      }
+      n += 1
     }
-    val page = remaining.take(maxKeys)
-    val truncated = remaining.size > maxKeys
-    val lastCovered = page.lastOption.map {
-      case Left(o) => o.key
-      case Right((_, lk)) => lk
-    }
+    val truncated = i < served.length && served(i).key.startsWith(prefix)
     val next =
-      if (truncated) s"<NextContinuationToken>${xesc(lastCovered.get)}" +
+      if (truncated) s"<NextContinuationToken>${xesc(lastCovered)}" +
         "</NextContinuationToken><IsTruncated>true</IsTruncated>"
       else "<IsTruncated>false</IsTruncated>"
     val xml = (s"""<?xml version="1.0" encoding="UTF-8"?>""" +
-      "<ListBucketResult><Name>b</Name>" + next +
-      page.collect { case Left(o) =>
-        s"<Contents><Key>${xesc(o.key)}</Key><LastModified>" +
-          java.time.Instant.ofEpochMilli(o.modifiedMs).toString +
-          s"</LastModified><Size>${o.size}</Size></Contents>"
-      }.mkString +
-      page.collect { case Right((g, _)) =>
-        s"<CommonPrefixes><Prefix>${xesc(g)}</Prefix></CommonPrefixes>"
-      }.mkString + "</ListBucketResult>").getBytes(UTF_8)
+      "<ListBucketResult><Name>b</Name>" + next + contents + prefixes +
+      "</ListBucketResult>").getBytes(UTF_8)
     ex.getResponseHeaders.set("Content-Type", "application/xml")
     ex.sendResponseHeaders(200, xml.length)
     ex.getResponseBody.write(xml)

@@ -520,13 +520,39 @@ object S3Wire extends Serializable {
     * exactly the r13 plan: driver requests ≤ `shardBudget` ×
     * (2 + `maxPlanPages`), pre-listed driver memory ≤ `shardBudget` ×
     * `maxKeys` objects (defaults: ≤ 64k keys ≈ a few MB). `maxDepth =
-    * 0` reproduces the r13 single-level behavior exactly. */
+    * 0` reproduces the r13 single-level behavior exactly.
+    *
+    * Concurrency: when a level is re-delimited, the probe pages of its
+    * children are fetched CONCURRENTLY, one thread per probe
+    * ([[probeAll]]), and the per-child decisions (pre-list, range-split,
+    * recurse) are then applied in child order on the calling thread. A
+    * probe is charged to `shardBudget` when it is sent, so the first
+    * min(children, remaining budget) children are probed and the rest
+    * become plain cursors; the probe threads alive at once (nested
+    * levels included) therefore never exceed `shardBudget`. The
+    * pre-list cap is checked as each probe result is consumed, so the
+    * request and pre-listed-memory bounds above hold unchanged; the
+    * probe pages a level holds until it returns add at most one page
+    * per charged probe (≤ `shardBudget` × `maxKeys` objects in all,
+    * shared with `preListed` where pre-listed). While the budget lasts
+    * the plan is IDENTICAL to the sequential planner's (same leaves,
+    * `preListed` in the same order, same requests). When it runs out,
+    * it is spent level by level within each re-delimited prefix — all
+    * its children are charged before any of them recurses — where the
+    * sequential planner spent it depth-first. A probe that still fails
+    * after [[withRetry]] fails the plan with its own exception; the
+    * other probes are cancelled and every probe thread has exited
+    * before the call returns. */
   def planShards(conf: S3Conf, bucketName: String, prefix: String,
       maxKeys: Int = 1000, maxDepth: Int = 2, shardBudget: Int = 64,
       maxPlanPages: Int = 32, flatFanout: Int = 15,
       rootPlanPages: Int = 128): ShardPlan = {
     val objs = Seq.newBuilder[S3Object]
     var objCount = 0L
+    // the pre-list cap bounds DRIVER MEMORY the same way the budget
+    // bounds requests: past `shardBudget × maxKeys` held objects,
+    // further children ride executor cursors instead
+    val preListCap = shardBudget.toLong * maxKeys
     def preList(os: Seq[S3Object]): Unit = { objs ++= os; objCount += os.size }
     val leaves = Seq.newBuilder[LeafShard]
     var budget = shardBudget
@@ -596,20 +622,25 @@ object S3Wire extends Serializable {
           .foreach(w => leaves += LeafShard(c, Some(w(0)), Some(w(1))))
         leaves += LeafShard(c, bs.lastOption, None)
       }
-    def child(c: String, depth: Int, planPages: Int): Unit = {
-      // probes are NOT free: charge the budget for every child touched,
-      // or a namespace of 50k SMALL prefixes would serialize 50k driver
-      // probe requests and pull 50k pages into preListed (review r14) —
-      // past the budget, children fall back to plain cursors (r13 shape)
-      // the pre-list cap bounds DRIVER MEMORY the same way the budget
-      // bounds requests: past `shardBudget × maxKeys` held objects,
-      // further children ride executor cursors instead
-      if (depth <= 0 || budget <= 0 ||
-        objCount > shardBudget.toLong * maxKeys) {
-        leaves += LeafShard(c); return
+    // One level of children at `depth`: probes are NOT free — charge the
+    // budget for every child probed, or a namespace of 50k SMALL
+    // prefixes would send 50k driver probe requests and pull 50k pages
+    // into preListed; past the budget, children fall back
+    // to plain cursors (r13 shape). Charged probes run concurrently;
+    // decisions follow in child order.
+    def level(children: Seq[String], depth: Int, planPages: Int): Unit = {
+      val charged =
+        if (depth <= 0 || objCount > preListCap) 0
+        else math.max(0, math.min(children.size, budget))
+      budget -= charged
+      probeAll(conf, bucketName, children.take(charged), maxKeys) { probe =>
+        children.iterator.zipWithIndex.foreach { case (c, i) =>
+          if (i >= charged || objCount > preListCap) leaves += LeafShard(c)
+          else child(c, depth, planPages, probe(i))
+        }
       }
-      budget -= 1
-      val probe = listPage(conf, bucketName, c, None, None, maxKeys)
+    }
+    def child(c: String, depth: Int, planPages: Int, probe: ListPage): Unit = {
       if (probe.nextToken.isEmpty) { preList(probe.objects); return }
       // hot subtree — ONE delimiter page decides flat vs hierarchical
       // BEFORE any drain, so a flat 10⁸-key level is never pulled onto
@@ -627,10 +658,10 @@ object S3Wire extends Serializable {
       // larger page budget included (ADVICE r18); an over-cap level
       // degrades to range shards that still cover every key
       else drainBounded(conf, bucketName, c, maxKeys, planPages, d1,
-        maxObjs = shardBudget.toLong * maxKeys - objCount) match {
+        maxObjs = preListCap - objCount) match {
         case Some((direct, children)) =>
           preList(direct)
-          children.foreach(child(_, depth - 1, maxPlanPages))
+          level(children, depth - 1, maxPlanPages)
         case None => // oversized direct level: ranges cover all
           flatSplit(c, probe.objects.map(_.key))
       }
@@ -648,8 +679,47 @@ object S3Wire extends Serializable {
     // past `rootPlanPages` it too degrades to range shards that still
     // cover every key). Depth +1 so children keep their r13/r14
     // depths; `maxDepth = 0` still yields the single-level plan.
-    child(prefix, maxDepth + 1, rootPlanPages)
+    level(Seq(prefix), maxDepth + 1, rootPlanPages)
     ShardPlan(objs.result(), leaves.result())
+  }
+
+  /** Fetch the probe page (first no-delimiter page) of every prefix in
+    * `prefixes` concurrently, one daemon thread per prefix, and run
+    * `consume` with a getter that waits for the i-th page. A probe that
+    * failed rethrows its OWN exception from the getter (not the
+    * `ExecutionException` wrapper). On the way out, normal or not, every
+    * probe still running is cancelled (interrupted: a retry backoff
+    * stops at once, a request in flight at its end or timeout) and
+    * every probe thread is joined, so none outlives the call. */
+  private def probeAll[A](conf: S3Conf, bucketName: String,
+      prefixes: Seq[String], maxKeys: Int)(
+      consume: (Int => ListPage) => A): A = {
+    val tasks = prefixes.map(c =>
+      new java.util.concurrent.FutureTask[ListPage](() =>
+        listPage(conf, bucketName, c, None, None, maxKeys)))
+    val threads = tasks.map { t =>
+      val th = new Thread(t, "graft-s3-plan")
+      th.setDaemon(true)
+      th
+    }
+    try {
+      threads.foreach(_.start())
+      consume { i =>
+        try tasks(i).get()
+        catch {
+          case e: java.util.concurrent.ExecutionException => throw e.getCause
+        }
+      }
+    } finally {
+      tasks.foreach(_.cancel(true))
+      var interrupted = false
+      threads.foreach { th =>
+        while (th.isAlive)
+          try th.join()
+          catch { case _: InterruptedException => interrupted = true }
+      }
+      if (interrupted) Thread.currentThread().interrupt()
+    }
   }
 
   /** Chunk pre-listed objects into bounded row groups so a large

@@ -3,6 +3,7 @@ package graft.sources.v2
 import java.util
 
 import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
@@ -190,10 +191,11 @@ private[v2] class PgWireTable(options: CaseInsensitiveStringMap)
     * transaction (a retried/speculative task attempt ROLLS BACK, so
     * only committed attempts stage rows); the driver's
     * `BatchWrite.commit` then runs the single merge transaction —
-    * dedup → upsert (J3, named-constraint ON CONFLICT verbatim) →
-    * tombstone of this source's vanished keys (J2, `$1`-bound) → DROP →
-    * COMMIT — and `abort` drops the scratch. The K1 connection budget
-    * (`db.rs:28` pools 2) is enforced at the PLAN level:
+    * upsert of the changed rows (J3, named-constraint ON CONFLICT
+    * verbatim) → tombstone of this source's vanished keys (J2,
+    * `$1`-bound) → DROP → COMMIT — and `abort` drops the scratch. The
+    * K1 connection budget (`db.rs:28` pools 2) is enforced at the PLAN
+    * level:
     * `RequiresDistributionAndOrdering.requiredNumPartitions` repartitions
     * the input to `maxConnections` (option, default 2). */
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
@@ -822,38 +824,39 @@ private[v2] class PgWireBatchWrite(conn: PgConnInfo, source: String,
     new PgWireWriterFactory(conn, scratch, fieldIdx)
   }
 
-  /** The single merge transaction (K2): dedup → upsert (J3) → tombstone
-    * (J2, `$1`-bound) → DROP → COMMIT, with ROLLBACK + scratch cleanup
-    * on failure — [[PgMerge.publishScanWire]]'s epilogue verbatim. */
+  /** The single merge transaction (K2): upsert of the changed rows (J3)
+    * → tombstone (J2, `$1`-bound) → DROP → COMMIT, with ROLLBACK +
+    * scratch cleanup on failure — [[PgMerge.publishScanWire]]'s epilogue
+    * verbatim. A failing cleanup is attached to the original error as
+    * suppressed, never thrown in its place. */
   override def commit(messages: Array[WriterCommitMessage]): Unit =
     try withClient { c =>
       try {
         c.exec("BEGIN")
-        c.exec(PgMerge.dedupSql(scratch))
-        c.exec(PgMerge.upsertSql(PgMerge.dedupedName(scratch)))
-        c.execBound(
-          PgMerge.markDeletedSqlWire(PgMerge.dedupedName(scratch)),
-          Seq(Some(source)))
-        c.exec(s"DROP TABLE ${PgMerge.dedupedName(scratch)}")
+        c.exec(PgMerge.upsertSql(scratch))
+        c.execBound(PgMerge.markDeletedSqlWire(scratch), Seq(Some(source)))
         c.exec(s"DROP TABLE $scratch")
         c.exec("COMMIT")
       } catch {
         case e: Throwable =>
-          try c.exec("ROLLBACK") catch { case _: Throwable => () }
+          try c.exec("ROLLBACK")
+          catch { case NonFatal(r) => e.addSuppressed(r) }
           throw e
       }
     } catch {
-      case e: Throwable => dropScratch(); throw e
+      case e: Throwable =>
+        dropScratch().foreach(e.addSuppressed)
+        throw e
     }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =
     dropScratch()
 
-  private def dropScratch(): Unit =
-    try withClient { c =>
-      c.exec(s"DROP TABLE IF EXISTS ${PgMerge.dedupedName(scratch)}")
-      c.exec(s"DROP TABLE IF EXISTS $scratch")
-    } catch { case _: Throwable => () }
+  /** Best-effort drop of the scratch table: a non-fatal failure is
+    * returned, a fatal one propagates. */
+  private def dropScratch(): Option[Throwable] =
+    try { withClient(_.exec(s"DROP TABLE IF EXISTS $scratch")); None }
+    catch { case NonFatal(e) => Some(e) }
 }
 
 private[v2] class PgWireWriterFactory(conn: PgConnInfo, scratch: String,
@@ -864,8 +867,8 @@ private[v2] class PgWireWriterFactory(conn: PgConnInfo, scratch: String,
     new DataWriter[InternalRow] {
       // each writer stages inside its OWN transaction: a failed or
       // speculative duplicate attempt ROLLS BACK its rows, so the
-      // scratch only ever holds committed attempts (the staged dedup
-      // still guards honest double-listings within a scan)
+      // scratch only ever holds committed attempts (the upsert's
+      // DISTINCT still guards honest double-listings within a scan)
       private val client = PgWireClient.connect(conn.host, conn.port,
         conn.user, conn.database, conn.password, conn.sslMode,
         conn.sslRootCert)
@@ -911,7 +914,7 @@ private[v2] class PgWireWriterFactory(conn: PgConnInfo, scratch: String,
         // closed — CopyFail then would be a protocol violation on a
         // connection we still want the ROLLBACK to reach
         if (!copyDone) { copy.fail("task aborted"); copyDone = true }
-        try client.exec("ROLLBACK") catch { case _: Throwable => () }
+        try client.exec("ROLLBACK") catch { case NonFatal(_) => () }
       }
 
       override def close(): Unit = client.close()

@@ -33,6 +33,10 @@ class PgMergeSpec extends AnyFunSuite {
     assert(sql.contains("IS DISTINCT FROM"))   // null-safe change detection
     assert(sql.contains("deleted = NULL"))      // reappearing files resurrected
     assert(sql.contains("FROM scratch_t"))
+    // only changed rows reach the insert, deduplicated in place
+    assert(sql.contains("FROM (SELECT DISTINCT * FROM scratch_t) s"))
+    assert(sql.contains("WHERE NOT EXISTS"))
+    assert(sql.contains("f.deleted IS NULL"))
   }
 
   test("mark-deleted SQL: set-based anti-join on the natural key") {
@@ -164,6 +168,109 @@ class PgMergeSpec extends AnyFunSuite {
       rs.next()
       assert(rs.getInt(1) == 0, "scratch table leaked past commit")
     } finally c.close()
+  }
+
+  /** Every column of every row, as text, keyed by source/filename. */
+  private def fullState(url: String): Map[String, Seq[String]] = {
+    val c = DriverManager.getConnection(url)
+    try {
+      val rs = c.createStatement().executeQuery(
+        s"SELECT * FROM ${PgMerge.table}")
+      val n = rs.getMetaData.getColumnCount
+      val b = Map.newBuilder[String, Seq[String]]
+      while (rs.next()) b += (rs.getString("external_source") + "/" +
+        rs.getString("filename")) -> (1 to n).map(rs.getString)
+      b.result()
+    } finally c.close()
+  }
+
+  private def publishA(url: String, scan: org.apache.spark.sql.DataFrame) =
+    PgMerge.publishScan(scan, url, "", "", externalSource = "A",
+      maxConnections = 2, driverClass = duckDriver, conflictTarget = keyTarget)
+
+  private def withRows(rows: Row*) = spark.createDataFrame(
+    java.util.Arrays.asList(rows: _*), scanSchema)
+
+  /** Run `f` with the database at one thread. DuckDB, unlike PostgreSQL
+    * (21000 over the whole command), detects a key written twice by one
+    * INSERT only within one vector of rows, and its parallel DISTINCT
+    * may emit a same-key pair in two; one thread keeps a tiny scan in
+    * one vector. The setting lives on the database instance, which every
+    * connection to the file shares while `holder` is open. */
+  private def oneThread[A](url: String)(f: => A): A = {
+    val holder = DriverManager.getConnection(url)
+    try { holder.createStatement().execute("SET GLOBAL threads = 1"); f }
+    finally holder.close()
+  }
+
+  test("live publish: an identical duplicate staged row publishes once") {
+    val url = freshDb()
+    seed(url)
+    // a retried task's copy: the same rows staged twice, in two
+    // partitions; without the DISTINCT the insert would fail
+    oneThread(url)(publishA(url, scanDf().union(withRows(
+      Row("A", "/d", "new.txt", "text/markdown", T2, T2, 30L),
+      Row("A", "/d", "changed.txt", "text/plain", T1, T2, 20L)))))
+    val st = state(url)
+    assert(st.size == 7, s"expected 7 rows, got $st")
+    assert(st("A/new.txt") == (("text/markdown", 30L, true)))
+    assert(st("A/changed.txt") == (("text/plain", 20L, true)))
+  }
+
+  test("live publish: a contradictory same-key pair fails, table unchanged") {
+    val url = freshDb()
+    seed(url)
+    val before = fullState(url)
+    // two different rows for one new key: no DISTINCT can pick one, so
+    // the publish fails as the reference's single INSERT would
+    intercept[java.sql.SQLException] {
+      oneThread(url)(publishA(url, scanDf().union(withRows(
+        Row("A", "/d", "new.txt", "text/markdown", T2, T2, 31L)))))
+    }
+    assert(fullState(url) == before,
+      "a failed publish must leave every row as it was")
+  }
+
+  test("live publish: a same-key pair, one row as live, applies the other") {
+    val url = freshDb()
+    seed(url)
+    // same.txt staged both as it is live and as a changed copy: only the
+    // changed row passes the filter, so it applies (merging every staged
+    // row failed with 21000 or applied it, by the DISTINCT's row order)
+    publishA(url, scanDf().union(withRows(
+      Row("A", "/d", "same.txt", "text/plain", T1, T2, 40L))))
+    val st = state(url)
+    assert(st.size == 7, s"expected 7 rows, got $st")
+    assert(st("A/same.txt") == (("text/plain", 40L, true)))
+    assert(st("A/changed.txt") == (("text/plain", 20L, true)))
+    assert(st("A/new.txt") == (("text/markdown", 30L, true)))
+  }
+
+  test("live publish: a rescan leaves unchanged rows exactly as they were") {
+    val url = freshDb()
+    seed(url)
+    publishA(url, scanDf())
+    val first = fullState(url)
+    // hand-correct a live row's mime after ingest, then rescan the same
+    // tree: nothing changed on disk, so no row may be rewritten
+    val c = DriverManager.getConnection(url)
+    try c.createStatement().execute(s"UPDATE ${PgMerge.table} SET " +
+      "mime_type = 'text/hand2' WHERE filename = 'new.txt'")
+    finally c.close()
+    publishA(url, scanDf())
+    val second = fullState(url)
+    assert(second.keySet == first.keySet)
+    // every live row is byte-identical — the hand-set mimes and the
+    // NULL created of nullc.txt included
+    val live = first.collect { case (k, v) if v(7) == null => k }
+    assert(live.size == 6, s"six live rows: $live")
+    live.filterNot(_ == "A/new.txt").foreach(k =>
+      assert(second(k) == first(k), s"$k rewritten by an identical rescan"))
+    assert(second("A/new.txt") == first("A/new.txt").updated(3, "text/hand2"))
+    assert(second("A/nullc.txt")(4) == null, "NULL created stays NULL")
+    // the tombstone state holds: gone.txt stays deleted, B untouched
+    assert(second("A/gone.txt")(7) != null)
+    assert(second("B/gone.txt") == first("B/gone.txt"))
   }
 
   test("live publish is atomic: a failing epilogue rolls back, table unchanged") {

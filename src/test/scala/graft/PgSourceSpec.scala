@@ -320,8 +320,9 @@ class PgSourceSpec extends AnyFunSuite {
       scan.write.format("graft-pg").option("url", url)
         .mode("append").save())
     assert(noSrc.getMessage.contains("'source'"), noSrc.getMessage)
-    // FAILED publish: a same-key CONTRADICTORY pair survives the staged
-    // dedup (rows differ) and fails the upsert with PostgreSQL 21000 —
+    // FAILED publish: a same-key CONTRADICTORY pair on a NEW key (no
+    // dup.txt row exists, so both rows pass the upsert's changed-rows
+    // filter) survives its DISTINCT and fails it with PostgreSQL 21000 —
     // the merge transaction rolls back, the scratch is dropped, and the
     // published state is untouched (K2 atomicity through the V2 sink)
     val before = spark.read.format("graft-pg").option("url", url).load()

@@ -465,7 +465,7 @@ class PgWireSpec extends AnyFunSuite {
     val df = Seq(
       ("W", "/p\tq", "a'b\\c", "text/plain", odd, odd, 1L),
       // an exact duplicate listing: the reference set-dedups these
-      // (db.rs:120-123); without the staged dedup the upsert dies with
+      // (db.rs:120-123); without the upsert's DISTINCT it dies with
       // PostgreSQL 21000 — same shape as a Spark task-retry re-COPY
       ("W", "/p\tq", "a'b\\c", "text/plain", odd, odd, 1L),
       ("W", "/line\nbreak", "", "text/plain", odd, odd,

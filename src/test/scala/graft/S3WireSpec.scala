@@ -121,6 +121,9 @@ class S3WireSpec extends AnyFunSuite {
     })
     server.start()
     served = fixture
+    failNext.set(0)
+    failWhere = _ => true
+    forbidProbe = None
     try f(S3Conf(s"http://127.0.0.1:$port", "us-east-1", accessKey,
       secretKey, pathStyle = true))
     finally server.stop(0)
@@ -137,6 +140,10 @@ class S3WireSpec extends AnyFunSuite {
   /** Failure injection: the next N requests answer 503 SlowDown (the
     * documented S3 throttle) before normal service resumes. */
   private val failNext = new java.util.concurrent.atomic.AtomicInteger(0)
+  /** The list prefixes `failNext` applies to (all by default). */
+  @volatile private var failWhere: String => Boolean = _ => true
+  /** A prefix whose no-delimiter listing (a planner probe) answers 403. */
+  @volatile private var forbidProbe: Option[String] = None
   private val requestCount = new java.util.concurrent.atomic.AtomicInteger(0)
   /** Every `prefix=` the server was asked to list — the observable the
     * prefix-pushdown test pins (the pruning must happen SERVER-side). */
@@ -145,18 +152,26 @@ class S3WireSpec extends AnyFunSuite {
 
   private def handle(ex: HttpExchange, port: Int): Unit = {
     requestCount.incrementAndGet()
-    if (failNext.getAndUpdate(n => math.max(0, n - 1)) > 0) {
-      val body = "<Error><Code>SlowDown</Code></Error>".getBytes(UTF_8)
-      ex.sendResponseHeaders(503, body.length)
-      ex.getResponseBody.write(body)
-      return
-    }
     val rawQuery = Option(ex.getRequestURI.getRawQuery).getOrElse("")
     val params = rawQuery.split("&").filter(_.nonEmpty).map { kv =>
       val Array(k, v) = kv.split("=", 2).padTo(2, "")
       java.net.URLDecoder.decode(k, "UTF-8") ->
         java.net.URLDecoder.decode(v, "UTF-8")
     }.toMap
+    if (failWhere(params.getOrElse("prefix", "")) &&
+        failNext.getAndUpdate(n => math.max(0, n - 1)) > 0) {
+      val body = "<Error><Code>SlowDown</Code></Error>".getBytes(UTF_8)
+      ex.sendResponseHeaders(503, body.length)
+      ex.getResponseBody.write(body)
+      return
+    }
+    if (forbidProbe.exists(params.get("prefix").contains) &&
+        !params.contains("delimiter")) {
+      val body = "<Error><Code>AccessDenied</Code></Error>".getBytes(UTF_8)
+      ex.sendResponseHeaders(403, body.length)
+      ex.getResponseBody.write(body)
+      return
+    }
     // verify the signature server-side from the RECEIVED request parts
     val amzDate = ex.getRequestHeaders.getFirst("x-amz-date")
     val payloadSha = ex.getRequestHeaders.getFirst("x-amz-content-sha256")
@@ -574,6 +589,105 @@ class S3WireSpec extends AnyFunSuite {
       assert(got.size == n &&
         got == served.map(o => S3Wire.splitKey(o.key)).toSet,
         "range shards lose and duplicate nothing on a flat bucket")
+    }
+  }
+
+  // --- concurrent child probes -------------------------------------------
+
+  /** Ten one-page children under the hierarchical `logs/` prefix, plus a
+    * root object: at maxKeys = 20 the root and `logs/` truncate and
+    * re-delimit, and every `logs/dNN/` probe completes in one page. */
+  private val tenChildren: Seq[S3Object] = (Seq(
+    S3Object("root.txt", 1700000000000L, 5L)) ++
+    (for (d <- 0 until 10; k <- 0 until 3) yield
+      S3Object(f"logs/d$d%02d/f$k.json", 1700000001000L + d * 10 + k, 10L + k)))
+    .sortBy(_.key)
+
+  private def planThreads(): Int = {
+    import scala.jdk.CollectionConverters._
+    Thread.getAllStackTraces.keySet.asScala.count(_.getName == "graft-s3-plan")
+  }
+
+  test("concurrent child probes: ten one-page children plan exactly as " +
+      "the sequential planner, with its request count") {
+    withServer { conf =>
+      served = tenChildren
+      requestCount.set(0)
+      val plan = S3Wire.planShards(conf, bucket, "", maxKeys = 20)
+      // the root's direct object is pre-listed before its children are
+      // expanded; the children then follow in child order
+      assert(plan.leaves.isEmpty, s"every subtree fits a probe: $plan")
+      assert(plan.preListed.map(_.key) ==
+        "root.txt" +: tenChildren.map(_.key).filter(_.startsWith("logs/")))
+      assert(plan.preListed.toSet == tenChildren.toSet, "metadata kept")
+      // sequential count: root probe + root delimiter page, logs/ probe
+      // + logs/ delimiter page, one probe per child
+      assert(requestCount.get() == 2 + 2 + 10, s"${requestCount.get()}")
+      assert(planThreads() == 0, "a probe thread outlived the plan")
+    }
+  }
+
+  test("concurrent child probes: 503s on the probes retry and the plan " +
+      "is unchanged") {
+    withServer { conf =>
+      served = tenChildren
+      val expected = S3Wire.planShards(conf, bucket, "", maxKeys = 20)
+      failWhere = _.startsWith("logs/d")
+      failNext.set(3)
+      requestCount.set(0)
+      val plan = S3Wire.planShards(conf, bucket, "", maxKeys = 20)
+      assert(failNext.get() == 0, "the 503s hit the child probes")
+      assert(plan == expected)
+      assert(requestCount.get() == 14 + 3, "three throttled probes retried")
+      assert(planThreads() == 0)
+    }
+  }
+
+  test("concurrent child probes: a 403 on one probe fails the plan with " +
+      "that probe's own exception, cancels the rest and leaves no thread") {
+    withServer { conf =>
+      served = tenChildren
+      forbidProbe = Some("logs/d05/")
+      // a sibling stuck in retry backoff (~3 s of 503s) is cancelled, not
+      // waited for
+      failWhere = _ == "logs/d09/"
+      failNext.set(4)
+      val t0 = System.nanoTime()
+      val e = intercept[S3Wire.S3HttpException] {
+        S3Wire.planShards(conf, bucket, "", maxKeys = 20)
+      }
+      val waitedS = (System.nanoTime() - t0) / 1e9
+      assert(e.code == 403, e.getMessage)
+      assert(e.getMessage.contains("logs/d05/"), e.getMessage)
+      assert(planThreads() == 0, "a probe thread outlived the failed plan")
+      assert(waitedS < 2.0, f"the backing-off probe was waited for: $waitedS%.2fs")
+    }
+  }
+
+  test("concurrent child probes: a small shardBudget is spent level by " +
+      "level and keeps the request bound") {
+    withServer { conf =>
+      // three hot children, each with two hot grandchildren (3 keys each
+      // against maxKeys = 2): everything truncates and re-delimits
+      served = (for (p <- Seq("a", "b", "c"); q <- Seq("x", "y");
+          k <- 0 until 3)
+        yield S3Object(s"$p/$q/k$k", 1700000001000L + k, 1L)).sortBy(_.key)
+      requestCount.set(0)
+      val budget = 3
+      val plan = S3Wire.planShards(conf, bucket, "", maxKeys = 2,
+        shardBudget = budget)
+      // the root takes 1, then a/ and b/ are charged TOGETHER before
+      // either recurses; c/ and every grandchild become plain cursors
+      // (depth-first charging would have probed and range-split a/x/)
+      assert(plan.leaves == Seq("a/x/", "a/y/", "b/x/", "b/y/", "c/")
+        .map(S3Wire.LeafShard(_)), s"$plan")
+      assert(plan.preListed.isEmpty)
+      // root probe + 2 root delimiter pages, 2 probes, 2 delimiter pages
+      assert(requestCount.get() == 7, s"${requestCount.get()}")
+      assert(requestCount.get() <= budget * (2 + 32), "request bound")
+      assert(plan.leaves.map(s =>
+        S3Wire.listShard(conf, bucket, s, maxKeys = 2).size).sum == 18,
+        "the cursors cover every key")
     }
   }
 
