@@ -1,7 +1,14 @@
 package graft
 
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
+  ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 import org.apache.spark.sql.Column
 
 import scala.util.control.NonFatal
@@ -10,13 +17,168 @@ import scala.util.control.NonFatal
   * (`/root/testdata/sf*`; see TESTDATA.md / FIXTURES.md).
   *
   * All queries in this engine read through here so that the scan side
-  * stays uniform: plain `spark.read.parquet`, letting Catalyst push
+  * stays uniform: [[parquet]] is `spark.read.parquet` with the schema
+  * read from one footer on the driver, letting Catalyst push
   * filters/column pruning into the parquet scan. At cluster scale the
   * same call reads `s3a://` URIs unchanged.
   */
 object Tables {
   def t(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    parquet(spark, s"$dir/$name.parquet")
+
+  /** `spark.read.parquet(path)` without the Spark job that Spark 4.1
+    * submits to learn the schema. Spark's inference reads one footer
+    * (`ParquetUtils.inferSchema` → `ParquetFileFormat.
+    * mergeSchemasInParallel`), but as a job: 62–122 ms per read against
+    * 8–17 ms for a read whose schema is supplied (4-core box, warm
+    * local[4] session, 5 fixture tables × 4 rounds). Here the same
+    * footer is read on the driver and handed to `spark.read.schema`.
+    *
+    * Exactness: [[footerSchema]] is what Spark's non-merging inference
+    * returns — the same file (see [[schemaFile]]), the same converter
+    * flags from the session conf, `ParquetFileFormat.readSchemaFromFooter`
+    * (which prefers the Spark row schema stored in Spark-written
+    * footers), then made nullable as Spark's file relation makes every
+    * data schema. Partition columns of a `k=v` tree are not in the
+    * footer; Spark's file index still discovers and types them, as it
+    * does for a plain read.
+    *
+    * Falls back to plain `spark.read.parquet`, and so to Spark's own
+    * result or error (`PATH_NOT_FOUND`, `UNABLE_TO_INFER_SCHEMA`, a
+    * footer it cannot read), when [[footerSchema]] has no answer: the
+    * path is missing, a glob, a streaming sink's output or holds no data
+    * file, or `spark.sql.parquet.mergeSchema` is on (Spark then merges
+    * every footer). */
+  def parquet(spark: SparkSession, path: String): DataFrame =
+    footerSchema(spark, path) match {
+      case Some(schema) => spark.read.schema(schema).parquet(path)
+      case None => spark.read.parquet(path)
+    }
+
+  /** The data schema Spark's non-merging parquet inference gives `path`,
+    * read on the driver with no Spark job; None where [[parquet]] falls
+    * back. The converter flags are the ones `mergeSchemasInParallel`
+    * takes from the session conf (Spark 4.1 bytecode): binary as string,
+    * INT96 as timestamp, NTZ inference, nanos as long and unknown type
+    * annotations; the other three keep their defaults there too. */
+  private[graft] def footerSchema(spark: SparkSession,
+      path: String): Option[StructType] = {
+    val conf = spark.sessionState.conf
+    if (conf.isParquetSchemaMergingEnabled || path.exists("{}[]*?\\".contains(_)))
+      return None
+    val hadoopConf = spark.sessionState.newHadoopConf()
+    val root = new Path(path)
+    try {
+      schemaFile(root.getFileSystem(hadoopConf), root).map { f =>
+        val footer = new Footer(f.getPath, ParquetFooterReader.readFooter(
+          HadoopInputFile.fromStatus(f, hadoopConf),
+          ParquetMetadataConverter.SKIP_ROW_GROUPS))
+        val converter = new ParquetToSparkSchemaConverter(
+          assumeBinaryIsString = conf.isParquetBinaryAsString,
+          assumeInt96IsTimestamp = conf.isParquetINT96AsTimestamp,
+          inferTimestampNTZ = conf.parquetInferTimestampNTZEnabled,
+          nanosAsLong = conf.legacyParquetNanosAsLong,
+          respectUnknownTypeAnnotation =
+            conf.parquetReaderRespectUnknownTypeAnnotation)
+        asNullable(ParquetFileFormat.readSchemaFromFooter(footer, converter))
+          .asInstanceOf[StructType]
+      }
+    } catch { case NonFatal(_) => None }
+  }
+
+  /** Spark's `DataType.asNullable` (private to Spark). */
+  private def asNullable(t: DataType): DataType = t match {
+    case s: StructType => StructType(s.fields.map(f =>
+      f.copy(dataType = asNullable(f.dataType), nullable = true)))
+    case a: ArrayType => ArrayType(asNullable(a.elementType), containsNull = true)
+    case m: MapType => MapType(asNullable(m.keyType), asNullable(m.valueType),
+      valueContainsNull = true)
+    case other => other
+  }
+
+  /** The file whose footer Spark's non-merging inference reads: the
+    * first `_common_metadata`, else the first `_metadata`, else the first
+    * data file, of the leaves sorted by path string. Summary files are
+    * looked for at the root, where Parquet's output committer writes
+    * them. None when there is no data file, or when the root holds a
+    * `_spark_metadata` log: Spark then reads the files the log names
+    * instead of listing. */
+  private def schemaFile(fs: FileSystem, root: Path): Option[FileStatus] = {
+    val level = scan(fs, root)
+    if (level.named.contains("_spark_metadata")) None
+    else level.named.get("_common_metadata")
+      .orElse(level.named.get("_metadata"))
+      .orElse(descend(fs, level))
+  }
+
+  /** What [[scan]] keeps of one directory. */
+  private final case class Level(least: Option[FileStatus],
+      dirs: Seq[FileStatus], named: Map[String, FileStatus])
+
+  /** One directory of Spark's leaf listing, read through the listing
+    * iterator: the least visible data file by path string, the visible
+    * subdirectories and the special names seen. File systems promise no
+    * listing order, so each directory is read to its end, but nothing
+    * below it is listed unless it can hold an earlier path. */
+  private def scan(fs: FileSystem, dir: Path): Level = {
+    var least: Option[FileStatus] = None
+    val dirs = scala.collection.mutable.ArrayBuffer.empty[FileStatus]
+    val named = Map.newBuilder[String, FileStatus]
+    entries(fs, dir).foreach { s =>
+      val name = s.getPath.getName
+      if (specialNames(name)) named += name -> s
+      if (!hidden(name)) {
+        if (s.isDirectory) dirs += s
+        else if (!summary(name) && least.forall(l => sortKey(s) < sortKey(l)))
+          least = Some(s)
+      }
+    }
+    Level(least, dirs.toSeq, named.result())
+  }
+
+  /** The least data file of a scanned directory: every file under a
+    * subdirectory `d` sorts as `d/…`, one contiguous run, so the
+    * subdirectories that sort before the directory's own least file are
+    * tried in order and the first one holding a data file wins. */
+  private def descend(fs: FileSystem, level: Level): Option[FileStatus] =
+    level.dirs.filter(d => level.least.forall(l => sortKey(d) < sortKey(l)))
+      .sortBy(sortKey).iterator
+      .flatMap(d => descend(fs, scan(fs, d.getPath)))
+      .nextOption().orElse(level.least)
+
+  private def sortKey(s: FileStatus): String =
+    if (s.isDirectory) s"${s.getPath}/" else s.getPath.toString
+
+  private val specialNames =
+    Set("_spark_metadata", "_common_metadata", "_metadata")
+  private def summary(name: String): Boolean =
+    name == "_common_metadata" || name == "_metadata"
+
+  /** Names Spark's file listing skips (`HadoopFSUtils.
+    * shouldFilterOutPathName`), directories included. */
+  private def hidden(name: String): Boolean =
+    ((name.startsWith("_") && !name.contains("=")) || name.startsWith(".") ||
+      name.endsWith("._COPYING_")) &&
+      !name.startsWith("_common_metadata") && !name.startsWith("_metadata")
+
+  /** The children of `dir` (or `dir` itself when it is a file) through
+    * the file system's listing iterator, which pages where the store
+    * does (HDFS, S3A). */
+  private def entries(fs: FileSystem, dir: Path): Iterator[FileStatus] = {
+    val it = fs.listStatusIterator(dir)
+    new Iterator[FileStatus] {
+      def hasNext: Boolean = it.hasNext
+      def next(): FileStatus = it.next()
+    }
+  }
+
+  /** Every data file under `dir` that Spark's listing reads. */
+  private def dataFiles(fs: FileSystem, dir: Path): Iterator[FileStatus] =
+    entries(fs, dir).filterNot(s => hidden(s.getPath.getName)).flatMap { s =>
+      if (s.isDirectory) dataFiles(fs, s.getPath)
+      else if (summary(s.getPath.getName)) Iterator.empty
+      else Iterator.single(s)
+    }
 
   /** Materialize a cached frame NOW (bounded count) so concurrently
     * submitted consumers read the cache instead of racing it — each
@@ -33,7 +195,7 @@ object Tables {
     * stay shut; fatal errors (OOM, interrupts) propagate. */
   private def tableBytes(spark: SparkSession, path: String): Long =
     try {
-      val p = new org.apache.hadoop.fs.Path(path)
+      val p = new Path(path)
       val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
       fs.getContentSummary(p).getLength
     } catch { case NonFatal(_) => Long.MaxValue }
@@ -97,9 +259,8 @@ object Tables {
 
   private[graft] def fanned(spark: SparkSession, dir: String, name: String,
       key: String*): DataFrame = {
-    val path = s"$dir/$name.parquet"
-    val df = spark.read.parquet(path)
-    fanOut(spark, path, df, scanFanCap, key.map(col): _*)
+    fanOut(spark, s"$dir/$name.parquet", t(spark, dir, name), scanFanCap,
+      key.map(col): _*)
   }
 
   /** [[fanOut]] for a DERIVED frame whose size tracks the named fixture
@@ -186,21 +347,10 @@ object Tables {
     * construction time: an eager `df.count()` there would be a full pass
     * over the corpus before the query even runs. */
   def parquetRowCount(s: SparkSession, path: String): Long = {
-    import org.apache.hadoop.fs.Path
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
     val conf = s.sessionState.newHadoopConf()
     val root = new Path(path)
-    val fs = root.getFileSystem(conf)
-    val files = scala.collection.mutable.ArrayBuffer.empty[org.apache.hadoop.fs.FileStatus]
-    val it = fs.listFiles(root, true)
-    while (it.hasNext) {
-      val f = it.next()
-      val n = f.getPath.getName
-      if (f.isFile && !n.startsWith("_") && !n.startsWith(".")) files += f
-    }
-    files.iterator.map { f =>
-      val r = ParquetFileReader.open(HadoopInputFile.fromPath(f.getPath, conf))
+    dataFiles(root.getFileSystem(conf), root).map { f =>
+      val r = ParquetFileReader.open(HadoopInputFile.fromStatus(f, conf))
       try r.getRecordCount finally r.close()
     }.sum
   }

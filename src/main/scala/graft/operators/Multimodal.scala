@@ -60,9 +60,40 @@ object Multimodal {
       height: Int, histogram: Array[Long], px_sum: Long,
       roundtrip_ok: Boolean)
 
-  private def md5hex(bytes: Array[Byte]): String =
-    java.security.MessageDigest.getInstance("MD5").digest(bytes)
-      .map(b => f"${b & 0xFF}%02x").mkString
+  /** Hex via digit lookup, as `ScrapeTws.genUuid` does, not one
+    * `f"%02x"` Formatter per byte. */
+  private def md5hex(bytes: Array[Byte]): String = {
+    val sb = new java.lang.StringBuilder(32)
+    java.security.MessageDigest.getInstance("MD5").digest(bytes).foreach { b =>
+      sb.append(Character.forDigit((b >> 4) & 0xf, 16))
+      sb.append(Character.forDigit(b & 0xf, 16))
+    }
+    sb.toString
+  }
+
+  /** `ImageIO.write(img, "png", out)` without its disk cache: ImageIO's
+    * stream factory backs an `OutputStream` with a temporary file in
+    * `java.io.tmpdir` by default, one per image. The same PNG writer on
+    * an in-memory stream writes the same bytes. (`ImageIO.setUseCache`
+    * would do it for the whole JVM.) */
+  private def pngWrite(img: java.awt.image.BufferedImage): Array[Byte] = {
+    val bos = new java.io.ByteArrayOutputStream()
+    val out = new javax.imageio.stream.MemoryCacheImageOutputStream(bos)
+    val writer = javax.imageio.ImageIO.getImageWritersByFormatName("png").next()
+    try { writer.setOutput(out); writer.write(img) }
+    finally { writer.dispose(); out.close() }
+    bos.toByteArray
+  }
+
+  /** `ImageIO.read` of PNG bytes through an in-memory stream (see
+    * [[pngWrite]]). */
+  private def pngRead(png: Array[Byte]): java.awt.image.BufferedImage = {
+    val in = new javax.imageio.stream.MemoryCacheImageInputStream(
+      new java.io.ByteArrayInputStream(png))
+    val reader = javax.imageio.ImageIO.getImageReadersByFormatName("png").next()
+    try { reader.setInput(in, true, true); reader.read(0) }
+    finally { reader.dispose(); in.close() }
+  }
 
   /** REAL image encode (JDK `javax.imageio`): the payload bytes become
     * the samples of a 16-px-wide 8-bit grayscale image (last row
@@ -76,9 +107,7 @@ object Multimodal {
     val img = new java.awt.image.BufferedImage(
       w, h, java.awt.image.BufferedImage.TYPE_BYTE_GRAY)
     img.getRaster.setDataElements(0, 0, w, h, pixels)
-    val bos = new java.io.ByteArrayOutputStream()
-    javax.imageio.ImageIO.write(img, "png", bos)
-    PngBlob(docId, content.length, md5hex(pixels), bos.toByteArray)
+    PngBlob(docId, content.length, md5hex(pixels), pngWrite(img))
   }
 
   /** REAL image decode: parses the PNG bytes (signature checked — this
@@ -89,8 +118,7 @@ object Multimodal {
     val magic = Array(0x89, 0x50, 0x4E, 0x47).map(_.toByte)
     require(b.png.length > 8 && b.png.take(4).sameElements(magic),
       s"doc ${b.doc_id}: payload is not a PNG")
-    val img = javax.imageio.ImageIO.read(
-      new java.io.ByteArrayInputStream(b.png))
+    val img = pngRead(b.png)
     val (w, h) = (img.getWidth, img.getHeight)
     val pixels = new Array[Byte](w * h)
     img.getRaster.getDataElements(0, 0, w, h, pixels)
@@ -388,8 +416,7 @@ object Multimodal {
   case class ImageHash(doc_id: Long, hi: Long, lo: Long)
 
   def aHashOf(b: PngBlob): ImageHash = {
-    val img = javax.imageio.ImageIO.read(
-      new java.io.ByteArrayInputStream(b.png))
+    val img = pngRead(b.png)
     val (w, h) = (img.getWidth, img.getHeight)
     val px = new Array[Byte](w * h)
     img.getRaster.getDataElements(0, 0, w, h, px)

@@ -74,7 +74,7 @@ object StreamBench {
   /** A bounded in-order stream over [[writeStreamDir]] output: one file
     * per trigger — the count-or-time micro-batch analog. */
   def sourceStream(s: SparkSession, dir: String): DataFrame = {
-    val schema = s.read.parquet(dir).schema
+    val schema = graft.Tables.parquet(s, dir).schema
     s.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1")
       .parquet(dir)
@@ -218,7 +218,7 @@ object StreamBench {
     * per micro-batch through [[ScrapeTws.changeStream]] — the round-11
     * flagship operator as a measured row (VERDICT r11 #1). */
   def scrapeTws(s: SparkSession, dir: String): DataFrame = {
-    val schema = s.read.parquet(dir).schema
+    val schema = graft.Tables.parquet(s, dir).schema
     val src = s.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1")
       .option("latestFirst", "false")

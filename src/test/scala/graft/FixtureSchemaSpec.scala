@@ -11,10 +11,35 @@ import org.apache.spark.sql.types._
   * upstream regen drifts a type the engine doesn't already normalize,
   * exactly this spec fails, naming the column, instead of a scatter of
   * downstream analysis errors.
+  *
+  * It also holds [[Tables.t]] to Spark's own inference: every fixture
+  * table at every scale reads with the schema `spark.read.parquet`
+  * infers, and without the Spark job that inference submits.
   */
 class FixtureSchemaSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
   private val dir = TestSpark.sf0001
+
+  private val scales = Seq(TestSpark.sf0001, TestSpark.sf001, TestSpark.sf01)
+
+  private def tableNames(d: String): Seq[String] =
+    new java.io.File(d).list().toSeq.filter(_.endsWith(".parquet"))
+      .map(_.stripSuffix(".parquet")).sorted
+
+  test("Tables.t gives every fixture table Spark's inferred schema") {
+    for (d <- scales; name <- tableNames(d)) {
+      assert(Tables.t(spark, d, name).schema ==
+        spark.read.parquet(s"$d/$name.parquet").schema, s"$d/$name")
+    }
+    assert(tableNames(dir).contains("events"), s"no fixture tables under $dir")
+  }
+
+  test("Tables.t on the fixture tables starts no Spark job") {
+    val names = tableNames(dir)
+    assert(names.size >= 10, s"fixture tables under $dir: $names")
+    assert(ParquetSchemaSpec.jobsDuring(spark)(
+      names.foreach(n => Tables.t(spark, dir, n))) == 0)
+  }
 
   private def typesOf(df: org.apache.spark.sql.DataFrame): Map[String, DataType] =
     df.schema.fields.map(f => f.name -> f.dataType).toMap

@@ -9,7 +9,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Layout guard over the main source tree: the dev tools stay a leaf
   * that no shipped file reaches into, and every Spark session is built
   * by [[Sessions]], so the confs all entry points share cannot drift
-  * apart again. */
+  * apart again. Query and stream builders read parquet only through
+  * [[Tables]], so none brings back Spark's schema-inference job. */
 class LayoutSpec extends AnyFunSuite {
   private val root = Paths.get("src/main/scala")
 
@@ -39,5 +40,29 @@ class LayoutSpec extends AnyFunSuite {
     }.filter(_._2 > 0)
     assert(calls == Seq("graft/Sessions.scala" -> 1),
       s"SparkSession.builder outside the one factory call: $calls")
+  }
+
+  test("builders read parquet only through Tables") {
+    val builderDirs = Seq("operators", "functions", "plans", "streaming")
+      .map(d => s"graft/$d/")
+    // batch reads of a parquet path: read.parquet, read.<options>.parquet,
+    // read.format("parquet"); readStream does not infer a schema
+    val batchRead =
+      raw"""\bread\s*\.(\s*\w+\([^)]*\)\s*\.)*\s*parquet\(|\bread\s*\.\s*format\(\s*"parquet"""".r
+    // ScrapeStream.readState reads the daemon's own state directory,
+    // whose schema can differ between builds; it keeps Spark's inference
+    val exempt = Map("graft/streaming/ScrapeStream.scala" -> 1)
+    assert(sources.exists(_._1 == "graft/Tables.scala"))
+    val bad = sources.collect {
+      case (f, src) if builderDirs.exists(f.startsWith) &&
+          batchRead.findAllMatchIn(src).size > exempt.getOrElse(f, 0) => f
+    }
+    assert(bad.isEmpty, s"parquet reads that bypass Tables.parquet: $bad")
+    // the guard sees the forms it names
+    Seq("s.read.parquet(dir)", "spark.read\n  .schema(x).parquet(p)",
+        "spark.read.format(\"parquet\").load(p)").foreach { src =>
+      assert(batchRead.findFirstIn(src).isDefined, src)
+    }
+    assert(batchRead.findFirstIn("s.readStream.schema(x).parquet(dir)").isEmpty)
   }
 }

@@ -34,6 +34,28 @@ class MultimodalSpec extends AnyFunSuite {
     }
   }
 
+  test("the in-memory PNG codec writes ImageIO.write's bytes and reads them back") {
+    val rnd = new scala.util.Random(11)
+    val contents = Seq(Array.emptyByteArray, "x".getBytes("UTF-8"),
+      Array.fill(300)(rnd.nextInt(256).toByte), Array.fill(4096)(7.toByte))
+    contents.zipWithIndex.foreach { case (content, i) =>
+      // the image pngEncode builds, written by the disk-cached ImageIO path
+      val (w, h) = (16, math.max(1, (content.length + 15) / 16))
+      val img = new java.awt.image.BufferedImage(
+        w, h, java.awt.image.BufferedImage.TYPE_BYTE_GRAY)
+      img.getRaster.setDataElements(0, 0, w, h, java.util.Arrays.copyOf(content, w * h))
+      val bos = new java.io.ByteArrayOutputStream()
+      assert(javax.imageio.ImageIO.write(img, "png", bos))
+      val blob = Multimodal.pngEncode(i.toLong, content)
+      assert(blob.png.sameElements(bos.toByteArray), s"content $i")
+      val md5 = java.security.MessageDigest.getInstance("MD5")
+        .digest(java.util.Arrays.copyOf(content, w * h))
+        .map(b => f"${b & 0xFF}%02x").mkString
+      assert(blob.src_md5 == md5, s"content $i")
+      assert(Multimodal.pngDecode(blob).roundtrip_ok, s"content $i")
+    }
+  }
+
   test("wavEncode emits genuine RIFF/WAVE bytes; wavDecode round-trips") {
     val content = "audio codec test".getBytes("UTF-8")
     val blob = Multimodal.wavEncode(9L, content)

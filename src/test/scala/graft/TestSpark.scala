@@ -14,4 +14,5 @@ object TestSpark {
   }
   val sf0001 = "/root/testdata/sf0.001"
   val sf001 = "/root/testdata/sf0.01"
+  val sf01 = s"${new java.io.File(sf001).getParent}/sf0.1"
 }

@@ -28,6 +28,27 @@ class TsDriftSpec extends AnyFunSuite {
     spark.read.parquet(dir)
   }
 
+  /** A real parquet TIMESTAMP(NANOS) column, which Spark cannot write:
+    * the session's `nanosAsLong` reads it as epoch-nanos long. */
+  private lazy val nanosDir: String = {
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.hadoop.util.HadoopOutputFile
+    import org.apache.parquet.schema.MessageTypeParser
+    val dir = java.nio.file.Files.createTempDirectory("ts_drift_nanos").toString
+    val schema = MessageTypeParser.parseMessageType(
+      "message m { required int64 id; required int64 ts (TIMESTAMP(NANOS,true)); }")
+    val conf = new org.apache.hadoop.conf.Configuration()
+    val w = ExampleParquetWriter.builder(HadoopOutputFile.fromPath(
+      new org.apache.hadoop.fs.Path(s"$dir/part-0.parquet"), conf))
+      .withType(schema).withConf(conf).build()
+    val groups = new SimpleGroupFactory(schema)
+    try micros.zipWithIndex.foreach { case (us, i) =>
+      w.write(groups.newGroup().append("id", i.toLong).append("ts", us * 1000))
+    } finally w.close()
+    dir
+  }
+
   private def canonical(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long)] =
     Tables.normalizeTs(df)
       .select(col("id"), unix_micros(col("ts")))
@@ -78,6 +99,27 @@ class TsDriftSpec extends AnyFunSuite {
     val want = agg(asTimestamp)
     assert(want.map(_._2).sum == micros.size.toLong)
     all.tail.foreach { case (name, df) => assert(agg(df) == want, s"encoding $name") }
+  }
+
+  test("Tables.parquet reads every encoding like spark.read.parquet") {
+    val encodings = all.map { case (name, df) =>
+      name -> new org.apache.hadoop.fs.Path(df.inputFiles.head).getParent.toString
+    } :+ ("parquet_nanos" -> nanosDir)
+    encodings.foreach { case (name, dir) =>
+      val plain = spark.read.parquet(dir)
+      val viaTables = Tables.parquet(spark, dir)
+      assert(viaTables.schema == plain.schema, s"encoding $name")
+      assert(canonical(viaTables) == canonical(plain), s"encoding $name")
+    }
+    assert(Tables.parquet(spark, nanosDir).schema("ts").dataType == LongType)
+    assert(canonical(Tables.parquet(spark, nanosDir)) ==
+      micros.zipWithIndex.map { case (us, i) => (i.toLong, us) })
+    // the footer read takes nanosAsLong from the session, like Spark's
+    val key = "spark.sql.legacy.parquet.nanosAsLong"
+    spark.conf.set(key, "false")
+    try assert(Tables.footerSchema(spark, nanosDir) ==
+      scala.util.Try(spark.read.parquet(nanosDir).schema).toOption)
+    finally spark.conf.set(key, "true")
   }
 
   test("unsupported event-time types are rejected at the boundary") {
