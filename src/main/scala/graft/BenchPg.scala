@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.control.NonFatal
+
 import graft.sinks.{PgMerge, PgWireClient}
 
 /** Shared harness-PostgreSQL plumbing for the measured bench rows
@@ -29,7 +31,7 @@ private[graft] object BenchPg {
     * cleanly when it does not. */
   def reachable: Boolean =
     try withClient(_.queryOne("SELECT 1").contains("1"))
-    catch { case _: Throwable => false }
+    catch { case NonFatal(_) => false }
 
   def optedIn: Boolean =
     sys.env.get("GRAFT_BENCH_ALLOW_DROP").contains("1") ||
@@ -61,7 +63,7 @@ private[graft] object BenchPg {
         (resolved.nonEmpty && relations.contains("1") &&
           withClient(_.queryOne(s"SELECT count(*) FROM $resolved")
             .contains("0")))
-    } catch { case _: Throwable => false } // probe failed: fail CLOSED
+    } catch { case NonFatal(_) => false } // probe failed: fail CLOSED
   }
 
   def refusalNote(label: String): String =

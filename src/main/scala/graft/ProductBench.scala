@@ -3,6 +3,8 @@ package graft
 import java.nio.charset.StandardCharsets.UTF_8
 import java.util.concurrent.{ExecutorService, Executors}
 
+import scala.util.control.NonFatal
+
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.apache.spark.sql.SparkSession
 
@@ -270,7 +272,7 @@ object ProductBench {
       // createTable and here, this cleanup must re-prove ownership
       // (VERDICT r18 wrong#4).
       try withClient(_.exec(s"DROP TABLE IF EXISTS ${PgMerge.table}"))
-      catch { case _: Throwable => () }
+      catch { case NonFatal(_) => () }
     }
   }
 }

@@ -3,6 +3,7 @@ package graft.sinks
 import java.sql.{Connection, DriverManager}
 import java.util.Properties
 
+import scala.util.Using
 import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{DataFrame, SaveMode}
@@ -28,15 +29,17 @@ import org.apache.spark.sql.{DataFrame, SaveMode}
   * connections (the reference pools 2, `db.rs:28`); the epilogue uses one.
   *
   * Two shipped transports for the same resolution:
-  *  - `df.write.jdbc` ([[publishScan]]) — the standard path when a JDBC
-  *    driver jar is on the classpath; tested live against an in-process
-  *    DuckDB over JDBC (PgMergeSpec), conflict-target spelling as the
-  *    one documented dialect seam.
-  *  - the v3 wire protocol ([[publishScanWire]] via [[PgWireClient]]) —
-  *    no driver jar needed; tested END-TO-END against a real PostgreSQL
-  *    server with the named-constraint conflict target verbatim
-  *    (PgWireSpec replays every dev/pgmerge_live_check.py scenario
-  *    through the engine's own code path).
+  *  - `df.write.jdbc` ([[publishScan]], read half [[readCurrent]]) — the
+  *    standard path when a JDBC driver jar is on the classpath; tested
+  *    live against an in-process DuckDB over JDBC (PgMergeSpec),
+  *    conflict-target spelling as the one documented dialect seam.
+  *  - the `graft-pg` DataSource V2 table over the v3 wire protocol
+  *    ([[PgWireClient]]; no driver jar needed). [[publishScanWire]] and
+  *    [[readCurrentWire]] are calls into it: its writer stages the scan
+  *    over COPY and its commit runs [[mergeWire]]; its reader shards the
+  *    slice by hash. Tested END-TO-END against a real PostgreSQL server
+  *    with the named-constraint conflict target verbatim (PgWireSpec
+  *    replays every dev/pgmerge_live_check.py scenario through it).
   */
 object PgMerge {
 
@@ -199,13 +202,18 @@ object PgMerge {
     var conn: Connection = null
     try {
       conn = DriverManager.getConnection(jdbcUrl, user, password)
-      val st = conn.createStatement()
       conn.setAutoCommit(false)
-      st.execute(upsertSql(scratch, conflictTarget))
-      val del = conn.prepareStatement(markDeletedSql(scratch))
-      del.setString(1, externalSource)
-      del.executeUpdate()
-      st.execute(s"DROP TABLE $scratch")
+      // statements are closed here, not left to conn.close(): with
+      // DuckDB's driver, unclosed ones left the next connection to the
+      // file reading it without this transaction's commit
+      Using.resource(conn.createStatement()) { st =>
+        st.execute(upsertSql(scratch, conflictTarget))
+        Using.resource(conn.prepareStatement(markDeletedSql(scratch))) { del =>
+          del.setString(1, externalSource)
+          del.executeUpdate()
+        }
+        st.execute(s"DROP TABLE $scratch")
+      }
       conn.commit()
     } catch {
       case e: Throwable =>
@@ -323,7 +331,10 @@ object PgMerge {
           s"unsupported sslmode '$m' (disable, allow, prefer, require, " +
             "verify-ca, verify-full)")
       }
-      PgTarget(u.getHost, if (u.getPort > 0) u.getPort else 5432, db,
+      // an IPv6 literal comes back bracketed ("[::1]"); the address is
+      // the literal itself
+      PgTarget(u.getHost.stripPrefix("[").stripSuffix("]"),
+        if (u.getPort > 0) u.getPort else 5432, db,
         user, pass, ssl,
         if (ssl.startsWith("verify-")) rootCert else None)
     } else {
@@ -355,31 +366,6 @@ object PgMerge {
       Math.floorDiv(micros, 1000000L),
       Math.floorMod(micros, 1000000L) * 1000L))
 
-  /** Render one scan row as COPY text fields: timestamps as UTC
-    * `timestamptz` literals (micros preserved), everything else via
-    * toString; NULL-safe. Runs on executors. */
-  private[sinks] def copyFields(
-      row: org.apache.spark.sql.Row): Seq[Option[String]] = {
-    val fmt = copyTsFmt
-    scanCols.map { c =>
-      val i = row.fieldIndex(c)
-      if (row.isNullAt(i)) None
-      else row.get(i) match {
-        case t: java.sql.Timestamp => Some(fmt.format(t.toInstant))
-        case t: java.time.Instant => Some(fmt.format(t))
-        case v => Some(v.toString)
-      }
-    }
-  }
-
-  /** [[markDeletedSql]] with the source bound as a quoted literal — the
-    * simple-query protocol has no bind step; the statement text is
-    * otherwise VERBATIM (the generated SQL contains exactly one `?`).
-    * Retained for callers stuck on the simple protocol;
-    * [[publishScanWire]] itself binds through [[markDeletedSqlWire]]. */
-  def markDeletedSqlLiteral(scratch: String, externalSource: String): String =
-    markDeletedSql(scratch).replace("?", PgWireClient.sqlLit(externalSource))
-
   /** [[markDeletedSql]] with the wire protocol's positional parameter —
     * `$1` is the one token that differs from the JDBC API's `?`; the
     * statement text is otherwise identical, and the source travels as a
@@ -389,8 +375,8 @@ object PgMerge {
   def markDeletedSqlWire(scratch: String): String =
     markDeletedSql(scratch).replace("?", "$1")
 
-  /** The `external_file` read schema (what [[readCurrentWire]] and the
-    * `graft-pg` V2 table both produce). */
+  /** The `external_file` read schema: what the `graft-pg` table, and so
+    * [[readCurrentWire]], produces. */
   val readSchema: org.apache.spark.sql.types.StructType = {
     import org.apache.spark.sql.types._
     StructType(Seq(
@@ -403,18 +389,6 @@ object PgMerge {
       StructField("size", LongType),
       StructField("deleted", TimestampType)))
   }
-
-  /** The `external_source` equality as a remote SQL predicate. COPY
-    * rejects extended-protocol parameters (a documented PostgreSQL
-    * restriction: the inner query cannot reference `$1`), so the source
-    * travels as a quoted literal here — the bind parity stays on the
-    * statements that CAN carry one (the tombstone UPDATE). Literal
-    * quoting assumes `standard_conforming_strings = on`, which every
-    * shard-read connection PINS next to its `SET TIME ZONE` (ADVICE
-    * r15: a server configured off would interpret backslashes in a
-    * hostile source name as escapes). */
-  private[graft] def srcPredSql(externalSource: String): String =
-    s"external_source = ${PgWireClient.sqlLit(externalSource)}"
 
   /** The hash-shard predicate: each of `n` statements keeps the rows
     * whose key hashes to its residue. Correct for ANY server version
@@ -567,43 +541,65 @@ object PgMerge {
     } finally c.close()
   }
 
-  /** Decoded COPY-out fields → one read-schema [[org.apache.spark.sql.Row]]
-    * (timestamps micros-exact via [[PgWireClient.parsePgTimestamp]]). */
-  private[sinks] def shardRow(
-      f: Vector[Option[String]]): org.apache.spark.sql.Row =
-    org.apache.spark.sql.Row(
-      f(0).orNull, f(1).orNull, f(2).orNull, f(3).orNull,
-      f(4).map(PgWireClient.parsePgTimestamp).orNull,
-      f(5).map(PgWireClient.parsePgTimestamp).orNull,
-      f(6).map(_.toLong: java.lang.Long).orNull,
-      f(7).map(PgWireClient.parsePgTimestamp).orNull)
+  /** The wire merge epilogue, the one transaction (K2) that publishes a
+    * staged scan: BEGIN → upsert of the changed rows (J3, named-constraint
+    * ON CONFLICT verbatim) → tombstone of this source's vanished keys
+    * (J2, the source a REAL `$1` bind — sqlx parity, injection-proof by
+    * type) → DROP of the scratch → COMMIT. Any failure rolls the
+    * transaction back and rethrows; a failing ROLLBACK is attached to the
+    * original error as suppressed, never thrown in its place. The scratch
+    * then outlives the transaction: dropping it is the caller's cleanup
+    * (the `graft-pg` write's `abort`). */
+  private[graft] def mergeWire(c: PgWireClient, scratch: String,
+      source: String): Unit =
+    try {
+      c.exec("BEGIN")
+      c.exec(upsertSql(scratch))
+      c.execBound(markDeletedSqlWire(scratch), Seq(Some(source)))
+      c.exec(s"DROP TABLE $scratch")
+      c.exec("COMMIT")
+      ()
+    } catch {
+      case e: Throwable =>
+        try c.exec("ROLLBACK")
+        catch { case NonFatal(r) => e.addSuppressed(r) }
+        throw e
+    }
 
-  /** [[readCurrent]] over the v3 wire protocol — a DISTRIBUTED read with
-    * no JDBC jar: `numPartitions` executor tasks each open one wire
-    * connection and pull a disjoint hash shard of the source's rows
-    * (`hashtext(path||filename) % N`, the wire analog of JDBC's
-    * `partitionColumn` sharding), so a 10⁸-row source never lands on the
-    * driver. The `external_source` predicate and the shard filter are
-    * both evaluated REMOTELY (only this source's slice crosses the wire,
-    * `readCurrent`'s PushedFilters parity); timestamps arrive as UTC ISO
-    * text (`SET TIME ZONE 'UTC'` per connection) and parse losslessly to
-    * micros.
-    *
-    * Memory + transport shape (VERDICT r13 #2, r14 #1): each task
-    * STREAMS its shard through [[PgWireClient.copyOut]] — `COPY (…) TO
-    * STDOUT`, bulk CopyData frames, one frame in heap at a time, the
-    * exact read twin of the write half's 64 KiB COPY chunks — so
-    * per-task memory is O(1) regardless of shard size and the per-row
-    * protocol overhead of the former DataRow transport is gone;
-    * `numPartitions` therefore controls wall-clock parallelism and
-    * per-shard server work, NOT a heap bound. Default 16: enough
-    * connection-parallelism to saturate one PG primary without
-    * approaching default `max_connections` (sharded reads are a
-    * read-replica pattern at fleet scale; the WRITE budget stays the
-    * reference's 2, `db.rs:28`). The connection closes on iterator
-    * exhaustion; a failed/killed task first CANCELS its in-flight
-    * server query (CancelRequest, VERDICT r14 #5) and then closes, via
-    * a task-completion listener. */
+  /** The `graft-pg` options that address one server exactly as given:
+    * `user`, `password` (when given), `sslmode` and `sslrootcert` (when
+    * given) travel as options, which override whatever the `url` parses
+    * to, so the `url` carries only host, port and database. The bare
+    * `HOST:PORT/DB` form takes any host but an IPv6 literal, whose colons
+    * only the URL form's brackets can hold. With no password,
+    * `PGPASSWORD` fills in (the table's credential chain). */
+  private[graft] def wireOptions(host: String, port: Int, database: String,
+      user: String, password: Option[String], sslMode: String,
+      sslRootCert: Option[String]): Map[String, String] = {
+    val url =
+      if (host.contains(':'))
+        new java.net.URI("postgres", null, host, port, "/" + database,
+          null, null).toString
+      else s"$host:$port/$database"
+    Map("url" -> url, "user" -> user, "sslmode" -> sslMode) ++
+      password.map("password" -> _) ++ sslRootCert.map("sslrootcert" -> _)
+  }
+
+  /** [[readCurrent]] over the v3 wire protocol: the `graft-pg` table read
+    * with `shardmode=hash` and `partitions = numPartitions`, filtered on
+    * `external_source`. A DISTRIBUTED read with no JDBC jar: each of the
+    * `numPartitions` executor tasks opens one wire connection and streams
+    * a disjoint hash shard of the source's rows (`hashtext(path||filename)
+    * % N`, the wire analog of JDBC's `partitionColumn` sharding) through
+    * `COPY (…) TO STDOUT`, one frame in heap at a time, so a 10⁸-row
+    * source never lands on the driver and per-task memory does not grow
+    * with the shard. The source predicate is pushed into every shard's
+    * remote statement (`PushedFilters` in `.explain`): only this source's
+    * slice crosses the wire. Timestamps parse micros-exact from UTC text.
+    * `numPartitions` sets wall-clock parallelism and per-shard server
+    * work, not a heap bound; default 16 saturates one primary without
+    * approaching the default `max_connections`. A killed task cancels its
+    * in-flight server query before closing. */
   def readCurrentWire(
       spark: org.apache.spark.sql.SparkSession,
       host: String,
@@ -614,59 +610,29 @@ object PgMerge {
       numPartitions: Int = 16,
       password: Option[String] = None,
       sslMode: String = "disable",
-      sslRootCert: Option[String] = None): DataFrame = {
-    import org.apache.spark.sql.Row
-    val n = numPartitions
-    val rdd = spark.sparkContext
-      .parallelize(0 until n, n)
-      .mapPartitions { shards =>
-        shards.flatMap { shard =>
-          // connect-phase retry only (a restarting server refuses for a
-          // moment); an established session never retries mid-statement
-          val c = PgWireClient.connect(host, port, user, database,
-            password, sslMode, sslRootCert)
-          // failure/cancellation path: a killed task cancels its server
-          // query, then closes (close is idempotent — the exhaustion
-          // path below also closes; an exhausted cycle cancels nothing)
-          Option(org.apache.spark.TaskContext.get())
-            .foreach(_.addTaskCompletionListener[Unit] { _ =>
-              c.cancelIfActive(); c.close()
-            })
-          // UTC pins the timestamptz text rendering; conforming strings
-          // pins [[PgWireClient.sqlLit]]'s quoting assumption (ADVICE
-          // r15: a server configured off would read backslashes in a
-          // hostile source name as escapes)
-          c.exec("SET TIME ZONE 'UTC'")
-          c.exec("SET standard_conforming_strings = on")
-          val rows = c.copyOut(shardCopySql(
-            Seq(srcPredSql(externalSource), hashShardPred(n, shard))))
-          new scala.collection.AbstractIterator[Row] {
-            override def hasNext: Boolean = {
-              val h = rows.hasNext
-              if (!h) c.close()
-              h
-            }
-            override def next(): Row = shardRow(rows.next())
-          }
-        }
-      }
-    spark.createDataFrame(rdd, readSchema)
-  }
+      sslRootCert: Option[String] = None): DataFrame =
+    spark.read.format("graft-pg")
+      .options(wireOptions(host, port, database, user, password, sslMode,
+        sslRootCert))
+      .option("shardmode", "hash")
+      .option("partitions", numPartitions.toLong)
+      .load()
+      .filter(org.apache.spark.sql.functions.col("external_source") ===
+        externalSource)
 
-  /** [[publishScan]] over the v3 wire protocol ([[PgWireClient]]) instead
-    * of `df.write.jdbc` — same staged-table resolution, executed against
-    * a REAL PostgreSQL server with the reference's named-constraint
-    * conflict target verbatim (`db.rs:105-108`):
+  /** [[publishScan]] over the v3 wire protocol: the scan's columns written
+    * to the `graft-pg` table, the same staged-table resolution executed
+    * against a REAL PostgreSQL server with the reference's
+    * named-constraint conflict target verbatim (`db.rs:105-108`):
     *
-    *  1. driver creates the per-scan scratch table,
-    *  2. executors `COPY ... FROM STDIN` their partitions into it
-    *     (`repartition(maxConnections)` caps parallel connections — the
-    *     reference pools 2, `db.rs:28` — without serializing the
-    *     upstream scan into those tasks),
-    *  3. driver runs the single-transaction merge epilogue: BEGIN →
-    *     upsert (J3) → tombstone (J2) → DROP scratch → COMMIT, with
-    *     ROLLBACK on any failure (K2) and a best-effort scratch drop
-    *     outside the failed transaction.
+    *  1. the driver creates the per-scan scratch table;
+    *  2. the input is repartitioned to `maxConnections` tasks (K1: the
+    *     reference pools 2, `db.rs:28`; the upstream scan keeps its own
+    *     parallelism), each of which COPYs its rows into the scratch
+    *     inside its own transaction, so a retried or speculative task's
+    *     rows roll back;
+    *  3. the driver runs [[mergeWire]]; on any failure the write's abort
+    *     drops the scratch, and the commit's own error is rethrown.
     */
   def publishScanWire(
       scan: DataFrame,
@@ -678,63 +644,12 @@ object PgMerge {
       maxConnections: Int = 2,
       password: Option[String] = None,
       sslMode: String = "disable",
-      sslRootCert: Option[String] = None): Unit = {
-    val scratch = scratchName(java.util.UUID.randomUUID().toString)
-    // CONNECT-phase retry only (VERDICT r14 #6): a daemon cycle hitting
-    // a restarting server backs off and reconnects; once a session is
-    // established nothing retries — a mid-transaction failure fails the
-    // scan (replay safety), and the daemon's next cycle starts clean
-    def withClient[A](f: PgWireClient => A): A = {
-      val c = PgWireClient.connect(host, port, user, database, password,
-        sslMode, sslRootCert)
-      try f(c) finally c.close()
-    }
-    withClient(_.exec(
-      s"""CREATE TABLE $scratch (
-         |  external_source TEXT, filename TEXT, path TEXT, mime_type TEXT,
-         |  created TIMESTAMPTZ, modified TIMESTAMPTZ, size BIGINT)"""
-        .stripMargin))
-    try {
-      val colList = scanCols.mkString(", ")
-      // repartition, NOT coalesce — see publishScan: coalesce(2) would
-      // run the whole upstream scan (listing cursors, stats, classify)
-      // inside 2 tasks; the exchange keeps the scan parallel and caps
-      // only the COPY connections (K1, db.rs:28)
-      scan.selectExpr(scanCols: _*).repartition(maxConnections)
-        .foreachPartition { (rows: Iterator[org.apache.spark.sql.Row]) =>
-          if (rows.hasNext) {
-            val c = PgWireClient.connect(host, port, user, database,
-              password, sslMode, sslRootCert)
-            try c.copyIn(s"COPY $scratch ($colList) FROM STDIN",
-              rows.map(r => PgWireClient.copyRow(copyFields(r))))
-            finally c.close()
-            ()
-          }
-        }
-      withClient { c =>
-        try {
-          c.exec("BEGIN")
-          // named-constraint target, verbatim statement templates
-          c.exec(upsertSql(scratch))
-          // J2 with a REAL bind: the extended protocol carries the
-          // source as $1 — sqlx parity, and injection-proof by type
-          c.execBound(markDeletedSqlWire(scratch), Seq(Some(externalSource)))
-          c.exec(s"DROP TABLE $scratch")
-          c.exec("COMMIT")
-        } catch {
-          case e: Throwable =>
-            try c.exec("ROLLBACK")
-            catch { case NonFatal(r) => e.addSuppressed(r) }
-            throw e
-        }
-      }
-    } catch {
-      case e: Throwable =>
-        // the scratch outlives a failed transaction (it was created and
-        // COPY'd outside it) — drop it so a retry never reads stale rows
-        try withClient(_.exec(s"DROP TABLE IF EXISTS $scratch"))
-        catch { case NonFatal(d) => e.addSuppressed(d) }
-        throw e
-    }
-  }
+      sslRootCert: Option[String] = None): Unit =
+    scan.selectExpr(scanCols: _*).write.format("graft-pg")
+      .options(wireOptions(host, port, database, user, password, sslMode,
+        sslRootCert))
+      .option("source", externalSource)
+      .option("maxConnections", maxConnections.toLong)
+      .mode("append")
+      .save()
 }

@@ -5,6 +5,8 @@ import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream,
 import java.net.{InetSocketAddress, Socket}
 import java.nio.charset.StandardCharsets.UTF_8
 
+import scala.util.control.NonFatal
+
 /** Minimal PostgreSQL frontend/backend protocol (v3) client — the wire
   * path the reference drives through tokio-postgres (`db.rs:26-32`),
   * re-implemented from the PUBLIC protocol documentation
@@ -47,7 +49,7 @@ import java.nio.charset.StandardCharsets.UTF_8
   *    instead of leaving the backend to notice the dead socket.
   *
   * Threading: one client per connection, no sharing — executors each open
-  * their own (capped by the caller, [[PgMerge.publishScanWire]]).
+  * their own (capped by the `graft-pg` write's `maxConnections`).
   * Liveness: a 60 s SO_TIMEOUT covers connect/TLS/auth (a hung or
   * half-open server fails the task instead of blocking it forever,
   * ADVICE r14); established sessions read untimed — result gaps are
@@ -77,7 +79,7 @@ final class PgWireClient(host: String, port: Int, user: String,
   private val sock: Socket =
     try { if (sslMode == "disable") plain else negotiateTls() }
     catch { case e: Throwable =>
-      try plain.close() catch { case _: Throwable => () }
+      try plain.close() catch { case NonFatal(_) => () }
       throw e
     }
 
@@ -107,7 +109,7 @@ final class PgWireClient(host: String, port: Int, user: String,
   // constructor throws before the caller ever holds a closeable ref
   try { startup(); plain.setSoTimeout(0) }
   catch { case e: Throwable =>
-    try sock.close() catch { case _: Throwable => () }
+    try sock.close() catch { case NonFatal(_) => () }
     throw e
   }
   PgWireClient.register()
@@ -730,7 +732,7 @@ final class PgWireClient(host: String, port: Int, user: String,
         out.flush()
         drain()
         ()
-      } catch { case _: Throwable => () }
+      } catch { case NonFatal(_) => () }
     }
   }
 
@@ -836,8 +838,8 @@ final class PgWireClient(host: String, port: Int, user: String,
       o.flush()
       ch.getInputStream.read() // server replies with EOF once processed
       ()
-    } catch { case _: Throwable => () }
-    finally { try s.close() catch { case _: Throwable => () } }
+    } catch { case NonFatal(_) => () }
+    finally { try s.close() catch { case NonFatal(_) => () } }
   }
 
   /** [[cancel]] only when a statement cycle is actually in flight — the
@@ -850,9 +852,9 @@ final class PgWireClient(host: String, port: Int, user: String,
     try {
       send('X', Array.emptyByteArray) // Terminate
       out.flush()
-    } catch { case _: Throwable => () }
-    try sock.close() catch { case _: Throwable => () }
-    try plain.close() catch { case _: Throwable => () }
+    } catch { case NonFatal(_) => () }
+    try sock.close() catch { case NonFatal(_) => () }
+    try plain.close() catch { case NonFatal(_) => () }
     if (!closed) { closed = true; PgWireClient.unregister() }
   }
 }

@@ -84,11 +84,11 @@ class PgWireSource extends TableProvider with DataSourceRegister {
 }
 
 /** One resolved connection target for the table's partitions. */
-private[v2] case class PgConnInfo(host: String, port: Int, database: String,
+private[graft] case class PgConnInfo(host: String, port: Int, database: String,
     user: String, password: Option[String], sslMode: String,
     sslRootCert: Option[String])
 
-private[v2] object PgConnInfo {
+private[graft] object PgConnInfo {
   def merged(base: CaseInsensitiveStringMap,
       opts: CaseInsensitiveStringMap): Map[String, String] =
     (base.asCaseSensitiveMap().asScala ++
@@ -154,14 +154,8 @@ private[v2] class PgWireTable(options: CaseInsensitiveStringMap)
     util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.BATCH_WRITE,
       TableCapability.MICRO_BATCH_READ)
 
-  private def mergedOpts(opts: CaseInsensitiveStringMap)
-      : Map[String, String] = PgConnInfo.merged(options, opts)
-
-  private def connOf(merged: Map[String, String]): PgConnInfo =
-    PgConnInfo.resolve(merged)
-
   override def newScanBuilder(opts: CaseInsensitiveStringMap): ScanBuilder = {
-    val merged = mergedOpts(opts)
+    val merged = PgConnInfo.merged(options, opts)
     val partitions = merged.get("partitions").map(_.toInt).getOrElse(16)
     require(partitions >= 1, s"graft-pg: partitions must be >= 1")
     // shard split strategy: `ctid` = physical block ranges (TID Range
@@ -180,26 +174,26 @@ private[v2] class PgWireTable(options: CaseInsensitiveStringMap)
         s"graft-pg: malformed snapshot name '$s'")
       s
     }
-    new PgWireScanBuilder(connOf(merged), partitions, shardMode, snapshot)
+    new PgWireScanBuilder(PgConnInfo.resolve(merged), partitions, shardMode,
+      snapshot)
   }
 
   /** `df.write.format("graft-pg").option("url", …).option("source", s)
     * .mode("append").save()` — NOT a plain row append: the write IS the
-    * reference's transactional scan publish ([[PgMerge.publishScanWire]]
-    * as a planner-integrated sink). Executor [[DataWriter]]s COPY their
-    * partitions into a per-write scratch table, each inside its OWN
+    * reference's transactional scan publish, and the one wire publish
+    * ([[PgMerge.publishScanWire]] is a call into it). Executor
+    * [[DataWriter]]s COPY their partitions into a per-write scratch
+    * table, each inside its OWN
     * transaction (a retried/speculative task attempt ROLLS BACK, so
     * only committed attempts stage rows); the driver's
-    * `BatchWrite.commit` then runs the single merge transaction —
-    * upsert of the changed rows (J3, named-constraint ON CONFLICT
-    * verbatim) → tombstone of this source's vanished keys (J2,
-    * `$1`-bound) → DROP → COMMIT — and `abort` drops the scratch. The
+    * `BatchWrite.commit` then runs the single merge transaction
+    * ([[PgMerge.mergeWire]]) and `abort` drops the scratch. The
     * K1 connection budget (`db.rs:28` pools 2) is enforced at the PLAN
     * level:
     * `RequiresDistributionAndOrdering.requiredNumPartitions` repartitions
     * the input to `maxConnections` (option, default 2). */
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
-    val merged = mergedOpts(info.options())
+    val merged = PgConnInfo.merged(options, info.options())
     val source = merged.getOrElse("source",
       throw new IllegalArgumentException("graft-pg write: the 'source' " +
         "option names the scan's external_source (the tombstone sweep " +
@@ -225,7 +219,7 @@ private[v2] class PgWireTable(options: CaseInsensitiveStringMap)
           s"expected $expected")
       i
     }
-    val conn = connOf(merged)
+    val conn = PgConnInfo.resolve(merged)
     new WriteBuilder {
       override def build(): Write =
         new PgWireWrite(conn, source, fieldIdx, maxConnections)
@@ -581,7 +575,7 @@ private[v2] class PgWireScan(conn: PgConnInfo, predSqls: Seq[String],
   private def fetchShape(): Either[Throwable, PgMerge.TableShape] =
     try Right(PgMerge.fetchTableShape(conn.host, conn.port, conn.user,
       conn.database, conn.password, conn.sslMode, conn.sslRootCert))
-    catch { case e: Throwable => Left(e) }
+    catch { case NonFatal(e) => Left(e) }
 
   // ONE catalog row per batch scan, shared by estimateStatistics and
   // planInputPartitions (a batch query pays one extra connection, not
@@ -824,39 +818,21 @@ private[v2] class PgWireBatchWrite(conn: PgConnInfo, source: String,
     new PgWireWriterFactory(conn, scratch, fieldIdx)
   }
 
-  /** The single merge transaction (K2): upsert of the changed rows (J3)
-    * → tombstone (J2, `$1`-bound) → DROP → COMMIT, with ROLLBACK +
-    * scratch cleanup on failure — [[PgMerge.publishScanWire]]'s epilogue
-    * verbatim. A failing cleanup is attached to the original error as
-    * suppressed, never thrown in its place. */
+  /** The single merge transaction (K2), rolled back on failure. */
   override def commit(messages: Array[WriterCommitMessage]): Unit =
-    try withClient { c =>
-      try {
-        c.exec("BEGIN")
-        c.exec(PgMerge.upsertSql(scratch))
-        c.execBound(PgMerge.markDeletedSqlWire(scratch), Seq(Some(source)))
-        c.exec(s"DROP TABLE $scratch")
-        c.exec("COMMIT")
-      } catch {
-        case e: Throwable =>
-          try c.exec("ROLLBACK")
-          catch { case NonFatal(r) => e.addSuppressed(r) }
-          throw e
-      }
-    } catch {
-      case e: Throwable =>
-        dropScratch().foreach(e.addSuppressed)
-        throw e
-    }
+    withClient(PgMerge.mergeWire(_, scratch, source))
 
+  /** The one scratch cleanup of a failed publish: Spark calls `abort`
+    * after a failed job AND after a failed [[commit]], then rethrows the
+    * failure's own error. Best-effort: a non-fatal failure to drop is
+    * reported, not thrown, so it never replaces that error. */
   override def abort(messages: Array[WriterCommitMessage]): Unit =
-    dropScratch()
-
-  /** Best-effort drop of the scratch table: a non-fatal failure is
-    * returned, a fatal one propagates. */
-  private def dropScratch(): Option[Throwable] =
-    try { withClient(_.exec(s"DROP TABLE IF EXISTS $scratch")); None }
-    catch { case NonFatal(e) => Some(e) }
+    try { withClient(_.exec(s"DROP TABLE IF EXISTS $scratch")); () }
+    catch {
+      case NonFatal(e) =>
+        System.err.println(s"graft-pg: scratch table $scratch was not " +
+          s"dropped: $e")
+    }
 }
 
 private[v2] class PgWireWriterFactory(conn: PgConnInfo, scratch: String,

@@ -10,7 +10,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * that no shipped file reaches into, and every Spark session is built
   * by [[Sessions]], so the confs all entry points share cannot drift
   * apart again. Query and stream builders read parquet only through
-  * [[Tables]], so none brings back Spark's schema-inference job. */
+  * [[Tables]], so none brings back Spark's schema-inference job. The
+  * wire transport to PostgreSQL stages and merges in one place: the
+  * `graft-pg` table, whose commit runs `PgMerge.mergeWire`. */
 class LayoutSpec extends AnyFunSuite {
   private val root = Paths.get("src/main/scala")
 
@@ -64,5 +66,40 @@ class LayoutSpec extends AnyFunSuite {
       assert(batchRead.findFirstIn(src).isDefined, src)
     }
     assert(batchRead.findFirstIn("s.readStream.schema(x).parquet(dir)").isEmpty)
+  }
+
+  test("the wire publish and read exist once, in the graft-pg table") {
+    def count(re: scala.util.matching.Regex): Map[String, Int] =
+      sources.map { case (f, src) => f -> re.findAllMatchIn(src).size }
+        .filter(_._2 > 0).toMap
+    // PgMerge's wire calls go through the table: no Spark job, RDD or
+    // COPY channel of their own
+    val ownJob =
+      raw"\b(foreachPartition|mapPartitions\w*|parallelize|copyIn\w*|copyOut)\b".r
+    val merge = sources.collectFirst {
+      case ("graft/sinks/PgMerge.scala", src) => src
+    }
+    assert(merge.nonEmpty)
+    assert(ownJob.findAllIn(merge.get).isEmpty,
+      s"PgMerge runs a job or COPY of its own: ${ownJob.findAllIn(merge.get).toSeq}")
+    // a COPY staging statement is a string literal ending FROM STDIN
+    val staging = "FROM STDIN\"".r
+    assert(count(staging) == Map("graft/sources/v2/PgWireSource.scala" -> 1))
+    // the upsert runs over the wire at one call site, the epilogue's,
+    // and the epilogue's one caller is the table's commit
+    val wireUpsert = raw"\.exec\(\s*(PgMerge\.)?upsertSql\(".r
+    assert(count(wireUpsert) == Map("graft/sinks/PgMerge.scala" -> 1))
+    assert(count(raw"\bmergeWire\(".r) == Map(
+      "graft/sinks/PgMerge.scala" -> 1, // the definition
+      "graft/sources/v2/PgWireSource.scala" -> 1))
+    // the guards see the forms they name
+    Seq("rows.foreachPartition { it =>", "sc.parallelize(0 until n, n)",
+        "c.copyInStart(sql)", "c.copyOut(shardCopySql(preds))").foreach { src =>
+      assert(ownJob.findFirstIn(src).isDefined, src)
+    }
+    assert(staging.findFirstIn("c.copyIn(s\"COPY $scratch ($cols) FROM STDIN\",")
+      .isDefined)
+    assert(wireUpsert.findFirstIn("c.exec(PgMerge.upsertSql(scratch))").isDefined)
+    assert(wireUpsert.findFirstIn("st.execute(upsertSql(scratch, t))").isEmpty)
   }
 }

@@ -4,13 +4,15 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.prop.TableDrivenPropertyChecks
 
 import graft.sinks.PgMerge
-import graft.sources.v2.PgFilterSql
+import graft.sources.v2.{PgConnInfo, PgFilterSql}
 
 /** OFFLINE coverage for the `graft-pg` planning pieces that need no
   * server: the ctid block-range carving (pure function behind VERDICT
   * r15 #1 — the live 8.0× heap-block measurement rides on these
   * boundaries being airtight) and the filter→remote-SQL whitelist
-  * shared by plan-time pushdown and runtime (DPP) filtering. The
+  * shared by plan-time pushdown and runtime (DPP) filtering, and the
+  * options through which `publishScanWire`/`readCurrentWire` address the
+  * table. The
   * PG-less CI path would otherwise skip every shard-planning property
   * behind `assume(live)`. */
 class PgShardPlanSpec extends AnyFunSuite with TableDrivenPropertyChecks {
@@ -217,5 +219,40 @@ class PgShardPlanSpec extends AnyFunSuite with TableDrivenPropertyChecks {
     // type/column mismatches refuse rather than coerce
     assert(sql(EqualTo("size", "42")).isEmpty)
     assert(sql(EqualTo("path", 42L)).isEmpty)
+  }
+
+  test("publishScanWire/readCurrentWire options resolve to exactly the " +
+      "target they were given: IPv6 literal, password with @ : %, no " +
+      "password, verify-ca with a root cert") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.util.CaseInsensitiveStringMap
+    // the path the table takes: DataFrame options are case-insensitive,
+    // merged, then resolved
+    def resolved(host: String, port: Int, db: String, user: String,
+        password: Option[String], sslMode: String,
+        sslRootCert: Option[String]): PgConnInfo =
+      PgConnInfo.resolve(PgConnInfo.merged(
+        new CaseInsensitiveStringMap(PgMerge.wireOptions(host, port, db,
+          user, password, sslMode, sslRootCert).asJava),
+        CaseInsensitiveStringMap.empty()))
+    // with no password the table's credential chain reads PGPASSWORD
+    val envPassword = sys.env.get("PGPASSWORD").filter(_.nonEmpty)
+    val targets = Table(
+      ("host", "port", "db", "user", "password", "sslMode", "sslRootCert"),
+      ("::1", 5432, "postgres", "postgres", Some("pw"), "disable", None),
+      ("2001:db8::7", 6543, "my db?#%", "bob", None, "prefer", None),
+      ("127.0.0.1", 54329, "postgres", "graft_scram",
+        Some("p@ss:w%rd/?#&="), "require", None),
+      ("db.example.com", 5432, "analytics", "reader", None, "verify-ca",
+        Some("/etc/ssl/root ca.pem")),
+      ("::1", 5432, "postgres", "u", Some("@:%"), "verify-ca",
+        Some("/tmp/a&b=c%20.pem")),
+      ("localhost", 5432, "postgres", "postgres", Some(""),
+        "verify-full", Some("root.pem")))
+    forAll(targets) { (host, port, db, user, password, sslMode, root) =>
+      assert(resolved(host, port, db, user, password, sslMode, root) ==
+        PgConnInfo(host, port, db, user, password.orElse(envPassword),
+          sslMode, root))
+    }
   }
 }
