@@ -2,6 +2,7 @@ package graft
 
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
+import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -617,9 +618,9 @@ object Main {
           // ever claiming it (review r18); best-effort, like the
           // seed-failure cleanup below
           try { PgChangeFeed.dropSlot(opts); () }
-          catch { case _: Throwable => () }
+          catch { case NonFatal(_) => () }
           try { lockFs.delete(lockPath, false); () }
-          catch { case _: Throwable => () }
+          catch { case NonFatal(_) => () }
           throw e
         }
       try {
@@ -655,12 +656,12 @@ object Main {
         // — no marker claims it yet, and leaving it would retain WAL
         // forever; best-effort (the failure may BE the lost server)
         try { h.close(); PgChangeFeed.dropSlot(opts) }
-        catch { case _: Throwable => () }
+        catch { case NonFatal(_) => () }
         throw e
       } finally {
         h.close()
         try { lockFs.delete(lockPath, false); () }
-        catch { case _: Throwable => () }
+        catch { case NonFatal(_) => () }
       }
     } else
       require(PgChangeFeed.slotExists(opts),
@@ -716,11 +717,11 @@ object Main {
                       "slots)")
                 } else walNotes.reset()
             }
-          } catch { case e: Throwable =>
+          } catch { case NonFatal(e) =>
             try {
               val m = monitor.getAndSet(null)
               if (m != null) m.close()
-            } catch { case _: Throwable => () }
+            } catch { case NonFatal(_) => () }
             println(s"note — retained-WAL check failed (monitor only, " +
               s"watch continues): ${e.getMessage}")
           }
@@ -755,7 +756,7 @@ object Main {
       try {
         val m = monitor.getAndSet(null)
         if (m != null) m.close()
-      } catch { case _: Throwable => () }
+      } catch { case NonFatal(_) => () }
     }
     entries.foreach { case (src, sub) =>
       println(s"$src: ${countEvents(spark, eventsDir(sub))} " +
@@ -869,7 +870,7 @@ object Main {
       else {
         val failures = sources.flatMap { src =>
           try { compactOne(spark, outDir, src, rebuildState); None }
-          catch { case scala.util.control.NonFatal(e) =>
+          catch { case NonFatal(e) =>
             System.err.println(s"$src: compact failed — " +
               s"${e.getClass.getSimpleName}: ${e.getMessage}")
             Some(src -> e)

@@ -119,9 +119,12 @@ object Mime {
     when(e.isNotNull, element_at(typedlit(byExt), e))
   }
 
-  /** Scala-side lookup for use outside a plan (e.g. listing enrichment). */
+  /** Scala-side lookup for use outside a plan (the listing readers' rows).
+    * Lower-cases like Spark's `lower`, independent of the JVM's default
+    * locale, so it returns what [[mimeOf]] returns for every name. */
   def lookup(filename: String): Option[String] = {
     val i = filename.lastIndexOf('.')
-    if (i < 0) None else byExt.get(filename.substring(i + 1).toLowerCase)
+    if (i < 0) None
+    else byExt.get(filename.substring(i + 1).toLowerCase(java.util.Locale.ROOT))
   }
 }

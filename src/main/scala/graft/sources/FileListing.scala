@@ -1,46 +1,28 @@
 package graft.sources
 
-import java.sql.Timestamp
-
 import scala.collection.mutable
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions._
 
-import graft.functions.Mime
-
-/** One file-metadata record — the reference's single row type
-  * (`/root/reference/src/db.rs:10-18`). `path` is the parent directory,
-  * `filename` the basename (`fs.rs:51-52`); `created` is absent on S3
-  * (`s3.rs:123`) and on HDFS-like filesystems; `size` is nullable because
-  * the reference narrows u64→i64 with overflow→NULL (`db.rs:85`).
-  */
-case class FileInfo(
-    external_source: String,
-    path: String,
-    filename: String,
-    mime_type: Option[String],
-    created: Option[Timestamp],
-    modified: Timestamp,
-    size: Option[Long])
-
-/** Distributed metadata listing — the Spark-native form of the reference's
-  * two scan sources (`fs.rs:98-101` WalkDir, `s3.rs:87-100,136-150`
-  * ListObjectsV2 pagination).
+/** The listing helpers the reference's two scan sources share
+  * (`fs.rs:98-101` WalkDir, `s3.rs:87-100,136-150` ListObjectsV2
+  * pagination) — URL parsing, client config, the scan identifier and the
+  * driver's breadth-first shard split. The listing itself is one
+  * DataSource V2 table per store: `graft-files`
+  * ([[graft.sources.v2.FilesSource]]) over the Hadoop FS API and
+  * `graft-s3` ([[graft.sources.v2.S3WireSource]]) over the REST protocol.
   *
   * Scale design: the reference lists sequentially (one in-flight S3 page,
   * one directory walker). Here the driver expands the namespace breadth-
-  * first only until it has enough shards to feed the cluster, then each
-  * task recursively lists its shard via the Hadoop FS API
-  * (`listFiles(recursive=true)`, which on s3a is ListObjectsV2 pagination
-  * under a prefix — the same prefix-pushdown as `s3.rs:91-92`, but with
-  * hundreds of prefixes in flight instead of one). A 100 TB bucket lists
-  * at aggregate-API throughput instead of single-cursor throughput.
-  *
-  * `file://` and `s3a://` are uniform through the Hadoop FS abstraction —
-  * the reference's scheme dispatch (`main.rs:72-81`) reduces to URI parsing.
+  * first only until it has enough shards to feed the cluster
+  * ([[shardRoots]]), then each task recursively lists its shard via the
+  * Hadoop FS API (`listFiles(recursive=true)`, which on s3a is
+  * ListObjectsV2 pagination under a prefix — the same prefix-pushdown as
+  * `s3.rs:91-92`, but with hundreds of prefixes in flight instead of
+  * one). `file://` and `s3a://` are uniform through the Hadoop FS
+  * abstraction — the reference's scheme dispatch (`main.rs:72-81`)
+  * reduces to URI parsing.
   */
 object FileListing {
 
@@ -164,23 +146,10 @@ object FileListing {
     * real failure (review r19: S3A-style connectors can throw UNCHECKED
     * exceptions from close on an already-shut pool — catching only
     * IOException let those replace the original listing error). ONE
-    * copy for every newInstance site, here and in the V2 source. */
+    * copy for every newInstance site of the V2 source. */
   private[sources] def closeQuietly(
       fs: org.apache.hadoop.fs.FileSystem): Unit =
     try fs.close() catch { case scala.util.control.NonFatal(_) => () }
-
-  /** Driver-side shard planning over a FRESH FileSystem instance —
-    * `newInstance`, never the JVM-wide cache, which keys on (scheme,
-    * authority, ugi) and NOT conf (VERDICT r18 missing#4): a cached
-    * driver instance carrying stale credentials from an earlier job in
-    * the same JVM would silently win over this scan's resolved conf.
-    * The instance is closed once planning finishes. */
-  private def planRoots(spark: SparkSession, root: Path,
-      hconf: Configuration): (Seq[String], Seq[FileInfoRaw]) = {
-    val fs = FileSystem.newInstance(root.toUri, hconf)
-    try shardRoots(fs, root, spark.sparkContext.defaultParallelism * 4)
-    finally closeQuietly(fs)
-  }
 
   /** Every entry of the RESOLVED driver conf, serialized for executor
     * rebuild (review r18): the executor closures used to rebuild from
@@ -193,166 +162,5 @@ object FileListing {
       hconf: Configuration): Seq[(String, String)] = {
     import scala.jdk.CollectionConverters._
     hconf.iterator().asScala.map(e => e.getKey -> e.getValue).toSeq
-  }
-
-  /** One shard's executor-side listing — the single copy of the
-    * rebuild-conf + recursive-listFiles loop both [[list]] and
-    * [[listDF]] ship (review r18: it was duplicated verbatim, which is
-    * how the conf-propagation bug above would have needed fixing
-    * twice). `entries` arrives as a BROADCAST (ADVICE r18: the resolved
-    * conf is 1000+ entries including credential values — inlining it in
-    * every task closure re-serialized it per task on wide shard lists;
-    * one broadcast ships it once per executor).
-    *
-    * The filesystem comes from `FileSystem.newInstance`, NOT the JVM-
-    * wide cache (VERDICT r18 missing#4): the cache keys on (scheme,
-    * authority, ugi) — never conf — so on a long-lived executor a
-    * previously-cached instance with DIFFERENT credentials silently won
-    * over the conf this task just rebuilt, re-opening a cousin of the
-    * r18 executor-conf bug for mixed-credential clusters. A fresh
-    * instance always honors the shipped conf; it is closed after the
-    * walk so instances never accumulate across tasks (construction cost
-    * is noise next to the shard's listing RPCs — ListingSpec pins that
-    * a wrong-credential cached instance cannot poison the listing). */
-  private def listShardTask(
-      entries: org.apache.spark.broadcast.Broadcast[Seq[(String, String)]])(
-      dir: String): Iterator[FileInfoRaw] = {
-    val c = new Configuration()
-    entries.value.foreach { case (k, v) => c.set(k, v) }
-    val p = new Path(dir)
-    val pfs = FileSystem.newInstance(p.toUri, c)
-    try {
-      val out = mutable.ArrayBuffer.empty[FileInfoRaw]
-      val files = pfs.listFiles(p, true)
-      while (files.hasNext) out += raw(files.next())
-      out.iterator
-    } finally closeQuietly(pfs)
-  }
-
-  /** Recursive, distributed listing of `rootUri` → `Dataset[FileInfo]`.
-    *
-    * @param extraConf Hadoop conf overrides (e.g. `fs.s3a.endpoint`,
-    *   `fs.s3a.path.style.access` — the reference's env-var client config,
-    *   `s3.rs:24-49`, expressed as S3A properties).
-    */
-  def list(
-      spark: SparkSession,
-      rootUri: String,
-      identifier: Option[String] = None,
-      extraConf: Map[String, String] = Map.empty): Dataset[FileInfo] = {
-    import spark.implicits._
-    val source = identifierFor(rootUri, identifier)
-    // env-derived AWS client config first; explicit extraConf wins (S7)
-    val confMap = awsEnvToS3aConf(sys.env) ++ extraConf
-    val hconf = new Configuration(spark.sparkContext.hadoopConfiguration)
-    confMap.foreach { case (k, v) => hconf.set(k, v) } // rebuilt executor-side
-    val root = new Path(rootUri)
-    val (shards, earlyFiles) = planRoots(spark, root, hconf)
-
-    val shardRows: Seq[FileInfoRaw] =
-      if (shards.isEmpty) Seq.empty
-      else {
-        val entries = spark.sparkContext.broadcast(confEntries(hconf))
-        spark.sparkContext
-          .parallelize(shards, math.max(1, shards.size))
-          .mapPartitions(_.flatMap(listShardTask(entries)))
-          .collect()
-          .toSeq
-      }
-    // Note: shard listing results flow back through the driver only in this
-    // assembled-Dataset form for small scans; `listDF` below keeps the whole
-    // flow distributed for large ones.
-    toFileInfo(spark, source, earlyFiles ++ shardRows)
-  }
-
-  /** Fully-distributed variant: the shard→rows expansion stays on executors
-    * and feeds a DataFrame directly (no driver collect). Preferred at scale.
-    */
-  def listDF(
-      spark: SparkSession,
-      rootUri: String,
-      identifier: Option[String] = None,
-      extraConf: Map[String, String] = Map.empty): DataFrame = {
-    import spark.implicits._
-    val source = identifierFor(rootUri, identifier)
-    val confMap = awsEnvToS3aConf(sys.env) ++ extraConf
-    val hconf = new Configuration(spark.sparkContext.hadoopConfiguration)
-    confMap.foreach { case (k, v) => hconf.set(k, v) }
-    val root = new Path(rootUri)
-    val (shards, earlyFiles) = planRoots(spark, root, hconf)
-    val early = toFileInfo(spark, source, earlyFiles).toDF()
-    if (shards.isEmpty) early
-    else {
-      val entries = spark.sparkContext.broadcast(confEntries(hconf))
-      val listed = spark.sparkContext
-        .parallelize(shards, math.max(1, shards.size))
-        .mapPartitions(_.flatMap(listShardTask(entries)))
-        .toDF()
-        .transform(df => enrichRaw(source)(df))
-      early.unionByName(listed)
-    }
-  }
-
-  /** Listing via Spark's `binaryFile` source (the alternative S1/S4
-    * mapping): the source exposes `path`, `modificationTime`, `length`
-    * metadata columns; selecting only them prunes the `content` column so
-    * no file bytes are read. Glob patterns push into the file index.
-    * Prefer [[listDF]] for huge flat namespaces (shard control); this
-    * form wins when a downstream step will also want `content`.
-    *
-    * Documented deltas vs [[listDF]] (review r18): Spark's file index
-    * FILTERS hidden files (basenames starting '.' or '_') that listDF
-    * and the reference's WalkDir include, and `created` stays NULL even
-    * on `file://`. Do NOT alternate this variant with [[listDF]]
-    * against one merge state — the missing rows would tombstone as
-    * deletions; it exists for content workflows reading `content`. */
-  def listBinaryFile(
-      spark: SparkSession,
-      globUri: String,
-      identifier: Option[String] = None): DataFrame = {
-    val source = identifierFor(globUri, identifier)
-    val raw = spark.read.format("binaryFile")
-      .option("recursiveFileLookup", "true").load(globUri)
-      .select(col("path"), col("modificationTime"), col("length"))
-    // strip scheme AND authority (review r18): `s3a://bucket/a/b.txt`
-    // must yield path `/a` like listDF and S3Wire.splitKey, not
-    // `/bucket/a` — a different merge identity for the same object.
-    // Local URIs render authority-less as `file:/tmp/…` (one slash) —
-    // the authority group is optional
-    val noScheme =
-      regexp_replace(col("path"), "^[a-z0-9+.-]+:(//[^/]*)?", "")
-    val fname = substring_index(noScheme, "/", -1)
-    val dir = regexp_replace(noScheme, "/[^/]*$", "")
-    raw.select(
-      lit(source).as("external_source"),
-      dir.as("path"),
-      fname.as("filename"),
-      Mime.mimeOf(fname).as("mime_type"),
-      lit(null).cast("timestamp").as("created"),
-      col("modificationTime").as("modified"),
-      col("length").as("size"))
-  }
-
-  /** P3/P5/P7 as plan-level expressions over the raw listing (P1/P2 split
-    * already happened at capture). */
-  private def enrichRaw(source: String)(raw: DataFrame): DataFrame = {
-    raw.select(
-      lit(source).as("external_source"),
-      col("dir").as("path"),
-      col("name").as("filename"),
-      Mime.mimeOf(col("name")).as("mime_type"),
-      timestamp_millis(col("created")).as("created"),
-      timestamp_millis(col("modified")).as("modified"),
-      col("size"))
-  }
-
-  private def toFileInfo(
-      spark: SparkSession, source: String,
-      rows: Seq[FileInfoRaw]): Dataset[FileInfo] = {
-    import spark.implicits._
-    rows.map { r =>
-      FileInfo(source, r.dir, r.name, Mime.lookup(r.name),
-        r.created.map(new Timestamp(_)), new Timestamp(r.modified), Some(r.size))
-    }.toDS()
   }
 }

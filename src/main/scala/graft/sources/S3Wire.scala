@@ -7,6 +7,8 @@ import javax.crypto.Mac
 import javax.crypto.spec.SecretKeySpec
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
+import org.apache.spark.sql.graftshim.ColumnShim
 
 /** Driverless S3 listing over the PUBLIC REST protocol — the transport
   * the reference drives through the rust-s3 crate (`s3.rs:87-150`),
@@ -29,11 +31,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * `AWS_ENDPOINT_URL`, `AWS_REGION`, `AWS_S3_FORCE_PATH_STYLE`,
   * `AWS_ACCESS_KEY_ID`/`AWS_SECRET_ACCESS_KEY`.
   *
-  * Scale shape ([[listDF]]): ONE driver-side delimiter page discovers
-  * top-level common prefixes; each executor task then paginates its own
-  * prefix — hundreds of list cursors in flight instead of the
-  * reference's one. Listing streams page→rows; nothing holds a bucket
-  * in memory.
+  * Scale shape ([[listDF]]): the driver-side planner ([[planShards]])
+  * splits the namespace into prefix and key-range cursors; each executor
+  * task of the `graft-s3` table ([[graft.sources.v2.S3WireSource]], the
+  * one distributed listing path) then paginates its own cursor —
+  * hundreds of list cursors in flight instead of the reference's one.
+  * Listing streams page→rows; nothing holds a bucket in memory.
   */
 object S3Wire extends Serializable {
 
@@ -740,48 +743,25 @@ object S3Wire extends Serializable {
     if (i < 0) ("", key) else ("/" + key.substring(0, i), key.substring(i + 1))
   }
 
-  /** Distributed listing → the engine's scan frame (same columns as
-    * [[FileListing.listDF]]; `created` is always NULL on S3,
-    * `s3.rs:123`). [[planShards]] splits the namespace RECURSIVELY
-    * (bounded depth/fan-out) so a skewed namespace — one hot prefix
-    * holding ~everything — still fans out across executor cursors;
-    * pre-listed objects ride maxKeys-sized row partitions, leaf
-    * prefixes paginate one executor cursor each. */
+  /** Distributed listing → the engine's scan frame, read through the
+    * `graft-s3` table (columns [[graft.sources.v2.FilesSource.SCHEMA]];
+    * `created` is always NULL on S3, `s3.rs:123`). [[planShards]] runs
+    * here, on the driver, when `listDF` is called: it splits the
+    * namespace RECURSIVELY (bounded depth/fan-out) so a skewed
+    * namespace — one hot prefix holding ~everything — still fans out
+    * across executor cursors. The frame carries that plan: each time it
+    * runs, pre-listed objects ride maxKeys-sized row partitions and each
+    * leaf prefix paginates one executor cursor. A `path` filter that
+    * narrows the prefix plans the narrower prefix afresh instead (see
+    * [[graft.sources.v2.S3WireScanBuilder]]). */
   def listDF(spark: SparkSession, conf: S3Conf, bucketName: String,
       prefix: String, identifier: Option[String] = None,
       maxKeys: Int = 1000, maxDepth: Int = 2): DataFrame = {
-    import org.apache.spark.sql.functions.{col, lit, timestamp_millis}
-    import spark.implicits._
-    val source = identifier.getOrElse(
-      "s3://" + bucketName + (if (prefix.isEmpty) "" else s"/$prefix"))
+    val url = "s3://" + bucketName + (if (prefix.isEmpty) "" else s"/$prefix")
+    val listing = v2.S3Listing(conf, bucketName, prefix,
+      identifier.getOrElse(url), maxKeys, maxDepth)
     val plan = planShards(conf, bucketName, prefix, maxKeys, maxDepth)
-    def row(o: S3Object): (String, String, Long, Long) = {
-      val (dir, name) = splitKey(o.key)
-      (dir, name, o.modifiedMs, o.size)
-    }
-    val chunks = chunkPreListed(plan.preListed, maxKeys)
-    val preDf =
-      if (chunks.isEmpty)
-        Seq.empty[(String, String, Long, Long)]
-          .toDF("path", "filename", "mod", "size")
-      else spark.sparkContext
-        .parallelize(chunks, chunks.size)
-        .flatMap(_.iterator.map(row))
-        .toDF("path", "filename", "mod", "size")
-    val prefixDf =
-      if (plan.leaves.isEmpty)
-        Seq.empty[(String, String, Long, Long)]
-          .toDF("path", "filename", "mod", "size")
-      else spark.sparkContext
-        .parallelize(plan.leaves, plan.leaves.size)
-        .flatMap(s => listShard(conf, bucketName, s, maxKeys).map(row))
-        .toDF("path", "filename", "mod", "size")
-    preDf.unionByName(prefixDf).select(
-      lit(source).as("external_source"),
-      col("path"), col("filename"),
-      graft.functions.Mime.mimeOf(col("filename")).as("mime_type"),
-      lit(null).cast("timestamp").as("created"),
-      timestamp_millis(col("mod")).as("modified"),
-      col("size"))
+    ColumnShim.dataFrame(spark, DataSourceV2Relation.create(
+      new v2.S3WireTable(url, _ => listing, Some(plan)), None, None))
   }
 }

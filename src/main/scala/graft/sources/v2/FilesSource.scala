@@ -24,11 +24,12 @@ import graft.sources.FileListing
 /** The reference's scan sources (`/root/reference/src/fs.rs:98-101`
   * WalkDir, `s3.rs:87-150` ListObjectsV2) as a first-class Spark
   * DataSource V2 connector: `spark.read.format("graft-files")
-  * .option("path", root).load()` yields the same seven-column frame as
-  * [[graft.sources.FileListing]], but as a genuine `Table` the planner
-  * can optimize through.
+  * .option("path", root).load()` yields the engine's seven-column scan
+  * frame ([[FilesSource.SCHEMA]]) as a genuine `Table` the planner can
+  * optimize through. It is the one filesystem listing path, as
+  * `graft-s3` is the one S3 REST listing path.
   *
-  * What the connector form buys over the RDD-based listing at 100 TB:
+  * What the connector form buys over a hand-built RDD listing at 100 TB:
   *
   *  - '''Distributed listing''': `planInputPartitions` shards the
   *    namespace driver-side (breadth-first, until ≥ 4×parallelism
@@ -52,8 +53,7 @@ import graft.sources.FileListing
   *    the syscall entirely: a pure-metadata projection lists a 10⁸-file
   *    tree with exactly one stat per file instead of two.
   *
-  * Row semantics are identical to [[FileListing]]: `path` is the parent
-  * directory of the URI path (scheme dropped), `filename` the basename,
+  * Row semantics: `path` is the parent directory of the URI path (scheme dropped), `filename` the basename,
   * root-level objects get `path=""` (the `s3.rs:107-108` panic case),
   * `created` is NULL on non-`file` schemes (`s3.rs:123`).
   */
@@ -70,7 +70,12 @@ class FilesSource extends TableProvider with DataSourceRegister {
 }
 
 object FilesSource {
-  /** Same seven columns as [[graft.sources.FileInfo]]. */
+  /** The reference's single row type (`db.rs:10-18`):
+    * `path` is the parent directory, `filename` the basename
+    * (`fs.rs:51-52`); `created` is absent on S3 (`s3.rs:123`) and on
+    * HDFS-like filesystems; `size` is nullable because the reference
+    * narrows u64→i64 with overflow→NULL (`db.rs:85`). `graft-files` and
+    * `graft-s3` both read with it. */
   val SCHEMA: StructType = StructType(Seq(
     StructField("external_source", StringType, nullable = false),
     StructField("path", StringType, nullable = false),
@@ -107,8 +112,7 @@ private[v2] class FilesTable(options: CaseInsensitiveStringMap)
       (options.asCaseSensitiveMap().asScala ++
         opts.asCaseSensitiveMap().asScala).asJava)
     // env-derived AWS client config first; explicit hadoop.* options win
-    // (same precedence as FileListing.list — the reference's env-var
-    // client config, `s3.rs:24-49`).
+    // (the reference's env-var client config, `s3.rs:24-49`).
     val hadoopOpts = merged.asCaseSensitiveMap().asScala.collect {
       case (k, v) if k.startsWith("hadoop.") => k.stripPrefix("hadoop.") -> v
     }.toMap
@@ -359,7 +363,7 @@ private[graft] class FilesScan(
   /** Planning-time statistics ([[SupportsReportStatistics]]): without
     * them the planner assumes a V2 relation is huge
     * (`spark.sql.defaultSizeInBytes`), so a join against even a tiny
-    * listing shuffles both sides — the RDD path's blind plan. The walk
+    * listing shuffles both sides — an RDD listing's blind plan. The walk
     * is budget-bounded and EXACT-or-absent: count rows surviving the
     * pushed filters until `statsBudget` (option, default 10⁴) files,
     * and if the tree is larger report UNKNOWN rather than extrapolate —
@@ -445,8 +449,7 @@ private[graft] class FilesScan(
   // steady driver churn — but a lazily-frozen one would pin the FIRST
   // batch's credentials forever, breaking session-conf credential
   // rotation on a long-lived daemon while driver planning, which
-  // re-resolves per trigger, picks the new ones up). Parity with
-  // FileListing's r18 executor-conf fix. Change detection is an
+  // re-resolves per trigger, picks the new ones up). Change detection is an
   // order-insensitive MD5 over the sorted entries (ADVICE r19), and
   // the SUPERSEDED broadcast is destroy()ed — non-blocking, AFTER the
   // replacement is published — instead of waiting on ContextCleaner GC
@@ -566,8 +569,8 @@ private[v2] object FilesFilters {
   * travels as a BROADCAST on the reader factory (review r19): the old
   * per-partition `confMap` held only env + `hadoop.*` options — the
   * session `hadoopConfiguration` (the standard `--conf
-  * spark.hadoop.fs.s3a.*` credential channel, fixed for the RDD paths
-  * in r18) never reached the executor rebuild, and serializing the
+  * spark.hadoop.fs.s3a.*` credential channel) never reached the
+  * executor rebuild, and serializing the
   * full resolved conf per partition would re-ship 1000+ entries per
   * task (ADVICE r18). */
 private[v2] case class ShardPartition(dir: String) extends InputPartition

@@ -33,9 +33,11 @@ import graft.sources.S3Wire.S3Conf
   * dominant top-level prefix fans out across executors instead of
   * serializing on a single cursor; pre-listed objects (complete one-page
   * subtrees, direct objects of expanded levels) ride maxKeys-sized row
-  * partitions. No filter pushdown here — the Hadoop-backed `graft-files`
-  * table remains the planner-integrated path when s3a jars exist; this
-  * table is the no-jars transport with the same seven-column frame.
+  * partitions. Only a `path` prefix is pushed (see [[S3WireScanBuilder]])
+  * — the Hadoop-backed `graft-files` table remains the planner-integrated
+  * path when s3a jars exist; this table is the no-jars transport with the
+  * same seven-column frame, and [[graft.sources.S3Wire.listDF]] (the CLI's
+  * `--s3-wire`) reads through it.
   *
   * Connection config resolves like the CLI's `--s3-wire`: the
   * reference's env contract (`s3.rs:24-49`) overlaid by the standard
@@ -50,34 +52,48 @@ class S3WireSource extends TableProvider with DataSourceRegister {
 
   override def getTable(
       schema: StructType, partitioning: Array[Transform],
-      properties: util.Map[String, String]): Table =
-    new S3WireTable(new CaseInsensitiveStringMap(properties))
+      properties: util.Map[String, String]): Table = {
+    val options = new CaseInsensitiveStringMap(properties)
+    val url = Option(options.get("url")).getOrElse(
+      throw new IllegalArgumentException("graft-s3: 'url' option is required"))
+    val (bucket, prefix) = FileListing.parseS3Url(url).getOrElse(
+      throw new IllegalArgumentException(s"graft-s3: not an s3:// url: $url"))
+    new S3WireTable(url, opts => {
+      val merged = (options.asCaseSensitiveMap().asScala ++
+        opts.asCaseSensitiveMap().asScala).map { case (k, v) =>
+        k.toLowerCase -> v
+      }.toMap
+      S3Listing(S3Wire.resolveConf(merged), bucket, prefix,
+        merged.getOrElse("identifier", url),
+        merged.get("maxkeys").map(_.toInt).getOrElse(1000),
+        merged.get("maxdepth").map(_.toInt).getOrElse(2))
+    })
+  }
 }
 
-private[v2] class S3WireTable(options: CaseInsensitiveStringMap)
-    extends Table with SupportsRead {
-  private val url = Option(options.get("url")).getOrElse(
-    throw new IllegalArgumentException("graft-s3: 'url' option is required"))
-  private val (bucket, prefix) = FileListing.parseS3Url(url).getOrElse(
-    throw new IllegalArgumentException(s"graft-s3: not an s3:// url: $url"))
+/** One resolved listing: the connection, the bucket and key prefix, the
+  * `external_source` its rows carry, and the planner's page size and
+  * re-delimit depth. */
+private[sources] final case class S3Listing(conf: S3Conf, bucket: String,
+    prefix: String, source: String, maxKeys: Int, maxDepth: Int)
 
+/** The table behind both surfaces. `spark.read.format("graft-s3")`
+  * resolves its [[S3Listing]] from the table's and the scan's options and
+  * plans at every scan; [[graft.sources.S3Wire.listDF]] passes one fixed
+  * listing and the [[S3Wire.ShardPlan]] it made at the call, so its
+  * frame lists the same leaves each time it runs. */
+private[sources] class S3WireTable(url: String,
+    listing: CaseInsensitiveStringMap => S3Listing,
+    plan: Option[S3Wire.ShardPlan] = None)
+    extends Table with SupportsRead {
   override def name(): String = s"graft-s3:$url"
   override def schema(): StructType = FilesSource.SCHEMA
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(TableCapability.BATCH_READ,
       TableCapability.MICRO_BATCH_READ)
 
-  override def newScanBuilder(opts: CaseInsensitiveStringMap): ScanBuilder = {
-    val merged = (options.asCaseSensitiveMap().asScala ++
-      opts.asCaseSensitiveMap().asScala).map { case (k, v) =>
-      k.toLowerCase -> v
-    }.toMap
-    val conf = S3Wire.resolveConf(merged)
-    val source = merged.getOrElse("identifier", url)
-    val maxKeys = merged.get("maxkeys").map(_.toInt).getOrElse(1000)
-    val maxDepth = merged.get("maxdepth").map(_.toInt).getOrElse(2)
-    new S3WireScanBuilder(conf, bucket, prefix, source, maxKeys, maxDepth)
-  }
+  override def newScanBuilder(opts: CaseInsensitiveStringMap): ScanBuilder =
+    new S3WireScanBuilder(listing(opts), plan)
 }
 
 /** Prefix pushdown for the LISTING (the S3 analog of the `graft-pg`
@@ -90,15 +106,20 @@ private[v2] class S3WireTable(options: CaseInsensitiveStringMap)
   * for Spark to re-apply, so boundary shapes (a root object, a sibling
   * dir sharing the string prefix) stay exact. Incompatible prefixes
   * (filter names a subtree outside the table's url prefix) yield an
-  * EMPTY scan, not a full listing. */
-private[v2] class S3WireScanBuilder(conf: S3Conf, bucket: String,
-    tablePrefix: String, source: String, maxKeys: Int, maxDepth: Int)
+  * EMPTY scan, not a full listing.
+  *
+  * A plan carried from [[graft.sources.S3Wire.listDF]] covers the
+  * table's own prefix only: the scan uses it when no pushed filter
+  * narrows that prefix, and plans the narrowed prefix afresh otherwise,
+  * so the carried plan never lists more or less than the prefix asks. */
+private[v2] class S3WireScanBuilder(listing: S3Listing,
+    plan: Option[S3Wire.ShardPlan])
     extends ScanBuilder
     with org.apache.spark.sql.connector.read.SupportsPushDownFilters {
   import org.apache.spark.sql.sources.{EqualTo, Filter, StringStartsWith}
 
   private var pushed: Array[Filter] = Array.empty
-  private var effective: Option[String] = Some(tablePrefix)
+  private var effective: Option[String] = Some(listing.prefix)
 
   private def candidateOf(f: Filter): Option[String] = f match {
     case StringStartsWith("path", p) if p.startsWith("/") =>
@@ -125,8 +146,8 @@ private[v2] class S3WireScanBuilder(conf: S3Conf, bucket: String,
 
   override def pushedFilters(): Array[Filter] = pushed
 
-  override def build(): Scan =
-    new S3WireScan(conf, bucket, effective, source, maxKeys, maxDepth)
+  override def build(): Scan = new S3WireScan(listing, effective,
+    plan.filter(_ => effective.contains(listing.prefix)))
 }
 
 private[v2] case class S3LeafPartition(conf: S3Conf, bucket: String,
@@ -134,9 +155,9 @@ private[v2] case class S3LeafPartition(conf: S3Conf, bucket: String,
 private[v2] case class S3RootPartition(
     rows: Seq[(String, Long, Long)]) extends InputPartition
 
-private[v2] class S3WireScan(conf: S3Conf, bucket: String,
-    prefix: Option[String], source: String, maxKeys: Int,
-    maxDepth: Int = 2) extends Scan with Batch {
+private[v2] class S3WireScan(listing: S3Listing, prefix: Option[String],
+    plan: Option[S3Wire.ShardPlan]) extends Scan with Batch {
+  import listing.{bucket, conf, maxKeys}
 
   override def readSchema(): StructType = FilesSource.SCHEMA
   override def toBatch: Batch = this
@@ -152,17 +173,18 @@ private[v2] class S3WireScan(conf: S3Conf, bucket: String,
       // recursive bounded shard planning ([[S3Wire.planShards]]): hot
       // prefixes re-delimit into child cursors, pre-listed objects ride
       // maxKeys-sized row partitions (the r13 root-partition split)
-      val plan = S3Wire.planShards(conf, bucket, pre, maxKeys, maxDepth)
+      val shards = plan.getOrElse(
+        S3Wire.planShards(conf, bucket, pre, maxKeys, listing.maxDepth))
       val preParts: Array[InputPartition] =
-        S3Wire.chunkPreListed(plan.preListed, maxKeys)
+        S3Wire.chunkPreListed(shards.preListed, maxKeys)
           .map(chunk => S3RootPartition(chunk.map(o =>
             (o.key, o.modifiedMs, o.size)))).toArray
-      preParts ++ plan.leaves.map(s =>
+      preParts ++ shards.leaves.map(s =>
         S3LeafPartition(conf, bucket, s, maxKeys))
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new S3WireReaderFactory(source)
+    new S3WireReaderFactory(listing.source)
 
   override def toMicroBatchStream(
       checkpointLocation: String): MicroBatchStream =

@@ -5,11 +5,11 @@ import java.nio.file.{Files, Path}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.FileListing
 import graft.sources.v2.FilesSource
 
 /** The DataSource V2 connector (`graft-files`) against a real temp tree:
-  * row parity with [[FileListing]], filter pushdown (plan + semantics +
+  * row parity with a `Files.walk` expectation ([[ScanRows.walk]]), filter
+  * pushdown (plan + semantics +
   * shard pruning), and `created`-column pruning (the stat-syscall
   * elision), observed via the test counter. */
 class FilesSourceSpec extends AnyFunSuite {
@@ -37,13 +37,9 @@ class FilesSourceSpec extends AnyFunSuite {
     .option("path", root.toString).option("identifier", "srcv2").load()
 
   test("row parity with FileListing over the same tree") {
-    val v2 = readV2.collect().map(r =>
-      (r.getString(0), r.getString(1), r.getString(2), Option(r.getString(3)),
-        Option(r.getTimestamp(4)), r.getTimestamp(5), r.getLong(6))).toSet
-    val v1 = FileListing.list(spark, root.toString, Some("srcv2")).collect()
-      .map(f => (f.external_source, f.path, f.filename, f.mime_type,
-        f.created, f.modified, f.size.get)).toSet
-    assert(v2 == v1)
+    val v2 = ScanRows.of(readV2).toSet
+    val walked = ScanRows.walk(root, "srcv2").toSet
+    assert(v2 == walked)
     assert(v2.size == 43) // 2 root + 40 subdir + 1 deep
   }
 
@@ -53,8 +49,8 @@ class FilesSourceSpec extends AnyFunSuite {
     assert(plan.contains("StringEndsWith(filename,.txt)"), plan)
     assert(plan.contains("GreaterThanOrEqual(size,5)"), plan)
     val got = df.select("filename").collect().map(_.getString(0)).toSet
-    val exp = FileListing.list(spark, root.toString, Some("srcv2")).collect()
-      .filter(f => f.filename.endsWith(".txt") && f.size.get >= 5L)
+    val exp = ScanRows.walk(root, "srcv2")
+      .filter(f => f.filename.endsWith(".txt") && f.size >= 5L)
       .map(_.filename).toSet
     assert(got == exp && got.nonEmpty)
   }
@@ -217,14 +213,14 @@ class FilesSourceSpec extends AnyFunSuite {
     assert(plan.contains("PushedAggregation=[count, sum:size, min:size," +
       " max:size, min:modified, max:modified]"), plan)
     val r = agged.collect()(0)
-    // ground truth from the un-aggregated V1 listing
-    val v1 = FileListing.list(spark, root.toString, Some("srcv2")).collect()
-    assert(r.getLong(0) == v1.length.toLong)
-    assert(r.getLong(1) == v1.map(_.size.get).sum)
-    assert(r.getLong(2) == v1.map(_.size.get).min)
-    assert(r.getLong(3) == v1.map(_.size.get).max)
-    assert(r.getTimestamp(4) == v1.map(_.modified).minBy(_.getTime))
-    assert(r.getTimestamp(5) == v1.map(_.modified).maxBy(_.getTime))
+    // ground truth from the platform's own walk of the tree
+    val walked = ScanRows.walk(root, "srcv2")
+    assert(r.getLong(0) == walked.length.toLong)
+    assert(r.getLong(1) == walked.map(_.size).sum)
+    assert(r.getLong(2) == walked.map(_.size).min)
+    assert(r.getLong(3) == walked.map(_.size).max)
+    assert(r.getTimestamp(4) == walked.map(_.modified).minBy(_.getTime))
+    assert(r.getTimestamp(5) == walked.map(_.modified).maxBy(_.getTime))
   }
 
   test("aggregate pushdown composes with pushed filters and skips all stats") {
@@ -234,9 +230,9 @@ class FilesSourceSpec extends AnyFunSuite {
     assert(agged.queryExecution.executedPlan.toString
       .contains("PushedAggregation=[count, sum:size]"))
     val r = agged.collect()(0)
-    val v1 = FileListing.list(spark, root.toString, Some("srcv2")).collect()
-      .filter(_.filename.endsWith(".json"))
-    assert(r.getLong(0) == v1.length.toLong && r.getLong(1) == v1.map(_.size.get).sum)
+    val walked = ScanRows.walk(root, "srcv2").filter(_.filename.endsWith(".json"))
+    assert(r.getLong(0) == walked.length.toLong &&
+      r.getLong(1) == walked.map(_.size).sum)
     assert(FilesSource.createdStatCalls.get() == 0L,
       "aggregated scan must never take the created stat")
   }
@@ -247,8 +243,7 @@ class FilesSourceSpec extends AnyFunSuite {
     val agged = readV2.agg(countDistinct("mime_type").as("n"))
     assert(!agged.queryExecution.executedPlan.toString
       .contains("PushedAggregation"))
-    val exp = FileListing.list(spark, root.toString, Some("srcv2")).collect()
-      .flatMap(_.mime_type).distinct.length
+    val exp = ScanRows.walk(root, "srcv2").flatMap(_.mime_type).distinct.length
     assert(agged.collect()(0).getLong(0) == exp.toLong)
     val grouped = readV2.groupBy("path").agg(count(lit(1)).as("n"))
     assert(!grouped.queryExecution.executedPlan.toString

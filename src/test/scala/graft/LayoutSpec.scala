@@ -12,7 +12,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * apart again. Query and stream builders read parquet only through
   * [[Tables]], so none brings back Spark's schema-inference job. The
   * wire transport to PostgreSQL stages and merges in one place: the
-  * `graft-pg` table, whose commit runs `PgMerge.mergeWire`. */
+  * `graft-pg` table, whose commit runs `PgMerge.mergeWire`. Each store
+  * has one listing path, its DataSource V2 table (`graft-files`,
+  * `graft-s3`): the listing helpers build no RDD of their own. */
 class LayoutSpec extends AnyFunSuite {
   private val root = Paths.get("src/main/scala")
 
@@ -101,5 +103,20 @@ class LayoutSpec extends AnyFunSuite {
       .isDefined)
     assert(wireUpsert.findFirstIn("c.exec(PgMerge.upsertSql(scratch))").isDefined)
     assert(wireUpsert.findFirstIn("st.execute(upsertSql(scratch, t))").isEmpty)
+  }
+
+  test("one listing path per store: the listing files build no RDD") {
+    val ownRdd = raw"\b(parallelize|sparkContext)\b".r
+    Seq("graft/sources/S3Wire.scala", "graft/sources/FileListing.scala")
+      .foreach { f =>
+        val src = sources.collectFirst { case (`f`, s) => s }
+        assert(src.nonEmpty, f)
+        val hits = ownRdd.findAllIn(src.get).toSeq
+        assert(hits.isEmpty, s"$f lists through an RDD of its own: $hits")
+      }
+    // the guard sees the forms it names
+    Seq("spark.sparkContext.parallelize(chunks, chunks.size)",
+        "new Configuration(spark.sparkContext.hadoopConfiguration)")
+      .foreach(src => assert(ownRdd.findFirstIn(src).isDefined, src))
   }
 }

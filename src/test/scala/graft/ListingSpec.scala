@@ -7,8 +7,9 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.sources.FileListing
 import graft.functions.Mime
 
-/** FileListing over a real temp directory tree + the reference's S3-URL
-  * parse fixtures (`s3.rs:159-175`) + MIME lookup cases (FIXTURES.md). */
+/** The filesystem listing (`graft-files`) over a real temp directory tree
+  * against a `Files.walk` expectation + the reference's S3-URL parse
+  * fixtures (`s3.rs:159-175`) + MIME lookup cases (FIXTURES.md). */
 class ListingSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
@@ -64,6 +65,33 @@ class ListingSpec extends AnyFunSuite {
     assert(Mime.byExt.size >= 140) // broad-coverage floor
   }
 
+  test("mime: the listing's per-row lookup equals the plan expression mimeOf") {
+    // graft-s3 and graft-files rows carry Mime.lookup; frames built by
+    // hand carry Mime.mimeOf — one name, one mime type either way
+    import spark.implicits._
+    val names = Seq("a.", ".bashrc", "noext", "A.JSON", "x.tar.GZ", "ü.TXT",
+      "İ.PNG", "FAV.ICO")
+    val viaPlan = names.toDF("n").repartition(2)
+      .select($"n", Mime.mimeOf($"n")).collect()
+      .map(r => r.getString(0) -> Option(r.getString(1))).toMap
+    assert(viaPlan == names.map(n => n -> Mime.lookup(n)).toMap)
+    // Spark's lower ignores the JVM's locale; under a Turkish default
+    // locale String.toLowerCase turns "ICO" into "ıco" (dotless ı)
+    val default = java.util.Locale.getDefault
+    val underTr =
+      try {
+        java.util.Locale.setDefault(java.util.Locale.forLanguageTag("tr"))
+        names.map(n => n -> Mime.lookup(n)).toMap
+      } finally java.util.Locale.setDefault(default)
+    assert(underTr == viaPlan)
+    assert(viaPlan("FAV.ICO").contains("image/x-icon"))
+    assert(viaPlan("A.JSON").contains("application/json"))
+    assert(viaPlan("x.tar.GZ").contains("application/gzip"))
+    assert(viaPlan("ü.TXT").contains("text/plain"))
+    assert(viaPlan("İ.PNG").contains("image/png"))
+    assert(Seq("a.", "noext").forall(viaPlan(_).isEmpty))
+  }
+
   private def mkTree(): Path = {
     val root = Files.createTempDirectory("graft_listing")
     Files.writeString(root.resolve("top.txt"), "hello")
@@ -74,17 +102,23 @@ class ListingSpec extends AnyFunSuite {
     root
   }
 
+  /** The filesystem listing: the `graft-files` table over `root`. */
+  private def listFiles(root: Path, identifier: Option[String]) = {
+    val r = spark.read.format("graft-files").option("path", root.toString)
+    ScanRows.of(identifier.fold(r)(r.option("identifier", _)).load())
+  }
+
   test("list: recursive walk finds all files with split paths, mime, sizes") {
     val root = mkTree()
-    val rows = FileListing.list(spark, root.toString, Some("testsrc")).collect()
+    val rows = listFiles(root, Some("testsrc"))
     assert(rows.length == 3)
     val byName = rows.map(r => r.filename -> r).toMap
-    assert(byName("top.txt").size.contains(5L))
+    assert(byName("top.txt").size == 5L)
     assert(byName("top.txt").mime_type.contains("text/plain"))
     assert(byName("top.txt").path == root.toString)
     assert(byName("data.json").path.endsWith("/sub"))
     assert(byName("noext").mime_type.isEmpty)
-    assert(byName("noext").size.contains(100L))
+    assert(byName("noext").size == 100L)
     assert(rows.forall(_.external_source == "testsrc"))
     // local FS records a creation time (fs.rs:65 parity); s3a stays None
     assert(rows.forall(_.created.nonEmpty))
@@ -92,27 +126,20 @@ class ListingSpec extends AnyFunSuite {
   }
 
   test("listDF: distributed variant agrees with list") {
+    // every column of every row equals what Files.walk reads from the
+    // platform for the same tree
     val root = mkTree()
-    val a = FileListing.list(spark, root.toString, Some("x")).collect()
-      .map(f => (f.path, f.filename, f.size)).toSet
-    val b = FileListing.listDF(spark, root.toString, Some("x")).collect()
-      .map(r => (r.getString(1), r.getString(2), Option(r.get(6)).map(_.toString.toLong))).toSet
-    assert(a == b)
-  }
-
-  test("listBinaryFile agrees with the Hadoop-API listing") {
-    val root = mkTree()
-    val a = FileListing.list(spark, root.toString, Some("x")).collect()
-      .map(f => (f.path, f.filename, f.size.getOrElse(-1L))).toSet
-    val b = FileListing.listBinaryFile(spark, root.toString, Some("x"))
-      .collect().map(r => (r.getString(1), r.getString(2), r.getLong(6))).toSet
-    assert(a == b)
+    assert(listFiles(root, Some("x")).toSet == ScanRows.walk(root, "x").toSet)
   }
 
   test("list of a single file (root-level) yields path of its parent") {
     val root = mkTree()
-    val rows = FileListing.list(spark, root.resolve("top.txt").toString, None).collect()
+    val file = root.resolve("top.txt")
+    val rows = listFiles(file, None)
     assert(rows.length == 1)
     assert(rows.head.filename == "top.txt")
+    assert(rows.head.path == root.toString)
+    assert(rows == ScanRows.walk(file,
+      FileListing.identifierFor(file.toString, None)))
   }
 }

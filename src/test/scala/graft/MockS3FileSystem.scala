@@ -49,7 +49,7 @@ object MockS3Store {
 }
 
 /** In-JVM Hadoop FileSystem with S3 object-store semantics, registered as
-  * `mocks3://`. The listing stack (`FileListing.list`/`listDF`) talks to the
+  * `mocks3://`. The filesystem listing (the `graft-files` table) talks to the
   * Hadoop FS SPI — the exact interface s3a implements — so driving it
   * through this class executes the same code paths a real bucket would
   * (shard BFS over synthesized prefix-dirs, recursive paged listing under a

@@ -2,6 +2,8 @@ package graft
 
 import java.sql.DriverManager
 
+import scala.util.Using
+
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
@@ -80,14 +82,11 @@ class PgMergeSpec extends AnyFunSuite {
     Class.forName(duckDriver)
     val c = DriverManager.getConnection(url)
     try {
-      val st = c.createStatement()
-      st.execute(
+      Using.resource(c.createStatement())(_.execute(
         s"""CREATE TABLE ${PgMerge.table} (
            |  external_source TEXT, path TEXT, filename TEXT, mime_type TEXT,
            |  created TIMESTAMP, modified TIMESTAMP, size BIGINT,
-           |  deleted TIMESTAMP, UNIQUE $keyTarget)""".stripMargin)
-      val ins = c.prepareStatement(
-        s"INSERT INTO ${PgMerge.table} VALUES (?,?,?,?,?,?,?,?)")
+           |  deleted TIMESTAMP, UNIQUE $keyTarget)""".stripMargin))
       val rows = Seq(
         ("A", "/d", "same.txt", "text/corrected", T1, T1, 10L, null),
         ("A", "/d", "changed.txt", "text/plain", T1, T1, 10L, null),
@@ -95,14 +94,17 @@ class PgMergeSpec extends AnyFunSuite {
         ("A", "/d", "nullc.txt", "text/hand", null, T1, 10L, null),
         ("A", "/d", "gone.txt", "text/plain", T1, T1, 10L, null),
         ("B", "/d", "gone.txt", "text/plain", T1, T1, 10L, null))
-      rows.foreach { case (src, p, f, m, cr, mo, sz, del) =>
-        ins.setString(1, src); ins.setString(2, p); ins.setString(3, f)
-        ins.setString(4, m)
-        ins.setTimestamp(5, cr.asInstanceOf[java.sql.Timestamp])
-        ins.setTimestamp(6, mo.asInstanceOf[java.sql.Timestamp])
-        ins.setLong(7, sz)
-        ins.setTimestamp(8, del.asInstanceOf[java.sql.Timestamp])
-        ins.executeUpdate()
+      Using.resource(c.prepareStatement(
+        s"INSERT INTO ${PgMerge.table} VALUES (?,?,?,?,?,?,?,?)")) { ins =>
+        rows.foreach { case (src, p, f, m, cr, mo, sz, del) =>
+          ins.setString(1, src); ins.setString(2, p); ins.setString(3, f)
+          ins.setString(4, m)
+          ins.setTimestamp(5, cr.asInstanceOf[java.sql.Timestamp])
+          ins.setTimestamp(6, mo.asInstanceOf[java.sql.Timestamp])
+          ins.setLong(7, sz)
+          ins.setTimestamp(8, del.asInstanceOf[java.sql.Timestamp])
+          ins.executeUpdate()
+        }
       }
     } finally c.close()
   }
@@ -126,8 +128,8 @@ class PgMergeSpec extends AnyFunSuite {
 
   private def state(url: String): Map[String, (String, Long, Boolean)] = {
     val c = DriverManager.getConnection(url)
-    try {
-      val rs = c.createStatement().executeQuery(
+    try Using.resource(c.createStatement()) { st =>
+      val rs = st.executeQuery(
         s"""SELECT external_source, filename, mime_type, size,
            |  deleted IS NULL AS live FROM ${PgMerge.table}""".stripMargin)
       val b = Map.newBuilder[String, (String, Long, Boolean)]
@@ -161,8 +163,8 @@ class PgMergeSpec extends AnyFunSuite {
     assert(st("A/new.txt") == (("text/markdown", 30L, true)))
     // the per-scan scratch table was dropped inside the transaction
     val c = DriverManager.getConnection(url)
-    try {
-      val rs = c.createStatement().executeQuery(
+    try Using.resource(c.createStatement()) { st =>
+      val rs = st.executeQuery(
         "SELECT count(*) FROM information_schema.tables " +
           "WHERE table_name LIKE 'graft_scan_%'")
       rs.next()
@@ -173,9 +175,8 @@ class PgMergeSpec extends AnyFunSuite {
   /** Every column of every row, as text, keyed by source/filename. */
   private def fullState(url: String): Map[String, Seq[String]] = {
     val c = DriverManager.getConnection(url)
-    try {
-      val rs = c.createStatement().executeQuery(
-        s"SELECT * FROM ${PgMerge.table}")
+    try Using.resource(c.createStatement()) { st =>
+      val rs = st.executeQuery(s"SELECT * FROM ${PgMerge.table}")
       val n = rs.getMetaData.getColumnCount
       val b = Map.newBuilder[String, Seq[String]]
       while (rs.next()) b += (rs.getString("external_source") + "/" +
@@ -199,8 +200,11 @@ class PgMergeSpec extends AnyFunSuite {
     * connection to the file shares while `holder` is open. */
   private def oneThread[A](url: String)(f: => A): A = {
     val holder = DriverManager.getConnection(url)
-    try { holder.createStatement().execute("SET GLOBAL threads = 1"); f }
-    finally holder.close()
+    try {
+      Using.resource(holder.createStatement())(
+        _.execute("SET GLOBAL threads = 1"))
+      f
+    } finally holder.close()
   }
 
   test("live publish: an identical duplicate staged row publishes once") {
@@ -254,8 +258,9 @@ class PgMergeSpec extends AnyFunSuite {
     // hand-correct a live row's mime after ingest, then rescan the same
     // tree: nothing changed on disk, so no row may be rewritten
     val c = DriverManager.getConnection(url)
-    try c.createStatement().execute(s"UPDATE ${PgMerge.table} SET " +
-      "mime_type = 'text/hand2' WHERE filename = 'new.txt'")
+    try Using.resource(c.createStatement())(_.execute(
+      s"UPDATE ${PgMerge.table} SET " +
+        "mime_type = 'text/hand2' WHERE filename = 'new.txt'"))
     finally c.close()
     publishA(url, scanDf())
     val second = fullState(url)
@@ -326,8 +331,8 @@ class PgMergeSpec extends AnyFunSuite {
       s"connection cap violated: peak $peak with maxConnections=2")
     // and the publish itself worked through the wrapper
     val c = DriverManager.getConnection(url)
-    try {
-      val rs = c.createStatement().executeQuery(
+    try Using.resource(c.createStatement()) { st =>
+      val rs = st.executeQuery(
         s"SELECT count(*) FROM ${PgMerge.table} WHERE path = '/w'")
       rs.next(); assert(rs.getInt(1) == 400)
     } finally c.close()

@@ -3,13 +3,15 @@ package graft
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.FileListing
+import scala.jdk.CollectionConverters._
+
+import graft.sources.S3Wire
 
 /** Integration test of the S3 listing path (S4/S7) against
   * [[MockS3FileSystem]] — an in-JVM Hadoop FileSystem with S3 object-store
   * semantics. The offline harness has no s3a jars or network, so this is
-  * the closest executable parity check to `/root/reference/src/s3.rs:87-150`:
-  * every line of `FileListing.list`/`listDF` (shard BFS over implicit
+  * the closest executable parity check to the reference's `s3.rs:87-150`:
+  * every line of the `graft-files` listing (shard BFS over implicit
   * prefix-dirs, recursive paged listing, executor-side Configuration
   * rebuild, client-conf propagation) runs for real; only the AWS wire
   * protocol is substituted.
@@ -18,13 +20,19 @@ class S3ListingIntegrationSpec extends AnyFunSuite with BeforeAndAfterAll {
   private lazy val spark = TestSpark.spark
 
   /** fs.mocks3.impl must reach every FileSystem instantiation — including
-    * the executor-side `new Configuration()` rebuild inside mapPartitions —
-    * via FileListing's `extraConf` plumbing, the same channel
-    * `awsEnvToS3aConf` uses for real s3a client config. Cache disabled so
-    * reuse of the driver's instance can't mask a propagation bug. */
+    * the executor-side Configuration rebuild of the listing tasks — via
+    * the source's `hadoop.*` options, the same channel that carries real
+    * s3a client config. Cache disabled so reuse of the driver's instance
+    * can't mask a propagation bug. */
   private val mockConf = Map(
     "fs.mocks3.impl" -> classOf[MockS3FileSystem].getName,
     "fs.mocks3.impl.disable.cache" -> "true")
+
+  /** The `graft-files` listing of `url` with `conf` as `hadoop.*`
+    * options. */
+  private def listMock(url: String, conf: Map[String, String] = mockConf) =
+    spark.read.format("graft-files").option("path", url)
+      .options(conf.map { case (k, v) => s"hadoop.$k" -> v }).load()
 
   private val T0 = 1700000000000L
 
@@ -50,41 +58,40 @@ class S3ListingIntegrationSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("list over mocks3 finds all objects with S3 semantics (no created)") {
-    val rows = FileListing
-      .list(spark, "mocks3://small-bucket/", extraConf = mockConf)
-      .collect().sortBy(r => (r.path, r.filename))
+    val rows = ScanRows.of(listMock("mocks3://small-bucket/"))
+      .sortBy(r => (r.path, r.filename))
     assert(rows.length == 5)
     assert(rows.forall(_.created.isEmpty), "S3 rows must have no creation time (s3.rs:123)")
     assert(rows.forall(_.external_source == "mocks3://small-bucket/"))
     val byName = rows.map(r => r.filename -> r).toMap
     assert(byName("a.json").path == "/logs/2026/01")
     assert(byName("a.json").mime_type.contains("application/json"))
-    assert(byName("a.json").size.contains(100L))
+    assert(byName("a.json").size == 100L)
     assert(byName("a.json").modified.getTime == T0 + 1000)
     assert(byName("c.csv").path == "/logs/2026/02")
     assert(byName("d.png").mime_type.contains("image/png"))
     // root-level object: the reference's panic case (s3.rs:107-108).
-    // path is "" — the SAME identity S3Wire.splitKey and listBinaryFile
-    // produce (review r18: the fs path used to render "/" here, so
+    // path is "" — the SAME identity S3Wire.splitKey produces (review r18: the fs path used to render "/" here, so
     // toggling --s3-wire flipped the row's merge identity)
     assert(byName("root.bin").path == "")
   }
 
   test("listDF (distributed, executor-side conf rebuild) agrees with list") {
-    val viaList = FileListing
-      .list(spark, "mocks3://small-bucket/", extraConf = mockConf)
-      .collect().map(r => (r.path, r.filename, r.modified.getTime, r.size)).toSet
-    val viaDF = FileListing
-      .listDF(spark, "mocks3://small-bucket/", extraConf = mockConf)
-      .collect().map(r => (r.getString(1), r.getString(2),
-        r.getTimestamp(5).getTime, Option(r.get(6)).map(_.asInstanceOf[Long])))
-      .toSet
-    assert(viaDF == viaList)
+    // the listing equals the bucket's own key set, split the way the
+    // REST lister splits keys
+    val inStore = MockS3Store.bucket("small-bucket").asScala.map {
+      case (key, (size, mtime)) =>
+        val (dir, name) = S3Wire.splitKey(key)
+        (dir, name, mtime, size)
+    }.toSet
+    val listed = ScanRows.of(listMock("mocks3://small-bucket/"))
+      .map(r => (r.path, r.filename, r.modified.getTime, r.size)).toSet
+    assert(listed == inStore)
   }
 
   test("recursive listing pages like ListObjectsV2 (MaxKeys=1000)") {
     MockS3Store.pagesServed.set(0)
-    val df = FileListing.listDF(spark, "mocks3://big-bucket/", extraConf = mockConf)
+    val df = listMock("mocks3://big-bucket/")
     assert(df.count() == 2500 + 19 * 5)
     // shard00's 2500 keys / 1000-key pages => its recursive listing alone
     // serves >=3 pages (the other 19 shards add one page each — never fewer).
@@ -95,8 +102,7 @@ class S3ListingIntegrationSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("client config (S7 channel) reaches every FS instantiation") {
     MockS3Store.seenEndpoints.clear()
     val conf = mockConf + ("fs.s3a.endpoint" -> "http://localhost:9000")
-    val n = FileListing
-      .listDF(spark, "mocks3://small-bucket/logs", extraConf = conf).count()
+    val n = listMock("mocks3://small-bucket/logs", conf).count()
     assert(n == 3)
     val seen = MockS3Store.seenEndpoints.toArray.toSet
     assert(seen == Set("http://localhost:9000"),
@@ -106,46 +112,19 @@ class S3ListingIntegrationSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("session hadoopConfiguration reaches executor listing tasks " +
       "(review r18: credentials set the standard Spark way used to be " +
       "dropped by the executor-side conf rebuild)") {
-    // set client config on the SESSION conf only — no extraConf for it —
+    // set client config on the SESSION conf only — no option for it —
     // the way a real cluster passes --conf spark.hadoop.fs.s3a.*
     val hc = spark.sparkContext.hadoopConfiguration
     hc.set("fs.s3a.endpoint", "http://session-only:9000")
     MockS3Store.seenEndpoints.clear()
     try {
-      val n = FileListing.listDF(spark, "mocks3://small-bucket/logs",
-        extraConf = mockConf).count()
+      val n = listMock("mocks3://small-bucket/logs").count()
       assert(n == 3)
       val seen = MockS3Store.seenEndpoints.toArray.toSet
       assert(seen == Set("http://session-only:9000"),
         "session-level hadoop conf must reach executor FS construction, " +
           s"saw $seen")
     } finally hc.unset("fs.s3a.endpoint")
-  }
-
-  test("listBinaryFile agrees with listDF on authority-bearing URIs " +
-      "(review r18: the bucket authority used to leak into path, " +
-      "flipping the merge identity between listing variants)") {
-    // the binaryFile source derives its hadoop conf from the context's
-    val hc = spark.sparkContext.hadoopConfiguration
-    hc.set("fs.mocks3.impl", classOf[MockS3FileSystem].getName)
-    hc.set("fs.mocks3.impl.disable.cache", "true")
-    try {
-      val viaBin = FileListing
-        .listBinaryFile(spark, "mocks3://small-bucket/logs")
-        .select("path", "filename").collect()
-        .map(r => (r.getString(0), r.getString(1))).toSet
-      val viaDF = FileListing
-        .listDF(spark, "mocks3://small-bucket/logs", extraConf = mockConf)
-        .select("path", "filename").collect()
-        .map(r => (r.getString(0), r.getString(1))).toSet
-      assert(viaBin == viaDF,
-        s"one merge identity across variants: bin=$viaBin df=$viaDF")
-      assert(viaBin.forall(_._1.startsWith("/logs")),
-        s"no bucket authority in path: $viaBin")
-    } finally {
-      hc.unset("fs.mocks3.impl")
-      hc.unset("fs.mocks3.impl.disable.cache")
-    }
   }
 
   test("session hadoopConfiguration reaches the graft-files V2 " +
@@ -197,18 +176,10 @@ class S3ListingIntegrationSpec extends AnyFunSuite with BeforeAndAfterAll {
       val goodConf = Map(
         "fs.mocks3.impl" -> classOf[MockS3FileSystem].getName,
         "fs.mocks3.secret" -> "s3cr3t")
-      // the RDD listing paths (driver shard BFS + executor shard tasks)
-      val n = FileListing
-        .listDF(spark, "mocks3://small-bucket/", extraConf = goodConf)
-        .count()
-      assert(n == 5, s"listDF through the poisoned cache: $n rows")
-      // and the graft-files V2 source (planning + partition readers;
-      // fs conf rides the source's `hadoop.*` option channel)
-      val n2 = spark.read.format("graft-files")
-        .option("path", "mocks3://small-bucket/")
-        .options(goodConf.map { case (k, v) => s"hadoop.$k" -> v })
-        .load().count()
-      assert(n2 == 5, s"graft-files through the poisoned cache: $n2 rows")
+      // the graft-files listing (planning + partition readers; fs conf
+      // rides the source's `hadoop.*` option channel)
+      val n = listMock("mocks3://small-bucket/", goodConf).count()
+      assert(n == 5, s"graft-files through the poisoned cache: $n rows")
     } finally {
       MockS3Store.requiredSecret.set(null)
       try cached.close() catch { case _: java.io.IOException => () }

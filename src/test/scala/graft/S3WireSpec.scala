@@ -956,4 +956,41 @@ class S3WireSpec extends AnyFunSuite {
         "mime_type", "created", "modified", "size"))
     }
   }
+
+  test("listDF reads through the graft-s3 table: one V2 relation over the " +
+      "plan made at the call, with the scan frame's exact schema") {
+    import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
+    withServer { conf =>
+      val df = S3Wire.listDF(spark, conf, bucket, "", maxKeys = 3)
+      df.queryExecution.analyzed match {
+        case r: DataSourceV2Relation =>
+          assert(r.table.name == s"graft-s3:s3://$bucket")
+        case other => fail(s"not a V2 relation: $other")
+      }
+      assert(df.schema == graft.sources.v2.FilesSource.SCHEMA,
+        df.schema.treeString)
+      val plan = S3Wire.planShards(conf, bucket, "", maxKeys = 3,
+        maxDepth = 2)
+      val chunks = S3Wire.chunkPreListed(plan.preListed, 3)
+      assert(chunks.nonEmpty && plan.leaves.nonEmpty)
+      assert(df.rdd.getNumPartitions == plan.leaves.size + chunks.size)
+      // each run lists the carried plan's leaves and nothing else: no
+      // root or delimiter page, so the planner did not run again
+      import scala.jdk.CollectionConverters._
+      seenListPrefixes.clear()
+      assert(df.count() == 13)
+      assert(seenListPrefixes.asScala.toSet ==
+        plan.leaves.map(_.prefix).toSet, seenListPrefixes)
+      // a pushed prefix narrower than the carried plan's is planned
+      // afresh: only that subtree is listed, and the residual filter
+      // keeps the rows exact
+      seenListPrefixes.clear()
+      val logs = df.filter(org.apache.spark.sql.functions.col("path")
+        .startsWith("/logs"))
+      assert(logs.count() == 7)
+      assert(seenListPrefixes.asScala.nonEmpty &&
+        seenListPrefixes.asScala.forall(_.startsWith("logs")),
+        seenListPrefixes)
+    }
+  }
 }
