@@ -1,11 +1,10 @@
 package graft
 
-import scala.concurrent.{Await, ExecutionContext, Future}
-import scala.concurrent.duration.Duration
 import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.sources.FileListing
 
@@ -38,11 +37,12 @@ import graft.sources.FileListing
   * reference product (S3 → Postgres metadata ETL) runs with zero
   * external dependencies (S3WireSpec proves it live end-to-end).
   *
-  * Each PATH (filesystem dir or `s3://`/`s3a://` URL) is scanned
-  * concurrently (S8, one task per path like `main.rs:44-58`'s JoinSet;
-  * any failure fails the run, `main.rs:61-65`). `-i` overrides the scan
+  * Each PATH (filesystem dir or `s3://`/`s3a://` URL) is read as a
+  * rescan stream (`graft-files`, or `graft-s3` under `--s3-wire`) that
+  * lists the whole path once per micro-batch. `-i` overrides the scan
   * identifier for every path (`main.rs:23-24`); the default is the raw S3
-  * URL or `hostname:path` (P6). `-v` raises log verbosity.
+  * URL or `hostname:path` (P6), and every row carries it. `-v` raises
+  * log verbosity.
   *
   * Sink: `--jdbc URL` publishes through [[sinks.PgMerge]] (scan semantics
   * identical to the reference's Postgres flow); `--pg ADDR` publishes the
@@ -70,10 +70,25 @@ import graft.sources.FileListing
   * upgrades: the log is the durable record — delete the old
   * checkpoint, rebuild, resume) before running the cycle.
   *
-  * `--interval N` with a BATCH sink runs the same daemon in its
-  * original form: list → merge (tombstoning vanished keys) → sleep,
-  * repeated forever, each cycle a fresh listing of current state —
-  * with `--pg` this is the reference product's exact loop.
+  * A BATCH sink (`--out`, `--jdbc`, `--pg`) runs ONE streaming query
+  * per invocation over the union of the PATHs' rescan streams, so all
+  * paths list in one job per cycle, not in one `Future` each; each
+  * micro-batch is one cycle: list → merge (tombstoning vanished keys).
+  * Not one query per path: those would run `mergeBatch` concurrently on
+  * one `--out` (sharing the `.old-<cycle>` holding dir, deleting each
+  * other's `.stage-*` dirs), and paths under one `-i` are one complete
+  * scan of it. Any failure fails the run (S8, `main.rs:61-65`). Without
+  * `--interval` the run is one cycle (`Trigger.AvailableNow`);
+  * `--interval N` is the reference's daemon (`main.rs:64-96`; with
+  * `--pg` its exact product loop) on a `Trigger.ProcessingTime` cadence:
+  * a cycle STARTS every N seconds, where the reference sleeps N seconds
+  * AFTER each cycle. The batch id is the cycle number, which
+  * `mergeBatch` turns into the tombstone instant. The checkpoint is a
+  * temporary directory removed when the run ends: the sink holds the
+  * durable state and a complete rescan has nothing to resume, so every
+  * run starts at cycle 0. Its offset-log and commit writes add two small
+  * file writes per cycle (30–45 ms each on a host without Hadoop's
+  * native library).
   */
 object Main {
   def main(args: Array[String]): Unit = {
@@ -178,9 +193,6 @@ object Main {
         s"duplicate --watch-pg SOURCE args: ${dup.mkString(", ")}")
     }
     val outDir = out.getOrElse("./scan_out")
-    // --interval with a batch sink is the reference's poll-sleep daemon
-    // (`main.rs:64-96`: list → merge → sleep → repeat); with
-    // --stream-events it maps to Trigger.ProcessingTime instead.
     // -i overrides the identifier for EVERY path, and the identifier is
     // the event-stream's sink/checkpoint key — two paths sharing it
     // would collide on one checkpoint (the second query fails to start)
@@ -219,105 +231,121 @@ object Main {
 
     if (streamEvents) {
       runStreamEvents(spark, paths.toSeq, identifier, outDir, interval,
-        if (s3Wire) s3Endpoint.orElse(Some("")) else None, rebuildState)
+        s3Wire, s3Endpoint, rebuildState)
       if (!preexisting) spark.stop()
       return
     }
 
-    implicit val ec: ExecutionContext = ExecutionContext.global
-    // S8: one concurrent scan job per path; all actions run in parallel
-    // against the shared session (Spark schedules them fairly); the first
-    // failure propagates and fails the whole run.
-    // --s3-wire: list s3:// paths over the built-in REST client
-    // ([[sources.S3Wire]], SigV4 + ListObjectsV2) instead of the s3a
-    // Hadoop connector — the no-jars transport. ONE resolution chain for
-    // every surface (env contract s3.rs:24-49 < JVM aws.* properties <
-    // explicit settings): [[sources.S3Wire.resolveConf]], shared with
-    // the graft-s3 V2 table so the CLI and the table can't drift.
-    lazy val s3Conf = sources.S3Wire.resolveConf(
-      s3Endpoint.map("endpoint" -> _).toMap)
-    // One complete scan cycle: fresh listings (never reused across
-    // cycles — the daemon must see CURRENT filesystem/bucket state),
-    // published to the selected sink, caches dropped.
-    def scanCycle(cycle: Long): Unit = {
-      val scans: Seq[Future[(String, DataFrame)]] = paths.toSeq.map { p =>
-        Future {
-          val src = FileListing.identifierFor(p, identifier)
-          FileListing.parseS3Url(p).filter(_ => s3Wire) match {
-            case Some((bucket, prefix)) =>
-              (src, sources.S3Wire.listDF(spark, s3Conf, bucket, prefix,
-                Some(src)).cache())
-            case None =>
-              // scans go through the graft-files DataSource V2 table (not
-              // the RDD listing): the planner can push filename/path/size
-              // filters into the listing tasks, prune whole shards, skip
-              // the `created` stat when the column is unread, and
-              // broadcast a small listing from its reported statistics —
-              // none of which the RDD form gets
-              val reader = spark.read.format("graft-files")
-                .option("path", normalize(p))
-              val withId = identifier.fold(reader)(id =>
-                reader.option("identifier", id))
-              (src, withId.load().cache())
-          }
-        }
-      }
-      val results = Await.result(Future.sequence(scans), Duration.Inf)
-
-      (jdbc, pg) match {
-        case (Some(url), _) =>
-          results.foreach { case (src, df) =>
-            sinks.PgMerge.publishScan(df, url,
-              sys.env.getOrElse("PGUSER", "postgres"),
-              sys.env.getOrElse("PGPASSWORD", ""), src)
-          }
-        case (_, Some(_)) =>
-          // --pg HOST:PORT/DBNAME or a credentialed DATABASE_URL — the
-          // driverless v3 wire-protocol sink (trust / password / MD5 /
-          // SCRAM-SHA-256 auth, optional TLS), same staged-merge
-          // resolution as --jdbc; address validated at arg-parse time,
-          // never after the listing. Credential precedence: URL userinfo
-          // over PGUSER/PGPASSWORD env (`-i` is unrelated — it names the
-          // scan, not the role).
-          val t = pgTarget.get
-          val pgUser = t.user.orElse(sys.env.get("PGUSER").filter(_.nonEmpty))
-            .getOrElse("postgres")
-          val pgPass = t.password
-            .orElse(sys.env.get("PGPASSWORD").filter(_.nonEmpty))
-          results.foreach { case (src, df) =>
-            sinks.PgMerge.publishScanWire(df, t.host, t.port, t.database,
-              pgUser, src, password = pgPass, sslMode = t.sslMode,
-              sslRootCert = t.sslRootCert)
-          }
-        case _ =>
-          // the cycle number is the batch id so each rescan's tombstones
-          // carry their own scan instant (P8), not the first cycle's
-          results.foreach { case (src, df) =>
-            streaming.ScrapeStream.mergeBatch(spark, outDir)(
-              df.withColumn("external_source", lit(src)), cycle)
-          }
-          val n = spark.read.parquet(outDir).count()
+    // one source per identifier: paths sharing a `-i` are ONE complete
+    // scan of it, published once, in path order
+    val scanned = paths.toSeq.map(FileListing.identifierFor(_, identifier))
+      .distinct
+    val publish: (DataFrame, Long) => Unit = (jdbc, pgTarget) match {
+      case (Some(url), _) =>
+        val (user, pass) = (sys.env.getOrElse("PGUSER", "postgres"),
+          sys.env.getOrElse("PGPASSWORD", ""))
+        (batch, _) => scanned.foreach(src => sinks.PgMerge.publishScan(
+          batch.filter(col("external_source") === src), url, user, pass, src))
+      case (_, Some(t)) =>
+        // --pg HOST:PORT/DBNAME or a credentialed DATABASE_URL — the
+        // driverless v3 wire-protocol sink (trust / password / MD5 /
+        // SCRAM-SHA-256 auth, optional TLS), same staged-merge
+        // resolution as --jdbc; address validated at arg-parse time,
+        // never after the listing. Credential precedence: URL userinfo
+        // over PGUSER/PGPASSWORD env (`-i` is unrelated — it names the
+        // scan, not the role).
+        val pgUser = t.user.orElse(sys.env.get("PGUSER").filter(_.nonEmpty))
+          .getOrElse("postgres")
+        val pgPass = t.password
+          .orElse(sys.env.get("PGPASSWORD").filter(_.nonEmpty))
+        (batch, _) => scanned.foreach(src => sinks.PgMerge.publishScanWire(
+          batch.filter(col("external_source") === src), t.host, t.port,
+          t.database, pgUser, src, password = pgPass, sslMode = t.sslMode,
+          sslRootCert = t.sslRootCert))
+      case _ =>
+        // the cycle number is the batch id so each rescan's tombstones
+        // carry their own scan instant (P8), not the first cycle's
+        (batch, cycle) => {
+          streaming.ScrapeStream.mergeBatch(spark, outDir, scanned)(
+            batch, cycle)
+          val n = streaming.ScrapeStream.readState(spark, outDir).count()
           println(s"scan complete: $n rows in state at $outDir")
-      }
-      results.foreach(_._2.unpersist())
-    }
-
-    interval match {
-      case None => scanCycle(0L)
-      case Some(sec) =>
-        // the reference's poll-sleep daemon (`main.rs:64-96`); the
-        // `graft.maxCycles` system property bounds the loop for tests
-        val maxCycles = sys.props.get("graft.maxCycles")
-          .flatMap(_.toLongOption).getOrElse(Long.MaxValue)
-        var c = 0L
-        while (c < maxCycles) {
-          scanCycle(c)
-          c += 1
-          if (c < maxCycles) Thread.sleep(sec * 1000L)
         }
+    }
+    // a daemon ends by a signal, which skips the finally: then the local
+    // filesystem's shutdown hook removes the checkpoint
+    val checkpoint = new org.apache.hadoop.fs.Path(
+      java.nio.file.Files.createTempDirectory("graft-scan-").toUri)
+    val localFs = checkpoint.getFileSystem(spark.sessionState.newHadoopConf())
+    localFs.deleteOnExit(checkpoint)
+    try {
+      val q = paths.toSeq.map(rescanStream(spark, _, identifier, s3Wire,
+          s3Endpoint)).reduce(_ union _)
+        .writeStream
+        .foreachBatch { (df: DataFrame, cycle: Long) =>
+          // repeated or nested PATHs (`/a /a`, `-i X /data /data/sub`)
+          // list one file twice: keep one row per key, or the merge's
+          // left join multiplies the file's rows every cycle. One PATH
+          // lists each key once and skips the shuffle.
+          val keyed = if (paths.size > 1)
+            df.dropDuplicates("external_source", "path", "filename") else df
+          // the sinks read the listing more than once: list it once
+          val batch = keyed.persist()
+          try publish(batch, cycle) finally { batch.unpersist(); () }
+        }
+        .option("checkpointLocation", checkpoint.toString)
+        .trigger(trigger(interval))
+        .start()
+      awaitRun(Seq(q))
+    } finally {
+      localFs.delete(checkpoint, true)
+      localFs.cancelDeleteOnExit(checkpoint)
     }
     if (!preexisting) spark.stop()
   }
+
+  /** The rescan stream of one PATH: every micro-batch is one complete
+    * listing of it, every row stamped with the path's scan identifier.
+    * An `s3://` path under `--s3-wire` lists over the built-in REST
+    * client (`graft-s3`: SigV4 + ListObjectsV2, no connector jars);
+    * every other path goes through the Hadoop filesystem (`graft-files`,
+    * `s3://` mapped to the s3a connector). The identifier is always set:
+    * the rows must carry the key the sinks publish and tombstone under,
+    * and `graft-files` would otherwise derive it from the s3a URL. */
+  private def rescanStream(spark: SparkSession, p: String,
+      identifier: Option[String], s3Wire: Boolean,
+      s3Endpoint: Option[String]): DataFrame = {
+    val reader = FileListing.parseS3Url(p).filter(_ => s3Wire) match {
+      case Some(_) =>
+        val r = spark.readStream.format("graft-s3").option("url", p)
+        s3Endpoint.fold(r)(ep => r.option("endpoint", ep))
+      case None =>
+        spark.readStream.format("graft-files").option("path", normalize(p))
+    }
+    reader.option("identifier", FileListing.identifierFor(p, identifier))
+      .load()
+  }
+
+  /** `--interval` as a trigger: one cycle and stop without it, a cycle
+    * every SEC seconds with it. */
+  private def trigger(interval: Option[Long]): Trigger =
+    interval.fold[Trigger](Trigger.AvailableNow())(sec =>
+      Trigger.ProcessingTime(sec * 1000L))
+
+  /** Wait until every query of THIS run has ended — never on the
+    * session's other queries: `spark.streams.awaitAnyTermination` also
+    * returns, or rethrows, for any query that ended earlier in a shared
+    * session (tests, notebooks). The first failure propagates, and the
+    * run's remaining queries are stopped on the way out (S8 fail-fast:
+    * one dead scan fails the run loudly). */
+  private def awaitRun(queries: Seq[StreamingQuery]): Unit =
+    try {
+      while (queries.exists(_.isActive)) {
+        queries.filterNot(_.isActive).foreach(_.awaitTermination())
+        queries.find(_.isActive).foreach(_.awaitTermination(1000L))
+      }
+      queries.foreach(_.awaitTermination())
+    } finally queries.foreach(_.stop())
 
   /** The `--stream-events` scan: one pinned [[streaming.ScrapeTws]]
     * change-event query per PATH over the graft-files rescan stream.
@@ -330,29 +358,12 @@ object Main {
     * the loop in-process (`Trigger.ProcessingTime`). */
   private def runStreamEvents(spark: SparkSession, paths: Seq[String],
       identifier: Option[String], out: String,
-      interval: Option[Long],
-      s3WireEndpoint: Option[String] = None,
-      rebuildState: Boolean = false): Unit =
+      interval: Option[Long], s3Wire: Boolean, s3Endpoint: Option[String],
+      rebuildState: Boolean): Unit =
     streaming.RocksDb.withRocksDb(spark) {
-      import org.apache.spark.sql.streaming.Trigger
       val queries = paths.map { p =>
         val src = FileListing.identifierFor(p, identifier)
-        // --s3-wire: rescan s3:// paths through the graft-s3 REST table
-        // (one complete listing per trigger, same generation-offset
-        // contract as graft-files) — the always-on S3 scrape daemon
-        // with zero connector jars
-        val reader = FileListing.parseS3Url(p)
-          .filter(_ => s3WireEndpoint.isDefined) match {
-          case Some(_) =>
-            val r = spark.readStream.format("graft-s3").option("url", p)
-            s3WireEndpoint.filter(_.nonEmpty)
-              .fold(r)(ep => r.option("endpoint", ep))
-          case None =>
-            spark.readStream.format("graft-files")
-              .option("path", normalize(p))
-        }
-        val scans = identifier.fold(reader)(id =>
-          reader.option("identifier", id)).load()
+        val scans = rescanStream(spark, p, identifier, s3Wire, s3Endpoint)
           .withColumn("observed", current_timestamp())
         val sub = java.net.URLEncoder.encode(src, "UTF-8")
         // --rebuild-state (VERDICT r14 #4): seed a FRESH checkpoint from
@@ -414,18 +425,11 @@ object Main {
           }
           .option("checkpointLocation", s"$out/.events-checkpoint/$sub")
           .outputMode("append")
-          .trigger(interval.fold[Trigger](Trigger.AvailableNow())(sec =>
-            Trigger.ProcessingTime(sec * 1000L)))
+          .trigger(trigger(interval))
           .start()
         (src, sub, q)
       }
-      // one-shot mode: every query runs to completion (failures
-      // propagate per query). Daemon mode: the queries never terminate,
-      // so waiting on the FIRST would silently swallow a later query's
-      // death — await ANY termination and propagate the first failure
-      // (S8 fail-fast parity: one dead scrape fails the run loudly).
-      if (interval.isEmpty) queries.foreach(_._3.awaitTermination())
-      else spark.streams.awaitAnyTermination()
+      awaitRun(queries.map(_._3))
       queries.foreach { case (src, sub, q) =>
         val n = countEvents(spark, s"$out/events/$sub")
         // seen-set size straight from the engine's state metrics — the
@@ -478,7 +482,6 @@ object Main {
       sources: Seq[String], out: String, interval: Option[Long],
       maxChanges: Option[Long],
       maxRetainMb: Option[Long] = None): Unit = {
-    import org.apache.spark.sql.streaming.Trigger
     import graft.sources.v2.PgChangeFeed
     val hadoopConf = spark.sessionState.newHadoopConf()
     def hExists(s: String): Boolean = {
@@ -743,14 +746,10 @@ object Main {
       .option("checkpointLocation",
         s"$out/.changefeed-checkpoint/_slot_$slot")
       .outputMode("append")
-      .trigger(interval.fold[org.apache.spark.sql.streaming.Trigger](
-        Trigger.AvailableNow())(sec => Trigger.ProcessingTime(sec * 1000L)))
+      .trigger(trigger(interval))
       .start()
-    // one-shot runs to completion; the daemon fails loudly on death
-    try {
-      if (interval.isEmpty) q.awaitTermination()
-      else spark.streams.awaitAnyTermination()
-    } finally {
+    try awaitRun(Seq(q))
+    finally {
       // getAndSet publishes the stream thread's last write to this
       // thread (the AtomicReference IS the happens-before edge)
       try {

@@ -505,12 +505,13 @@ private[v2] case class GenOffset(gen: Long) extends Offset {
 /** The reference's polling main loop (`main.rs:64-96`: list → merge →
   * sleep → repeat) as a Structured Streaming source: every trigger
   * emits ONE complete rescan of the tree (the same distributed,
-  * pushdown-pruned listing as the batch scan), so
-  * `readStream.format("graft-files") … .trigger(ProcessingTime(i))
-  * .foreachBatch(ScrapeStream.mergeBatch …)` IS the reference's scrape
-  * daemon — rescan cadence from the trigger, per-batch complete-scan
-  * semantics exactly matching the tombstone contract ("vanished keys
-  * delete per scan").
+  * pushdown-pruned listing as the batch scan), so `graft.Main`'s
+  * batch-sink run — the PATHs' rescan streams unioned into one query,
+  * `.trigger(ProcessingTime(i))`, a `foreachBatch` into
+  * `ScrapeStream.mergeBatch` or the PostgreSQL publish — IS the
+  * reference's scrape daemon: rescan cadence from the trigger, per-batch
+  * complete-scan semantics exactly matching the tombstone contract
+  * ("vanished keys delete per scan").
   *
   * Offsets are scan generations, not data positions: listing reads
   * CURRENT filesystem state, so a gap between committed and latest

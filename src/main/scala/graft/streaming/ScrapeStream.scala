@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths}
-
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -26,6 +24,12 @@ import graft.operators.Scrape
   *
   * Each arriving file is treated as ONE complete scan of its
   * external_source (so vanished keys tombstone per batch).
+  *
+  * The same merge is the reference's scrape daemon (`main.rs:64-96`):
+  * `graft.Main`'s `--out` sink is one streaming query over the PATHs'
+  * `graft-files`/`graft-s3` rescan streams whose `foreachBatch` calls
+  * [[mergeBatch]] with the run's sources, one complete rescan per
+  * micro-batch.
   */
 object ScrapeStream {
 
@@ -34,10 +38,14 @@ object ScrapeStream {
 
   /** Read the current snapshot (empty-schema DataFrame when absent).
     * Columns come back in canonical order regardless of the partition
-    * layout (partition columns append last on read). */
+    * layout (partition columns append last on read). The existence check
+    * goes through the session's Hadoop filesystem, like the swap, so a
+    * `file:`, `hdfs://` or `s3a://` state dir is seen, not read as
+    * empty. */
   def readState(spark: SparkSession, stateDir: String): DataFrame = {
-    val p = Paths.get(stateDir)
-    if (Files.exists(p) && Files.list(p).findFirst().isPresent)
+    val p = new org.apache.hadoop.fs.Path(stateDir)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    if (fs.exists(p) && fs.listStatus(p).nonEmpty)
       spark.read.parquet(stateDir).select(stateCols.map(col): _*)
     else
       spark.createDataFrame(
@@ -69,13 +77,18 @@ object ScrapeStream {
     * start of every batch) finishes or rolls back an interrupted swap
     * before the streaming replay re-merges. Renames are atomic on
     * HDFS/POSIX; on object stores without atomic rename (raw S3) state
-    * belongs in a log-structured table format instead. */
-  def mergeBatch(spark: SparkSession, stateDir: String)(
-      scan: DataFrame, batchId: Long): Unit = {
-    // Bounded driver-side collect: one row per scanned source (a batch is
-    // one scan file, almost always a single source).
-    val sources = scan.select("external_source").distinct()
-      .collect().map(_.getString(0)).toIndexedSeq
+    * belongs in a log-structured table format instead.
+    *
+    * `scanned` declares sources this batch is a complete scan of even
+    * when it holds none of their rows: an empty rescan tombstones every
+    * live row of its source (the reference's J2, `db.rs:48-65`). The
+    * sources found in the rows are merged too. */
+  def mergeBatch(spark: SparkSession, stateDir: String,
+      scanned: Seq[String] = Nil)(scan: DataFrame, batchId: Long): Unit = {
+    // Bounded driver-side collect: at most one row per declared or
+    // scanned source.
+    val sources = (scanned ++ scan.select("external_source").distinct()
+      .collect().map(_.getString(0))).distinct.toIndexedSeq
     if (sources.isEmpty) return
     recoverSwaps(spark, stateDir)
     val current = readState(spark, stateDir)
@@ -167,30 +180,6 @@ object ScrapeStream {
       for (st <- fs.listStatus(parent)
            if st.isDirectory && st.getPath.getName.startsWith(state.getName + ".stage-"))
         fs.delete(st.getPath, true)
-  }
-
-  /** The reference's scrape daemon, self-contained: each micro-batch of
-    * the [[graft.sources.v2.FilesSource graft-files]] streaming source
-    * is one complete distributed rescan of `rootUri`, merged into the
-    * partitioned state exactly like [[runAvailable]]'s file-fed batches
-    * (upsert classify → tombstone vanished keys → partition-swap
-    * publish). `Trigger.AvailableNow` = one rescan cycle then stop (the
-    * test/cron form); a `ProcessingTime` trigger = the reference's
-    * poll-sleep loop (`main.rs:64-96`) with the interval as trigger
-    * cadence. Because every batch is a complete scan of its source, the
-    * per-batch deletion contract holds identically for live listings
-    * and replayed scan files. */
-  def runLiveListing(spark: SparkSession, rootUri: String, stateDir: String,
-      identifier: Option[String] = None,
-      trigger: Trigger = Trigger.AvailableNow()): Unit = {
-    val reader = spark.readStream.format("graft-files").option("path", rootUri)
-    val stream = identifier.fold(reader)(id => reader.option("identifier", id)).load()
-    val q = stream.writeStream
-      .foreachBatch(mergeBatch(spark, stateDir) _)
-      .trigger(trigger)
-      .option("checkpointLocation", stateDir + ".listing-checkpoint")
-      .start()
-    q.awaitTermination()
   }
 
   /** Run the incremental scrape over every scan file currently in

@@ -238,6 +238,38 @@ class CliSpec extends AnyFunSuite {
     assert(e.getMessage.contains(tree.toString), e.getMessage)
   }
 
+  test("--stream-events --interval waits on its own query, not on a " +
+      "query that ended earlier in the shared session") {
+    val _ = spark
+    val tree = Files.createTempDirectory("cli_se_daemon")
+    Files.writeString(tree.resolve("a.txt"), "alpha")
+    val out = Files.createTempDirectory("cli_se_daemon_out").toString
+    // a finished query: the session's awaitAnyTermination returns at once
+    // for it until resetTerminated()
+    spark.readStream.format("graft-files").option("path", tree.toString)
+      .load().writeStream.format("memory").queryName("cli_ended_before")
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start().awaitTermination()
+    val before = spark.streams.active.map(_.id).toSet
+    def ours = spark.streams.active.filterNot(q => before(q.id))
+    val daemon = new Thread(() => Main.main(Array("--stream-events", "-i",
+      "cli-se-daemon", "--interval", "1", tree.toString, "--out", out)))
+    daemon.setDaemon(true)
+    daemon.start()
+    try {
+      val deadline = System.currentTimeMillis() + 30000L
+      while (ours.flatMap(_.recentProgress).length < 2 &&
+          System.currentTimeMillis() < deadline) Thread.sleep(100L)
+      assert(ours.flatMap(_.recentProgress).length >= 2,
+        "the daemon's query completed two cycles")
+      assert(daemon.isAlive, "the daemon returned while its query ran on")
+    } finally {
+      ours.foreach(_.stop())
+      daemon.join(30000L)
+    }
+    assert(!daemon.isAlive, "the daemon returns once its query is stopped")
+  }
+
   test("handoff lock honesty (VERDICT r17 #5): schemes without atomic " +
       "create get a visible narrows-not-closes note; local/HDFS silent") {
     assert(Main.lockAtomicityNote(null).isEmpty)

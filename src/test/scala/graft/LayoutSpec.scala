@@ -14,7 +14,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * wire transport to PostgreSQL stages and merges in one place: the
   * `graft-pg` table, whose commit runs `PgMerge.mergeWire`. Each store
   * has one listing path, its DataSource V2 table (`graft-files`,
-  * `graft-s3`): the listing helpers build no RDD of their own. */
+  * `graft-s3`): the listing helpers build no RDD of their own. The scan
+  * daemon has one cycle engine: `Main` runs every mode as a streaming
+  * query, with no loop, sleep or thread pool of its own. */
 class LayoutSpec extends AnyFunSuite {
   private val root = Paths.get("src/main/scala")
 
@@ -118,5 +120,22 @@ class LayoutSpec extends AnyFunSuite {
     Seq("spark.sparkContext.parallelize(chunks, chunks.size)",
         "new Configuration(spark.sparkContext.hadoopConfiguration)")
       .foreach(src => assert(ownRdd.findFirstIn(src).isDefined, src))
+  }
+
+  test("one cycle engine: Main has no poll-sleep loop of its own") {
+    val main = sources.collectFirst { case ("graft/Main.scala", s) => s }
+    assert(main.nonEmpty)
+    val ownLoop = raw"Thread\.sleep|scala\.concurrent|graft\.maxCycles".r
+    val hits = ownLoop.findAllIn(main.get).toSeq
+    assert(hits.isEmpty, s"Main cycles outside a streaming query: $hits")
+    val live = sources.collect {
+      case (f, s) if s.contains("runLiveListing") => f
+    }
+    assert(live.isEmpty, s"a second daemon form: $live")
+    // the guard sees the forms it names
+    Seq("if (c < maxCycles) Thread.sleep(sec * 1000L)",
+        "import scala.concurrent.{Await, ExecutionContext, Future}",
+        "sys.props.get(\"graft.maxCycles\")")
+      .foreach(src => assert(ownLoop.findFirstIn(src).isDefined, src))
   }
 }

@@ -425,7 +425,9 @@ class PgWireSpec extends AnyFunSuite {
     val tree = java.nio.file.Files.createTempDirectory("pg_daemon")
     java.nio.file.Files.writeString(tree.resolve("a.txt"), "alpha")
     java.nio.file.Files.writeString(tree.resolve("b.txt"), "beta")
-    sys.props("graft.maxCycles") = "20"
+    // the daemon runs as one streaming query in the shared session; the
+    // test ends it by stopping the queries it started
+    val before = spark.streams.active.map(_.id).toSet
     val daemon = new Thread(() => Main.main(Array(
       "--pg", s"$host:$port/$db", "-i", "daemon-pg", "--interval", "1",
       tree.toString)))
@@ -450,8 +452,55 @@ class PgWireSpec extends AnyFunSuite {
       assert(withClient(c => t(c, s"SELECT deleted IS NULL FROM " +
         s"${PgMerge.table} WHERE filename = 'b.txt'")))
     } finally {
-      sys.props.remove("graft.maxCycles")
+      spark.streams.active.filterNot(q => before(q.id)).foreach(_.stop())
       daemon.join(30000L)
+      withClient(_.exec(s"DROP TABLE IF EXISTS ${PgMerge.table}"))
+    }
+    assert(!daemon.isAlive, "the daemon returns once its query is stopped")
+  }
+
+  test("--pg over s3:// through the s3a connector: rows carry the s3:// " +
+      "identifier they are published under, so a vanished object is " +
+      "tombstoned") {
+    assume(live, s"no PostgreSQL server at $host:$port")
+    withClient { c =>
+      c.exec(s"DROP TABLE IF EXISTS ${PgMerge.table}")
+      c.exec(
+        s"""CREATE TABLE ${PgMerge.table} (
+           |  external_source TEXT, path TEXT, filename TEXT, mime_type TEXT,
+           |  created TIMESTAMPTZ, modified TIMESTAMPTZ, size BIGINT,
+           |  deleted TIMESTAMPTZ,
+           |  CONSTRAINT ${PgMerge.constraint}
+           |    UNIQUE (external_source, path, filename))""".stripMargin)
+    }
+    // s3:// maps to s3a://, served here by the in-JVM object store
+    val hc = spark.sparkContext.hadoopConfiguration
+    val keys = Seq("fs.s3a.impl", "fs.s3a.impl.disable.cache")
+    val saved = keys.map(k => k -> Option(hc.get(k)))
+    hc.set("fs.s3a.impl", classOf[MockS3FileSystem].getName)
+    hc.set("fs.s3a.impl.disable.cache", "true")
+    MockS3Store.clear()
+    MockS3Store.put("pgs3", "docs/a.txt", 5L, 1700000000000L)
+    MockS3Store.put("pgs3", "docs/sub/b.json", 2L, 1700000001000L)
+    val url = "s3://pgs3/docs"
+    def run(): Unit = Main.main(Array("--pg", s"$host:$port/$db", url))
+    try {
+      run()
+      MockS3Store.bucket("pgs3").remove("docs/a.txt")
+      run()
+      withClient { c =>
+        assert(c.query(s"SELECT DISTINCT external_source FROM " +
+          s"${PgMerge.table}").map(_.head) == Seq(Some(url)))
+        assert(t(c, s"SELECT deleted IS NOT NULL FROM ${PgMerge.table} " +
+          "WHERE filename = 'a.txt'"), "vanished object tombstoned (J2)")
+        assert(t(c, s"SELECT deleted IS NULL FROM ${PgMerge.table} " +
+          "WHERE filename = 'b.json'"))
+      }
+    } finally {
+      // restore, not unset: unset also drops core-default.xml's value
+      // for every later suite of the shared session
+      saved.foreach { case (k, v) => v.fold(hc.unset(k))(hc.set(k, _)) }
+      MockS3Store.clear()
       withClient(_.exec(s"DROP TABLE IF EXISTS ${PgMerge.table}"))
     }
   }

@@ -98,6 +98,41 @@ class ScrapeStreamSpec extends AnyFunSuite {
     assert(rows == Map("a.txt" -> "sA", "b.txt" -> "sB"))
   }
 
+  private def scanOf(src: String, files: String*) =
+    files.map(f => (src, "/d", f, Option("text/plain"),
+      Option.empty[Timestamp], ts("2026-01-01 10:00:00"), Option(1L)))
+      .toDF("external_source", "path", "filename", "mime_type",
+        "created", "modified", "size")
+
+  test("a declared source whose rescan came back empty tombstones all its " +
+      "live rows") {
+    val state = Files.createTempDirectory("scrape_state_empty").toString
+    ScrapeStream.mergeBatch(spark, state)(scanOf("sA", "a.txt", "b.txt"), 0L)
+    ScrapeStream.mergeBatch(spark, state)(scanOf("sB", "c.txt"), 1L)
+    ScrapeStream.mergeBatch(spark, state, scanned = Seq("sA"))(
+      scanOf("sA"), 2L)
+    val rows = ScrapeStream.readState(spark, state)
+      .collect().map(r => r.getString(3) -> r).toMap
+    assert(rows.keySet == Set("a.txt", "b.txt", "c.txt"))
+    assert(!rows("a.txt").isNullAt(8) && !rows("b.txt").isNullAt(8),
+      "the empty rescan of sA tombstones its rows")
+    assert(rows("c.txt").isNullAt(8), "other sources stay untouched")
+  }
+
+  test("a file:-URI state dir is read through the Hadoop filesystem: a " +
+      "file missing from the next scan is tombstoned, not lost") {
+    val dir = Files.createTempDirectory("scrape_state_uri")
+    val state = dir.toUri.toString.stripSuffix("/")
+    assert(state.startsWith("file:"))
+    ScrapeStream.mergeBatch(spark, state)(scanOf("sU", "a.txt", "b.txt"), 0L)
+    ScrapeStream.mergeBatch(spark, state)(scanOf("sU", "b.txt"), 1L)
+    val rows = ScrapeStream.readState(spark, state)
+      .collect().map(r => r.getString(3) -> r).toMap
+    assert(rows.keySet == Set("a.txt", "b.txt"), "a.txt must not be lost")
+    assert(!rows("a.txt").isNullAt(8), "a.txt tombstoned")
+    assert(rows("b.txt").isNullAt(8))
+  }
+
   test("two-batch incremental scrape: insert, update, tombstone") {
     val watch = Files.createTempDirectory("scrape_watch")
     val state = watch.toString + "_state"

@@ -11,9 +11,14 @@ import graft.streaming.ScrapeStream
 /** The graft-files streaming source: one micro-batch = one complete
   * rescan, driving the full live scrape loop (list → merge → tombstone)
   * against a real mutating directory tree — the reference's daemon
-  * (`main.rs:64-96`) end-to-end with no intermediate scan files. */
+  * (`main.rs:64-96`), run through `graft.Main`'s `--out` sink, end-to-end
+  * with no intermediate scan files. */
 class StreamFilesLiveSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
+
+  /** One `graft.Main` scan cycle of `paths` into the `--out` state. */
+  private def scanCycle(id: String, state: String, paths: String*): Unit =
+    Main.main((Seq("-i", id) ++ paths ++ Seq("--out", state)).toArray)
 
   test("streaming rescan batch equals the batch listing") {
     val root = Files.createTempDirectory("graft_stream_src")
@@ -43,8 +48,9 @@ class StreamFilesLiveSpec extends AnyFunSuite {
     Files.writeString(a.resolve("f2.json"), "{}")
     Files.writeString(b.resolve("f3.txt"), "three")
     val state = Files.createTempDirectory("graft_live_state").toString
+    val _ = spark // materialize the shared session so Main reuses it
 
-    ScrapeStream.runLiveListing(spark, root.toString, state, Some("livesrc"))
+    scanCycle("livesrc", state, root.toString)
     val s1 = ScrapeStream.readState(spark, state).collect()
       .map(r => r.getString(3) -> r).toMap
     assert(s1.keySet == Set("f1.txt", "f2.json", "f3.txt"))
@@ -59,7 +65,7 @@ class StreamFilesLiveSpec extends AnyFunSuite {
     Files.setLastModifiedTime(a.resolve("f1.txt"),
       FileTime.fromMillis(f1ModBefore.getTime + 60000))
 
-    ScrapeStream.runLiveListing(spark, root.toString, state, Some("livesrc"))
+    scanCycle("livesrc", state, root.toString)
     val s2 = ScrapeStream.readState(spark, state).collect()
       .map(r => r.getString(3) -> r).toMap
     assert(s2.keySet == Set("f1.txt", "f2.json", "f3.txt", "f4.csv"))
@@ -72,5 +78,36 @@ class StreamFilesLiveSpec extends AnyFunSuite {
     assert(s2("f1.txt").getString(0) == f1Uuid)
     // untouched file survives unmodified
     assert(s2("f3.txt").isNullAt(8))
+  }
+
+  test("two PATHs under one -i are one complete scan: both trees stay live") {
+    val a = Files.createTempDirectory("graft_two_a")
+    val b = Files.createTempDirectory("graft_two_b")
+    Files.writeString(a.resolve("a1.txt"), "a")
+    Files.writeString(a.resolve("a2.txt"), "aa")
+    Files.writeString(b.resolve("b1.txt"), "b")
+    val state = Files.createTempDirectory("graft_two_state").toString
+    val _ = spark
+    scanCycle("twosrc", state, a.toString, b.toString)
+    val rows = ScrapeStream.readState(spark, state).collect()
+      .map(r => r.getString(3) -> r).toMap
+    assert(rows.keySet == Set("a1.txt", "a2.txt", "b1.txt"))
+    assert(rows.values.forall(_.isNullAt(8)),
+      s"tombstoned: ${rows.filterNot(_._2.isNullAt(8)).keySet}")
+    assert(rows.values.forall(_.getString(1) == "twosrc"))
+  }
+
+  test("repeated and nested PATHs under one -i keep one row per file") {
+    val tree = Files.createTempDirectory("graft_dup_tree")
+    val sub = Files.createDirectories(tree.resolve("sub"))
+    Files.writeString(tree.resolve("t.txt"), "t")
+    Files.writeString(sub.resolve("s.txt"), "s")
+    val state = Files.createTempDirectory("graft_dup_state").toString
+    val _ = spark
+    for (_ <- 1 to 2)
+      scanCycle("dupsrc", state, tree.toString, tree.toString, sub.toString)
+    val names = ScrapeStream.readState(spark, state).collect()
+      .map(_.getString(3)).sorted.toSeq
+    assert(names == Seq("s.txt", "t.txt"), "one row per file, every cycle")
   }
 }
