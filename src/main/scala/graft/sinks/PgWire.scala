@@ -556,15 +556,6 @@ final class PgWireClient(host: String, port: Int, user: String,
     rowIterator()
   }
 
-  /** [[queryStream]] through the EXTENDED protocol with `$1…$n` binds —
-    * parameters travel as protocol-level data (see [[execBound]]), rows
-    * stream incrementally exactly like the simple form. */
-  def queryStreamBound(sql: String,
-      params: Seq[Option[String]]): Iterator[Vector[Option[String]]] = {
-    sendExtended(sql, params)
-    rowIterator()
-  }
-
   /** RAW-BYTES streaming query through the extended protocol with
     * BINARY result format for every column (VERDICT r16 #1): a `bytea`
     * column arrives as its exact bytes — no `encode(…,'hex')` doubling

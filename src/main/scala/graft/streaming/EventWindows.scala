@@ -88,39 +88,6 @@ object EventWindows {
       .select(col("user_id"), col("session_window.start").as("session_start"),
         col("n_events"))
 
-  /** Watermarked stream-stream join: each purchase joined to the signups
-    * of the same user within the preceding 7 days. Both sides carry
-    * watermarks and the join condition bounds event-time distance, so
-    * state on each side is evicted once the other side's watermark passes
-    * — bounded state at any scale. */
-  def purchaseSignupJoinStream(s: SparkSession, dir: String): DataFrame = {
-    val p = eventsStream(s, dir).filter(col("event_type") === "purchase")
-      .select(col("user_id").as("p_user"), col("ts").as("p_ts"),
-        col("event_id").as("purchase_id"))
-      .withWatermark("p_ts", "1 hour")
-    val sg = eventsStream(s, dir).filter(col("event_type") === "signup")
-      .select(col("user_id").as("s_user"), col("ts").as("s_ts"))
-      .withWatermark("s_ts", "1 hour")
-    p.join(sg, expr(
-      "p_user = s_user AND s_ts <= p_ts AND s_ts >= p_ts - INTERVAL 7 DAYS"))
-      .select(col("purchase_id"), col("p_user").as("user_id"),
-        col("p_ts"), col("s_ts"))
-  }
-
-  /** Batch-replay oracle of [[purchaseSignupJoinStream]]. */
-  def purchaseSignupJoinBatch(s: SparkSession, dir: String): DataFrame = {
-    val e = events(s, dir)
-    val p = e.filter(col("event_type") === "purchase")
-      .select(col("user_id").as("p_user"), col("ts").as("p_ts"),
-        col("event_id").as("purchase_id"))
-    val sg = e.filter(col("event_type") === "signup")
-      .select(col("user_id").as("s_user"), col("ts").as("s_ts"))
-    p.join(sg, expr(
-      "p_user = s_user AND s_ts <= p_ts AND s_ts >= p_ts - INTERVAL 7 DAYS"))
-      .select(col("purchase_id"), col("p_user").as("user_id"),
-        col("p_ts"), col("s_ts"))
-  }
-
   /** Custom arbitrary state (`flatMapGroupsWithState`) — the API the
     * reference's per-scan seen-set maps to (SURVEY §2.10): per-user
     * running (event count, cumulative value cents), emitted on every

@@ -2,34 +2,29 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.operators.Scrape
 
-/** The reference's whole loop — scan batches → merge → tombstone — as an
-  * incremental Structured-Streaming pipeline (SURVEY §2.10):
+/** The reference's whole loop — rescan → merge → tombstone — as an
+  * incremental Structured Streaming pipeline (SURVEY §2.10), with a
+  * parquet snapshot as its state:
   *
-  *  - micro-batch source: a watched directory of scan-listing parquet
-  *    files, one file per trigger (`maxFilesPerTrigger=1` — the
-  *    count-or-time chunking of `fs.rs:100` in Spark form);
-  *  - `foreachBatch`: each batch merges into the persistent state exactly
-  *    like the batch pipeline (J3 upsert classify + J2 deletion
-  *    tombstoning), then publishes partition-incrementally — the
-  *    `foreachBatch` epilogue is where the JDBC transaction (PgMerge)
-  *    would run against Postgres; here state is a parquet snapshot dir
+  *  - micro-batch source: the rescan streams of [[graft.Scan.start]],
+  *    one complete listing of every PATH per trigger (`graft-files`, or
+  *    `graft-s3` for `s3://` over the REST lister);
+  *  - `foreachBatch`: each cycle merges into the persistent state
+  *    ([[mergeBatch]]: J3 upsert classify + J2 deletion tombstoning,
+  *    stamped with the cycle's scan instant), then publishes
+  *    partition-incrementally. State is a parquet snapshot dir
   *    Hive-partitioned by `external_source`, and only the scanned
   *    sources' partition dirs are swapped (staged write → rename old
   *    aside → rename new in → drop old), approximating K2's
   *    readers-never-see-half-a-scan guarantee (`fs.rs:103-114`).
   *
-  * Each arriving file is treated as ONE complete scan of its
-  * external_source (so vanished keys tombstone per batch).
-  *
-  * The same merge is the reference's scrape daemon (`main.rs:64-96`):
-  * `graft.Main`'s `--out` sink is one streaming query over the PATHs'
-  * `graft-files`/`graft-s3` rescan streams whose `foreachBatch` calls
-  * [[mergeBatch]] with the run's sources, one complete rescan per
-  * micro-batch.
+  * Each micro-batch is ONE complete scan of the sources it declares, so
+  * keys missing from it tombstone in that cycle. `graft.Main --out` is
+  * this cycle on a temporary checkpoint; the PostgreSQL sink runs the
+  * same cycle into `external_file` instead ([[graft.Scan.Pg]]).
   */
 object ScrapeStream {
 
@@ -82,9 +77,16 @@ object ScrapeStream {
     * `scanned` declares sources this batch is a complete scan of even
     * when it holds none of their rows: an empty rescan tombstones every
     * live row of its source (the reference's J2, `db.rs:48-65`). The
-    * sources found in the rows are merged too. */
+    * sources found in the rows are merged too.
+    *
+    * `scanInstant` is the cycle's scan time, read once by the caller when
+    * the batch starts: it stamps every row this batch finds missing, so
+    * `deleted` is the latest scan that saw the file gone, as with the
+    * reference's UPDATE (`README.md:6-8`, `db.rs:48-65`). `batchId`
+    * names the batch's staging and holding dirs. */
   def mergeBatch(spark: SparkSession, stateDir: String,
-      scanned: Seq[String] = Nil)(scan: DataFrame, batchId: Long): Unit = {
+      scanned: Seq[String] = Nil)(scan: DataFrame, batchId: Long,
+      scanInstant: java.sql.Timestamp): Unit = {
     // Bounded driver-side collect: at most one row per declared or
     // scanned source.
     val sources = (scanned ++ scan.select("external_source").distinct()
@@ -94,15 +96,13 @@ object ScrapeStream {
     val current = readState(spark, stateDir)
       .filter(col("external_source").isin(sources: _*))
     val classified = Scrape.upsertClassify(current, scan)
-    val scanInstant = lit(new java.sql.Timestamp(1767225600000L + batchId))
-      .cast("timestamp") // deterministic per-batch "transaction time"
     val applied = classified.select(
       coalesce(col("uuid_external_file"), ScrapeTws.uuidCol)
         .as("uuid_external_file"), // ONE copy of the surrogate (r18)
       col("external_source"), col("path"), col("filename"),
       col("mime_type"), col("created"), col("modified"), col("size"),
       lit(null).cast("timestamp").as("deleted"))
-    val dels = Scrape.deletions(current, scan, scanInstant)
+    val dels = Scrape.deletions(current, scan, lit(scanInstant))
       .select("uuid_external_file", "deleted")
     val untouchedDeleted = current.join(
       scan.select("external_source", "path", "filename"),
@@ -180,23 +180,5 @@ object ScrapeStream {
       for (st <- fs.listStatus(parent)
            if st.isDirectory && st.getPath.getName.startsWith(state.getName + ".stage-"))
         fs.delete(st.getPath, true)
-  }
-
-  /** Run the incremental scrape over every scan file currently in
-    * `watchDir`, one micro-batch per file, then stop. */
-  def runAvailable(spark: SparkSession, watchDir: String, stateDir: String): Unit = {
-    val schema = org.apache.spark.sql.types.StructType.fromDDL(
-      "external_source string, path string, filename string, " +
-        "mime_type string, created timestamp, modified timestamp, size bigint")
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .option("latestFirst", "false")
-      .parquet(watchDir)
-    val q = stream.writeStream
-      .foreachBatch(mergeBatch(spark, stateDir) _)
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", watchDir + ".checkpoint")
-      .start()
-    q.awaitTermination()
   }
 }

@@ -15,8 +15,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * `graft-pg` table, whose commit runs `PgMerge.mergeWire`. Each store
   * has one listing path, its DataSource V2 table (`graft-files`,
   * `graft-s3`): the listing helpers build no RDD of their own. The scan
-  * daemon has one cycle engine: `Main` runs every mode as a streaming
-  * query, with no loop, sleep or thread pool of its own. */
+  * daemon has one cycle engine: every mode is a streaming query, with no
+  * loop, sleep or thread pool of its own, started by a library entry
+  * ([[Scan]], [[WatchPg]]); `Main` only parses argv and prints. */
 class LayoutSpec extends AnyFunSuite {
   private val root = Paths.get("src/main/scala")
 
@@ -128,6 +129,13 @@ class LayoutSpec extends AnyFunSuite {
     val ownLoop = raw"Thread\.sleep|scala\.concurrent|graft\.maxCycles".r
     val hits = ownLoop.findAllIn(main.get).toSeq
     assert(hits.isEmpty, s"Main cycles outside a streaming query: $hits")
+    // nor do the library entries Main calls
+    Seq("graft/Scan.scala", "graft/WatchPg.scala").foreach { f =>
+      val src = sources.collectFirst { case (`f`, s) => s }
+      assert(src.nonEmpty, f)
+      val libHits = ownLoop.findAllIn(src.get).toSeq
+      assert(libHits.isEmpty, s"$f cycles outside a streaming query: $libHits")
+    }
     val live = sources.collect {
       case (f, s) if s.contains("runLiveListing") => f
     }
@@ -137,5 +145,29 @@ class LayoutSpec extends AnyFunSuite {
         "import scala.concurrent.{Await, ExecutionContext, Future}",
         "sys.props.get(\"graft.maxCycles\")")
       .foreach(src => assert(ownLoop.findFirstIn(src).isDefined, src))
+  }
+
+  test("the scan cycle is a library: Main only parses argv and prints") {
+    val main = sources.collectFirst { case ("graft/Main.scala", s) => s }
+    assert(main.nonEmpty)
+    val lines = main.get.linesIterator.size
+    assert(lines <= 400, s"Main.scala has $lines lines (at most 400)")
+    // the streams, the changefeed and the publish are the library's
+    val engine = raw"\b(writeStream|readStream|foreachBatch|PgChangeFeed|publishScan\w*)\b|PgWireClient\.connect".r
+    val hits = engine.findAllIn(main.get).toSeq
+    assert(hits.isEmpty, s"Main runs a mode itself: $hits")
+    // the unshipped second entry points stay deleted
+    val gone = raw"\b(runAvailable|purchaseSignupJoinBatch|queryStreamBound)\b".r
+    val dead = sources.collect {
+      case (f, s) if gone.findFirstIn(s).isDefined => f
+    }
+    assert(dead.isEmpty, s"deleted entry points are back: $dead")
+    // the guards see the forms they name
+    Seq("df.writeStream.foreachBatch(f)", "spark.readStream.format(x)",
+        "PgChangeFeed.bootstrapSnapshot(opts)",
+        "sinks.PgWireClient.connect(t.host, t.port)",
+        "sinks.PgMerge.publishScanWire(batch)", "PgMerge.publishScan(b)")
+      .foreach(src => assert(engine.findFirstIn(src).isDefined, src))
+    assert(gone.findFirstIn("def runAvailable(spark: SparkSession)").isDefined)
   }
 }

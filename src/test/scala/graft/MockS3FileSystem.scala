@@ -39,11 +39,21 @@ object MockS3Store {
   def bucket(b: String): ConcurrentSkipListMap[String, (Long, Long)] =
     buckets.computeIfAbsent(b, _ => new ConcurrentSkipListMap[String, (Long, Long)]())
 
+  /** (bucket, key) → bytes of the objects put with content; every other
+    * object is listing-only. */
+  val contents = new ConcurrentHashMap[(String, String), Array[Byte]]()
+
   def put(b: String, key: String, size: Long, mtime: Long): Unit =
     bucket(b).put(key, (size, mtime))
 
+  /** An object that [[MockS3FileSystem.open]] can read back. */
+  def putBytes(b: String, key: String, bytes: Array[Byte], mtime: Long): Unit = {
+    contents.put((b, key), bytes)
+    put(b, key, bytes.length.toLong, mtime)
+  }
+
   def clear(): Unit = {
-    buckets.clear(); seenEndpoints.clear(); pagesServed.set(0)
+    buckets.clear(); contents.clear(); seenEndpoints.clear(); pagesServed.set(0)
     requiredSecret.set(null)
   }
 }
@@ -182,9 +192,15 @@ class MockS3FileSystem extends FileSystem {
     }
   }
 
-  // The listing stack never reads, writes, or mutates objects.
-  override def open(f: Path, bufferSize: Int): FSDataInputStream =
-    throw new UnsupportedOperationException("mocks3 is listing-only")
+  // The listing stack never writes or mutates objects; it reads only
+  // the objects a spec put with content (a watch log's marker).
+  override def open(f: Path, bufferSize: Int): FSDataInputStream = {
+    checkAuth()
+    val bytes = Option(MockS3Store.contents.get((bucketName, keyOf(f))))
+      .getOrElse(throw new UnsupportedOperationException(
+        "mocks3 is listing-only"))
+    new FSDataInputStream(new MockS3FileSystem.BytesIn(bytes))
+  }
   override def create(f: Path, permission: FsPermission, overwrite: Boolean,
       bufferSize: Int, replication: Short, blockSize: Long,
       progress: Progressable): FSDataOutputStream =
@@ -198,4 +214,26 @@ class MockS3FileSystem extends FileSystem {
     throw new UnsupportedOperationException("mocks3 is listing-only")
   override def mkdirs(f: Path, permission: FsPermission): Boolean =
     throw new UnsupportedOperationException("mocks3 is listing-only")
+}
+
+object MockS3FileSystem {
+  /** A seekable in-memory object body, as `FSDataInputStream` needs. */
+  private final class BytesIn(bytes: Array[Byte])
+      extends java.io.ByteArrayInputStream(bytes)
+      with Seekable with PositionedReadable {
+    override def seek(p: Long): Unit = pos = p.toInt
+    override def getPos: Long = pos.toLong
+    override def seekToNewSource(p: Long): Boolean = false
+    override def read(p: Long, b: Array[Byte], off: Int, len: Int): Int =
+      if (p >= bytes.length) -1
+      else {
+        val n = math.min(len, bytes.length - p.toInt)
+        System.arraycopy(bytes, p.toInt, b, off, n)
+        n
+      }
+    override def readFully(p: Long, b: Array[Byte], off: Int, len: Int): Unit =
+      if (read(p, b, off, len) < len) throw new java.io.EOFException()
+    override def readFully(p: Long, b: Array[Byte]): Unit =
+      readFully(p, b, 0, b.length)
+  }
 }

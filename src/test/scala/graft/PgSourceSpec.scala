@@ -29,6 +29,22 @@ class PgSourceSpec extends AnyFunSuite {
     try f(c) finally c.close()
   }
 
+  /** `pg_stat_reset()` once no other client backend of the test
+    * database is left, waiting at most 30 s: a previous read's shard
+    * sessions flush their table counters as they exit, and one that
+    * exits after the reset adds its blocks to the next measurement (a
+    * ctid read once counted exactly 4× its true blocks that way). */
+  private def resetStats(): Unit = withClient { c =>
+    def others: Long = c.queryOne("SELECT count(*) FROM pg_stat_activity " +
+      "WHERE datname = current_database() AND pid <> pg_backend_pid() " +
+      "AND backend_type = 'client backend'").map(_.toLong).getOrElse(0L)
+    val deadline = System.currentTimeMillis() + 30000L
+    while (others > 0L && System.currentTimeMillis() < deadline)
+      Thread.sleep(100L)
+    c.queryOne("SELECT pg_stat_reset()")
+    ()
+  }
+
   private def createTable(c: PgWireClient): Unit = {
     c.exec(s"DROP TABLE IF EXISTS ${PgMerge.table}")
     c.exec(
@@ -428,7 +444,7 @@ class PgSourceSpec extends AnyFunSuite {
     // a warm cache must not hide the amplification). Stats flush when
     // the shard connections close; poll until the counter is stable.
     def blocksTouched(mode: String): Long = {
-      withClient(_.queryOne("SELECT pg_stat_reset()"))
+      resetStats()
       signature(mode)
       def counter: Long = withClient(_.queryOne(
         "SELECT coalesce(heap_blks_read + heap_blks_hit, 0) " +
@@ -613,7 +629,7 @@ class PgSourceSpec extends AnyFunSuite {
       .option("partitions", "4").load()
       .filter(col("external_source") === "RF")
     def blocksTouched[A](run: => A): Long = {
-      withClient(_.queryOne("SELECT pg_stat_reset()"))
+      resetStats()
       run
       def counter: Long = withClient(_.queryOne(
         "SELECT coalesce(heap_blks_read + heap_blks_hit, 0) " +
@@ -740,7 +756,7 @@ class PgSourceSpec extends AnyFunSuite {
       // O(changes): with DML quiet, triggers keep firing (WAL advances
       // server-wide) but the TABLE is never touched — zero scans, zero
       // heap blocks, while the rescan watch would read 3 rows per 250ms
-      withClient(_.queryOne("SELECT pg_stat_reset()"))
+      resetStats()
       Thread.sleep(2000L)
       val scans = withClient(_.queryOne(
         "SELECT coalesce(seq_scan, 0) + coalesce(idx_scan, 0) " +
@@ -1856,5 +1872,43 @@ class PgSourceSpec extends AnyFunSuite {
     }
     assert(PgWireClient.live == 0, "no leaked connections after stop")
     withClient(_.exec(s"DROP TABLE ${PgMerge.table}"))
+  }
+
+  test("slots reads the markers through the session's Hadoop conf: a " +
+      "slot claimed under an --out only the session can resolve stays " +
+      "CLAIMED and is not dropped") {
+    assume(live, s"no PostgreSQL server at $host:$port")
+    assume(withClient(_.queryOne("SHOW wal_level")) == Some("logical"),
+      "changefeed needs wal_level=logical on the harness server")
+    val slot = "graft_cf_confchan_0000beef"
+    // a scheme only this session's Hadoop conf knows: a bare
+    // Configuration fails on it at once
+    val hc = spark.sparkContext.hadoopConfiguration
+    val keys = Seq("fs.graftslots.impl", "fs.graftslots.impl.disable.cache")
+    val saved = keys.map(k => k -> Option(hc.get(k)))
+    hc.set("fs.graftslots.impl", classOf[MockS3FileSystem].getName)
+    hc.set("fs.graftslots.impl.disable.cache", "true")
+    MockS3Store.clear()
+    MockS3Store.putBytes("slotsout", "w/events/WP/_graft_changefeed",
+      s"$slot\nWP".getBytes("UTF-8"), 1700000000000L)
+    withClient(_.query("SELECT pg_create_logical_replication_slot(" +
+      s"'$slot', 'pgoutput')"))
+    try {
+      val buf = new java.io.ByteArrayOutputStream()
+      Console.withOut(new java.io.PrintStream(buf))(Main.main(Array(
+        "slots", url, "--out", "graftslots://slotsout/w", "--drop-orphans")))
+      val report = new String(buf.toByteArray, "UTF-8")
+      assert(report.linesIterator.exists(l => l.startsWith(s"$slot  CLAIMED by ") &&
+        l.contains("graftslots://slotsout/w/events/WP")), s"got:\n$report")
+      assert(!report.contains(s"dropped $slot"), s"got:\n$report")
+      assert(withClient(_.queryOne("SELECT count(*) FROM pg_replication_slots " +
+        s"WHERE slot_name = '$slot'")) == Some("1"), "the claimed slot survives")
+    } finally {
+      withClient(_.query("SELECT pg_drop_replication_slot(slot_name) FROM " +
+        s"pg_replication_slots WHERE slot_name = '$slot'"))
+      // restore, not unset: unset also drops core-default.xml's value
+      saved.foreach { case (k, v) => v.fold(hc.unset(k))(hc.set(k, _)) }
+      MockS3Store.clear()
+    }
   }
 }

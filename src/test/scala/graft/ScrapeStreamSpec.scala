@@ -1,36 +1,25 @@
 package graft
 
 import java.nio.file.{Files, Path, Paths}
-import java.nio.file.attribute.FileTime
 import java.sql.Timestamp
 
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.streaming.ScrapeStream
 
-/** End-to-end incremental scrape: two scan files arrive as two
-  * micro-batches; the state snapshot must show inserts, updates, and the
-  * vanished-key tombstone after the second scan. */
+/** The parquet snapshot merge: partition-incremental publication, swap
+  * recovery, and, end to end through [[Scan.start]], two rescans of a
+  * tree whose state must show inserts, updates, and the vanished-key
+  * tombstone after the second. */
 class ScrapeStreamSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
   private def ts(s: String) = Timestamp.valueOf(s)
 
-  private def writeScanFile(dir: Path, name: String,
-      rows: Seq[(String, String, String, Option[String], Option[Timestamp], Timestamp, Option[Long])],
-      mtime: Long): Unit = {
-    val staging = Files.createTempDirectory("scan_staging")
-    rows.toDF("external_source", "path", "filename", "mime_type",
-      "created", "modified", "size")
-      .coalesce(1).write.mode("overwrite").parquet(staging.toString)
-    val part = Files.list(staging).filter(p => p.toString.endsWith(".parquet"))
-      .findFirst().get()
-    val target = dir.resolve(name)
-    Files.move(part, target)
-    Files.setLastModifiedTime(target, FileTime.fromMillis(mtime))
-  }
+  // each merge's scan instant: deterministic, one millisecond per batch
+  private def at(batch: Long) = new Timestamp(1767225600000L + batch)
 
   test("merge touches only the scanned source's partition") {
     val state = Files.createTempDirectory("scrape_state_inc").toString
@@ -40,8 +29,8 @@ class ScrapeStreamSpec extends AnyFunSuite {
           "created", "modified", "size")
     val t1 = ts("2026-01-01 10:00:00")
     val t2 = ts("2026-01-02 10:00:00")
-    ScrapeStream.mergeBatch(spark, state)(scanDF("sA", "a.txt", t1, 1L), 0L)
-    ScrapeStream.mergeBatch(spark, state)(scanDF("sB", "b.txt", t1, 2L), 1L)
+    ScrapeStream.mergeBatch(spark, state)(scanDF("sA", "a.txt", t1, 1L), 0L, at(0))
+    ScrapeStream.mergeBatch(spark, state)(scanDF("sB", "b.txt", t1, 2L), 1L, at(1))
 
     def snapshot(p: Path): Seq[(String, Long, Long)] = {
       import scala.jdk.CollectionConverters._
@@ -54,7 +43,7 @@ class ScrapeStreamSpec extends AnyFunSuite {
     assert(before.nonEmpty)
 
     // a scan of sB must leave sA's partition files physically untouched
-    ScrapeStream.mergeBatch(spark, state)(scanDF("sB", "b.txt", t2, 20L), 2L)
+    ScrapeStream.mergeBatch(spark, state)(scanDF("sB", "b.txt", t2, 20L), 2L, at(2))
     assert(snapshot(aDir) == before)
 
     val rows = ScrapeStream.readState(spark, state)
@@ -70,8 +59,8 @@ class ScrapeStreamSpec extends AnyFunSuite {
         ts("2026-01-01 10:00:00"), Option(1L)))
         .toDF("external_source", "path", "filename", "mime_type",
           "created", "modified", "size")
-    ScrapeStream.mergeBatch(spark, state)(scanDF("sA", "a.txt"), 0L)
-    ScrapeStream.mergeBatch(spark, state)(scanDF("sB", "b.txt"), 1L)
+    ScrapeStream.mergeBatch(spark, state)(scanDF("sA", "a.txt"), 0L, at(0))
+    ScrapeStream.mergeBatch(spark, state)(scanDF("sB", "b.txt"), 1L, at(1))
 
     // crash between "old aside" and "new in": sA's live partition is gone,
     // its only copy sits under the holding dir
@@ -107,10 +96,10 @@ class ScrapeStreamSpec extends AnyFunSuite {
   test("a declared source whose rescan came back empty tombstones all its " +
       "live rows") {
     val state = Files.createTempDirectory("scrape_state_empty").toString
-    ScrapeStream.mergeBatch(spark, state)(scanOf("sA", "a.txt", "b.txt"), 0L)
-    ScrapeStream.mergeBatch(spark, state)(scanOf("sB", "c.txt"), 1L)
+    ScrapeStream.mergeBatch(spark, state)(scanOf("sA", "a.txt", "b.txt"), 0L, at(0))
+    ScrapeStream.mergeBatch(spark, state)(scanOf("sB", "c.txt"), 1L, at(1))
     ScrapeStream.mergeBatch(spark, state, scanned = Seq("sA"))(
-      scanOf("sA"), 2L)
+      scanOf("sA"), 2L, at(2))
     val rows = ScrapeStream.readState(spark, state)
       .collect().map(r => r.getString(3) -> r).toMap
     assert(rows.keySet == Set("a.txt", "b.txt", "c.txt"))
@@ -124,8 +113,8 @@ class ScrapeStreamSpec extends AnyFunSuite {
     val dir = Files.createTempDirectory("scrape_state_uri")
     val state = dir.toUri.toString.stripSuffix("/")
     assert(state.startsWith("file:"))
-    ScrapeStream.mergeBatch(spark, state)(scanOf("sU", "a.txt", "b.txt"), 0L)
-    ScrapeStream.mergeBatch(spark, state)(scanOf("sU", "b.txt"), 1L)
+    ScrapeStream.mergeBatch(spark, state)(scanOf("sU", "a.txt", "b.txt"), 0L, at(0))
+    ScrapeStream.mergeBatch(spark, state)(scanOf("sU", "b.txt"), 1L, at(1))
     val rows = ScrapeStream.readState(spark, state)
       .collect().map(r => r.getString(3) -> r).toMap
     assert(rows.keySet == Set("a.txt", "b.txt"), "a.txt must not be lost")
@@ -134,21 +123,21 @@ class ScrapeStreamSpec extends AnyFunSuite {
   }
 
   test("two-batch incremental scrape: insert, update, tombstone") {
-    val watch = Files.createTempDirectory("scrape_watch")
-    val state = watch.toString + "_state"
+    val tree = Files.createTempDirectory("scrape_tree")
+    val state = tree.toString + "_state"
+    val checkpoint = tree.toString + "_checkpoint"
+    // one rescan of the tree per run, resuming the run's checkpoint
+    def rescan(): Unit = Scan.awaitRun(Seq(Scan.start(spark,
+      Seq(tree.toString), Some("s1"), Scan.Out(state),
+      Trigger.AvailableNow(), checkpoint)))
 
-    val t1 = ts("2026-01-01 10:00:00")
-    val t2 = ts("2026-01-02 10:00:00")
-    writeScanFile(watch, "scan1.parquet", Seq(
-      ("s1", "/d", "a.txt", Some("text/plain"), None, t1, Some(1L)),
-      ("s1", "/d", "b.txt", Some("text/plain"), None, t1, Some(2L)),
-    ), mtime = 1000000)
-    writeScanFile(watch, "scan2.parquet", Seq(
-      ("s1", "/d", "b.txt", Some("text/plain"), None, t2, Some(20L)), // changed
-      ("s1", "/d", "c.txt", Some("text/plain"), None, t2, Some(3L)),  // new
-    ), mtime = 2000000)
-
-    ScrapeStream.runAvailable(spark, watch.toString, state)
+    Files.writeString(tree.resolve("a.txt"), "a")
+    Files.writeString(tree.resolve("b.txt"), "bb")
+    rescan()
+    Files.delete(tree.resolve("a.txt"))                  // vanished
+    Files.writeString(tree.resolve("b.txt"), "b" * 20)   // changed
+    Files.writeString(tree.resolve("c.txt"), "ccc")      // new
+    rescan()
 
     val rows = ScrapeStream.readState(spark, state)
       .collect().map(r => r.getString(3) -> r).toMap

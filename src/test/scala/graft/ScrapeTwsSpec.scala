@@ -20,7 +20,7 @@ import graft.streaming.{ScrapeStream, ScrapeTws}
 class ScrapeTwsSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
-  private val base = 1767225600000L // mergeBatch's deterministic epoch
+  private val base = 1767225600000L // the replays' deterministic epoch
 
   // (path, filename, mime, created_ms, modified_ms, size) per scan;
   // crafted so every upsert/tombstone shape appears. The revive needs
@@ -73,7 +73,8 @@ class ScrapeTwsSpec extends AnyFunSuite {
       val stateDir = Files.createTempDirectory("tws_scrape_state").toString + "/st"
       (0 to 3).foreach { i =>
         ScrapeStream.mergeBatch(spark, stateDir)(
-          scanDf(i).drop("observed"), i.toLong)
+          scanDf(i).drop("observed"), i.toLong,
+          new java.sql.Timestamp(base + i))
       }
       val batchState = ScrapeStream.readState(spark, stateDir).collect()
         .map(r => (r.getString(2), r.getString(3)) -> (
@@ -170,7 +171,8 @@ class ScrapeTwsSpec extends AnyFunSuite {
           .toString + "/st"
         (0 to 3).foreach { i =>
           ScrapeStream.mergeBatch(spark, stateDir)(
-            df(i).drop("observed"), i.toLong)
+            df(i).drop("observed"), i.toLong,
+            new java.sql.Timestamp(base + i))
         }
         val batchState = ScrapeStream.readState(spark, stateDir).collect()
           .map(r => (r.getString(2), r.getString(3)) -> (
@@ -397,7 +399,8 @@ class ScrapeTwsSpec extends AnyFunSuite {
         .toString + "/st"
       (0 to 3).foreach { i =>
         ScrapeStream.mergeBatch(spark, stateDir)(
-          scanDf(i).drop("observed"), i.toLong)
+          scanDf(i).drop("observed"), i.toLong,
+          new java.sql.Timestamp(base + i))
       }
       val batchState = ScrapeStream.readState(spark, stateDir).collect()
         .map(r => (r.getString(2), r.getString(3)) -> (
@@ -547,7 +550,8 @@ class ScrapeTwsSpec extends AnyFunSuite {
       val stateDir = Files.createTempDirectory("tws_rb_state").toString + "/st"
       (0 to 3).foreach { i =>
         ScrapeStream.mergeBatch(spark, stateDir)(
-          scanDf(i).drop("observed"), i.toLong)
+          scanDf(i).drop("observed"), i.toLong,
+          new java.sql.Timestamp(base + i))
       }
       def stateMap(df: org.apache.spark.sql.DataFrame) =
         df.collect().map(r => (r.getString(2), r.getString(3)) -> (
