@@ -1,4 +1,7 @@
 package graft
+
+import scala.util.control.NonFatal
+
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -21,7 +24,7 @@ object Bench {
       new String(java.nio.file.Files.readAllBytes(
         java.nio.file.Paths.get("/proc/loadavg")), "UTF-8")
         .split(" ")(0).toDouble
-    } catch { case _: Throwable =>
+    } catch { case NonFatal(_) =>
       java.lang.management.ManagementFactory
         .getOperatingSystemMXBean.getSystemLoadAverage
     }
@@ -63,7 +66,7 @@ object Bench {
     Seq("region", "nation", "customer", "supplier", "part", "orders",
       "lineitem", "events", "documents", "embeddings").foreach { t =>
       try spark.read.parquet(s"$sfDir/$t.parquet").count()
-      catch { case _: Throwable => }
+      catch { case NonFatal(_) => }
     }
     spark.range(1000000L).selectExpr("sum(id)").collect()
     val warmupSec = (System.nanoTime() - warm0) / 1e9
@@ -87,7 +90,7 @@ object Bench {
     val allRuns = SparkEntry.queries.map { case (name, fn) =>
       val runs = (1 to nRuns).map { _ =>
         val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case e: Throwable =>
+        try { fn(spark, sfDir).count() } catch { case NonFatal(e) =>
           errors(name) = s"${e.getClass.getSimpleName}: ${e.getMessage}"
         }
         val t = (System.nanoTime() - t0) / 1e9
@@ -175,7 +178,7 @@ object Bench {
           }.mkString(",")
           val totalSec = fmt(stats.map(_._2.secs).sum)
           s""""streaming":{"rows":200000,"total_sec":$totalSec,$body},"""
-        } catch { case e: Throwable =>
+        } catch { case NonFatal(e) =>
           errors("streaming_bench") = s"${e.getClass.getSimpleName}: ${e.getMessage}"
           ""
         }
@@ -198,7 +201,7 @@ object Bench {
             s""""c2_sec":${fmt(st.c2Sec)},"rows2":${st.rows2},""" +
             s""""rps2":${(st.rows2 / st.c2Sec).toLong},""" +
             s""""live":${st.live},"dead":${st.dead}},"""
-        } catch { case e: Throwable =>
+        } catch { case NonFatal(e) =>
           errors("product_bench") =
             s"${e.getClass.getSimpleName}: ${e.getMessage}"
           ""
@@ -251,7 +254,7 @@ object Bench {
       (jsonFor(slowestFirst,
         health + s""""errors":$errJson,"n_queries":${results.size},""") + "\n")
         .getBytes("UTF-8"))
-    catch { case _: Throwable => }
+    catch { case NonFatal(_) => }
     spark.stop()
     // Nonzero rc on any crashed query: the harness exit code is a real
     // health signal (ADVICE r7 — rc was 0 with 7 queries crashing).

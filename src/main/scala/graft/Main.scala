@@ -263,9 +263,8 @@ object Main {
         // default to a REMOTE database deserves one visible line
         println("graft: sink resolved from DATABASE_URL (no sink flag " +
           "given) — publishing to the database it names, not ./scan_out")
-      val onCycle: Long => Unit = s.sink match {
-        case Scan.Out(dir) => _ => println(s"scan complete: " +
-          s"${streaming.ScrapeStream.readState(spark, dir).count()} rows in state at $dir")
+      val onCycle: streaming.ScrapeStream.CycleCounts => Unit = s.sink match {
+        case Scan.Out(dir) => n => println(s"scan complete: $n at $dir")
         case _ => _ => ()
       }
       // a daemon ends by a signal, which skips the finally: then the

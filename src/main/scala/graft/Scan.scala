@@ -53,17 +53,18 @@ object Scan {
     * cycle, so an empty rescan tombstones its source's live rows. The
     * cycle reads the clock once on the driver when the batch starts; that
     * instant stamps the `Out` sink's tombstones (the PG sink stamps the
-    * server's `now()`). `onCycle` runs after each publish with the batch
-    * id. Any failure fails the query (S8, `main.rs:61-65`). */
+    * server's `now()`). `onCycle` runs after each `Out` publish with the
+    * merge's keys per action over the declared sources. Any failure
+    * fails the query (S8, `main.rs:61-65`). */
   def start(spark: SparkSession, paths: Seq[String],
       identifier: Option[String], sink: Sink, trigger: Trigger,
       checkpoint: String, listing: Listing = Listing(),
-      onCycle: Long => Unit = _ => ()): StreamingQuery = {
+      onCycle: ScrapeStream.CycleCounts => Unit = _ => ()): StreamingQuery = {
     require(paths.nonEmpty, "at least one PATH required")
     val scanned = paths.map(FileListing.identifierFor(_, identifier)).distinct
     val publish: (DataFrame, Long, java.sql.Timestamp) => Unit = sink match {
       case Out(dir) => (batch, cycle, at) =>
-        ScrapeStream.mergeBatch(spark, dir, scanned)(batch, cycle, at)
+        onCycle(ScrapeStream.mergeBatch(spark, dir, scanned)(batch, cycle, at))
       case Pg(t) => (batch, _, _) =>
         scanned.foreach(src => PgMerge.publishScanWire(
           batch.filter(col("external_source") === src), t.host, t.port,
@@ -82,7 +83,7 @@ object Scan {
           df.dropDuplicates("external_source", "path", "filename") else df
         // the sinks read the listing more than once: list it once
         val batch = keyed.persist()
-        try { publish(batch, cycle, at); onCycle(cycle) }
+        try publish(batch, cycle, at)
         finally { batch.unpersist(); () }
       }
       .option("checkpointLocation", checkpoint)

@@ -65,7 +65,7 @@ object Verify {
         fn(spark, sfDir).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")
         Files.deleteIfExists(Paths.get(s"$outDir/$name.__err.txt"))
-      } catch { case e: Throwable =>
+      } catch { case scala.util.control.NonFatal(e) =>
         val msg = s"${e.getClass.getSimpleName}: ${e.getMessage}"
         failed(name) = msg
         System.err.println(s"[verify] FAILED $name: $msg")

@@ -74,7 +74,7 @@ object WindowLint {
           println(s"ok   $name: partition-less windows ${rows.mkString(",")} rows")
         }
       } catch {
-        case e: Throwable =>
+        case scala.util.control.NonFatal(e) =>
           violations += 1
           println(s"FAIL $name: ${e.getMessage}")
       }

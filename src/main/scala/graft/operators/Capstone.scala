@@ -162,9 +162,10 @@ object Capstone {
     * counts per action, the mime-preservation count (hand-corrected
     * types surviving a rescan — THE reference behavior, `db.rs:88-90`),
     * the tombstone count, and the seen-set size — all from ONE
-    * full-outer merge join + one aggregate ([[Scrape.scanCycleAudit]];
-    * the separate-operator formulation costs three joins over the same
-    * keys). */
+    * full-outer merge join + one aggregate ([[Scrape.scanCycleAudit]]
+    * folds [[Scrape.cycle]], the same per-key frame the `--out` merge
+    * writes; the separate-operator formulation costs three joins over
+    * the same keys). */
   def qCapstoneScrape(s: SparkSession, dir: String): DataFrame =
     Scrape.scanCycleAudit(Scrape.filesCurrent(s, dir), Scrape.filesScan(s, dir))
 

@@ -28,11 +28,11 @@ import graft.functions.Mime
   *  - Key comparisons are on (external_source, path, filename) — the
   *    uniqueness constraint inferred at `db.rs:108`.
   *
-  * Scale notes: the merge joins shuffle both sides by the natural key; at
-  * 100 TB the `current` side arrives partitioned from the previous scan's
-  * output (or bucketed storage), so only the new scan shuffles. Deletion
-  * detection is a left-anti join — Spark/AQE picks broadcast when the
-  * seen-set is small.
+  * Scale notes: [[cycle]] (the `--out` merge and the audit) is ONE
+  * full-outer join that shuffles both sides by the natural key and reads
+  * the current slice once; at 100 TB the `current` side arrives
+  * partitioned from the previous scan's output (or bucketed storage), so
+  * only the new scan shuffles.
   */
 object Scrape {
 
@@ -103,41 +103,47 @@ object Scrape {
       .distinct()
   }
 
-  /** The WHOLE scan cycle — upsert classification (J3), mime
-    * preservation, deletion detection (J2), and the seen-set size
-    * (J1+J4) — from ONE full-outer merge join: scan-only rows are
-    * inserts, both-sides rows classify update/unchanged, current-only
-    * rows are the tombstone set. Running the reference's entire
-    * transaction (`db.rs:48-124`) as separate operators costs three
-    * joins over the same keys; the audit needs one join + one aggregate
-    * (the distinct seen-count rides the same aggregate via a null-gated
-    * struct). Emits (metric, n) rows via `stack`. */
-  def scanCycleAudit(current: DataFrame, scan: DataFrame): DataFrame = {
-    val c = current.as("c")
-    val n = scan.as("n")
-    val joinCond = keyCols.map(k => n(k) === c(k)).reduce(_ && _)
+  /** The WHOLE scan cycle per key from ONE full-outer merge join and one
+    * projection — the reference's transaction (`db.rs:48-124`) without
+    * the three joins the operators above cost. Each key comes back as
+    * its next state row plus `action` (insert|update|unchanged|deleted)
+    * and `mime_preserved` (an unchanged row whose kept mime differs from
+    * the scan's guess, `db.rs:88-90`). The uuid is the current one, else
+    * [[graft.streaming.ScrapeTws.uuidCol]]; a key the scan saw takes its
+    * metadata with `deleted` NULL (an unchanged one keeps the current
+    * mime); a key it missed keeps its row stamped `scanInstant`,
+    * re-stamping earlier tombstones like the reference (`db.rs:54-58`). */
+  def cycle(current: DataFrame, scan: DataFrame, scanInstant: Column): DataFrame = {
+    val (c, n) = (current.as("c"), scan.as("n"))
     val scanHit = n("filename").isNotNull
-    val curHit = c("filename").isNotNull
-    n.join(c, joinCond, "full_outer")
-      .select(
-        when(!scanHit, "deleted")
-          .when(!curHit, "insert")
-          .when(changed(n, c), "update")
-          .otherwise("unchanged").as("action"),
-        // For unchanged rows the resolved mime is the current one; it
-        // "preserved a correction" when it differs from the fresh guess.
-        (!(c("mime_type") <=> n("mime_type"))).as("mime_differs"),
-        (scanHit && (!curHit || changed(n, c) || (n("size") <=> c("size"))))
-          .as("seen_hit"),
-        c("uuid_external_file"), n("path"), n("filename"))
-      .agg(
-        sum(when(col("action") === "insert", 1L).otherwise(0L)).as("n_insert"),
-        sum(when(col("action") === "update", 1L).otherwise(0L)).as("n_update"),
-        sum(when(col("action") === "unchanged", 1L).otherwise(0L)).as("n_unchanged"),
-        sum(when(col("action") === "unchanged" && col("mime_differs"), 1L)
-          .otherwise(0L)).as("n_mime"),
-        sum(when(col("action") === "deleted", 1L).otherwise(0L)).as("n_deleted"),
-        countDistinct(when(col("seen_hit"),
+    val action = when(!scanHit, "deleted").when(c("filename").isNull, "insert")
+      .when(changed(n, c), "update").otherwise("unchanged")
+    def seen(f: String): Column = when(scanHit, n(f)).otherwise(c(f)).as(f)
+    n.join(c, keyCols.map(k => n(k) === c(k)).reduce(_ && _), "full_outer")
+      .select(Seq(c("uuid_external_file")) ++ keyCols.map(seen) ++ Seq(
+        when(action.isin("insert", "update"), n("mime_type"))
+          .otherwise(c("mime_type")).as("mime_type"),
+        seen("created"), seen("modified"), seen("size"),
+        when(!scanHit, scanInstant).as("deleted"), action.as("action"),
+        (action === "unchanged" && !(n("mime_type") <=> c("mime_type")))
+          .as("mime_preserved")): _*)
+      // the surrogate hashes the merged key, so it follows the join
+      .withColumn("uuid_external_file",
+        coalesce(col("uuid_external_file"), graft.streaming.ScrapeTws.uuidCol))
+  }
+
+  /** [[cycle]] folded into one aggregate: counts per action, preserved
+    * mimes, and the seen-set size (distinct (uuid, path, filename) of
+    * the keys the scan saw, J1+J4). Emits (metric, n) rows via `stack`. */
+  def scanCycleAudit(current: DataFrame, scan: DataFrame): DataFrame = {
+    val a = col("action")
+    def hits(p: Column, name: String) = sum(when(p, 1L).otherwise(0L)).as(name)
+    cycle(current, scan, lit(null).cast("timestamp"))
+      .agg(hits(a === "insert", "n_insert"), hits(a === "update", "n_update"),
+        hits(a === "unchanged", "n_unchanged"),
+        hits(col("mime_preserved"), "n_mime"),
+        hits(a === "deleted", "n_deleted"),
+        countDistinct(when(a =!= "deleted",
           struct(col("uuid_external_file"), col("path"), col("filename"))))
           .as("n_seen"))
       .select(expr(

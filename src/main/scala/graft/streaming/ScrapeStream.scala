@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.Scrape
@@ -13,8 +13,8 @@ import graft.operators.Scrape
   *    one complete listing of every PATH per trigger (`graft-files`, or
   *    `graft-s3` for `s3://` over the REST lister);
   *  - `foreachBatch`: each cycle merges into the persistent state
-  *    ([[mergeBatch]]: J3 upsert classify + J2 deletion tombstoning,
-  *    stamped with the cycle's scan instant), then publishes
+  *    ([[mergeBatch]]: J3 upsert classify + J2 deletion tombstoning in
+  *    one join, stamped with the cycle's scan instant), then publishes
   *    partition-incrementally. State is a parquet snapshot dir
   *    Hive-partitioned by `external_source`, and only the scanned
   *    sources' partition dirs are swapped (staged write → rename old
@@ -27,6 +27,13 @@ import graft.operators.Scrape
   * same cycle into `external_file` instead ([[graft.Scan.Pg]]).
   */
 object ScrapeStream {
+
+  /** One merge's keys per action, over the sources it published. */
+  final case class CycleCounts(inserted: Long, updated: Long,
+      unchanged: Long, deleted: Long) {
+    override def toString: String = s"$inserted inserted, $updated " +
+      s"updated, $unchanged unchanged, $deleted deleted"
+  }
 
   private val stateCols = Seq("uuid_external_file", "external_source",
     "path", "filename", "mime_type", "created", "modified", "size", "deleted")
@@ -51,7 +58,9 @@ object ScrapeStream {
             "modified timestamp, size bigint, deleted timestamp"))
   }
 
-  /** One batch of the merge loop: classify, apply, tombstone, publish.
+  /** One batch of the merge loop: [[Scrape.cycle]] (one join, one read
+    * of the current slice) written and published; returns its keys per
+    * action, counted by an `Observation` on the write itself.
     *
     * Partition-incremental: a scan touches only its own `external_source`
     * partition(s). The current state is read partition-pruned to the
@@ -86,31 +95,21 @@ object ScrapeStream {
     * names the batch's staging and holding dirs. */
   def mergeBatch(spark: SparkSession, stateDir: String,
       scanned: Seq[String] = Nil)(scan: DataFrame, batchId: Long,
-      scanInstant: java.sql.Timestamp): Unit = {
+      scanInstant: java.sql.Timestamp): CycleCounts = {
     // Bounded driver-side collect: at most one row per declared or
     // scanned source.
     val sources = (scanned ++ scan.select("external_source").distinct()
       .collect().map(_.getString(0))).distinct.toIndexedSeq
-    if (sources.isEmpty) return
+    if (sources.isEmpty) return CycleCounts(0L, 0L, 0L, 0L)
     recoverSwaps(spark, stateDir)
     val current = readState(spark, stateDir)
       .filter(col("external_source").isin(sources: _*))
-    val classified = Scrape.upsertClassify(current, scan)
-    val applied = classified.select(
-      coalesce(col("uuid_external_file"), ScrapeTws.uuidCol)
-        .as("uuid_external_file"), // ONE copy of the surrogate (r18)
-      col("external_source"), col("path"), col("filename"),
-      col("mime_type"), col("created"), col("modified"), col("size"),
-      lit(null).cast("timestamp").as("deleted"))
-    val dels = Scrape.deletions(current, scan, lit(scanInstant))
-      .select("uuid_external_file", "deleted")
-    val untouchedDeleted = current.join(
-      scan.select("external_source", "path", "filename"),
-      Seq("external_source", "path", "filename"), "left_anti")
-    val newState = applied.unionByName(
-      untouchedDeleted.drop("deleted")
-        .join(dels, Seq("uuid_external_file"), "left")
-        .select(applied.columns.toIndexedSeq.map(col): _*))
+    // the per-action counts ride the write's own job
+    val counts = Observation()
+    def n(a: String) = count(when(col("action") === a, 1)).as(a)
+    val newState = Scrape.cycle(current, scan, lit(scanInstant))
+      .observe(counts, n("insert"), n("update"), n("unchanged"), n("deleted"))
+      .select(stateCols.map(col): _*)
     // Stage the batch output beside the state dir (never inside it — the
     // stage must stay invisible to readState's partition discovery), then
     // swap the scanned partitions in explicitly. Hive-partitioned by
@@ -121,6 +120,8 @@ object ScrapeStream {
     newState.write.mode(SaveMode.Overwrite)
       .partitionBy("external_source").parquet(stageDir)
     publishPartitions(spark, stageDir, stateDir, sources, batchId)
+    val m = counts.get.map { case (a, v) => a -> v.asInstanceOf[Long] }
+    CycleCounts(m("insert"), m("update"), m("unchanged"), m("deleted"))
   }
 
   private def partDirName(source: String): String =

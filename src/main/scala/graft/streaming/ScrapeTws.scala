@@ -9,7 +9,8 @@ import org.apache.spark.sql.streaming.{ExpiredTimerInfo, OutputMode, StatefulPro
   * see, and which previously-known files vanished" (`db.rs:38-65`,
   * SURVEY §2.10) — carried by `transformWithState` keyed on the file
   * identity, instead of the `foreachBatch` + parquet-swap epilogue
-  * [[ScrapeStream.mergeBatch]] uses. Both paths stay shipped: the
+  * [[ScrapeStream.mergeBatch]] uses (one full-outer join of each scan
+  * with the current slice, [[graft.operators.Scrape.cycle]]). Both paths stay shipped: the
   * foreachBatch form is the JDBC/Postgres-shaped sink (one transactional
   * merge per scan), this form is the always-on streaming shape where
   * scan listings flow continuously and downstream consumers want CHANGE
@@ -60,7 +61,8 @@ import org.apache.spark.sql.streaming.{ExpiredTimerInfo, OutputMode, StatefulPro
   * 100 TB shape: state is hash-partitioned by file key across the
   * cluster (RocksDB per task), each scan row touches exactly its own
   * key, and a scan's absence sweep costs one timer range-scan per
-  * partition instead of a full-state anti-join shuffle per batch.
+  * partition instead of the snapshot merge's full-state join shuffle
+  * per batch.
   */
 object ScrapeTws {
 

@@ -250,7 +250,7 @@ object StreamBench {
     }
     val usable =
       try withClient(_.queryOne("SHOW wal_level").contains("logical"))
-      catch { case _: Throwable => false }
+      catch { case scala.util.control.NonFatal(_) => false }
     if (!usable) return None
     // destructive-setup guard (VERDICT r17 #6): this helper DROPs and
     // recreates the product table — correct on the disposable harness
@@ -457,7 +457,7 @@ object StreamBench {
           Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
         }
         rm(new java.io.File(d))
-      } catch { case _: Throwable => }
+      } catch { case scala.util.control.NonFatal(_) => }
     }
     out
   }

@@ -781,6 +781,74 @@ class CliSpec extends AnyFunSuite {
       s"stamps are the scans' instants: $d2, $d3")
   }
 
+  /** `body`'s result and the physical plan of every SQL execution run
+    * while it ran, in any session. A sentinel job in its own group
+    * flushes the listener bus: its start is delivered after every
+    * earlier event. */
+  private def plansDuring[A](body: => A): (A, Seq[String]) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
+      SparkListenerJobStart}
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    val sc = spark.sparkContext
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val flushed = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart =>
+          plans.add(s.physicalPlanDescription); ()
+        case _ =>
+      }
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(
+            _.getProperty("spark.jobGroup.id") == "plans-flush"))
+          flushed.countDown()
+    }
+    sc.addSparkListener(listener)
+    try {
+      val r = body
+      sc.setJobGroup("plans-flush", "listener flush")
+      sc.parallelize(Seq(1), 1).count()
+      assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "listener bus did not flush")
+      import scala.jdk.CollectionConverters._
+      (r, plans.asScala.toSeq)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("--out reports each cycle's keys per action from the merge itself, " +
+      "and no query reads the state again to count it") {
+    val _ = spark
+    val tree = Files.createTempDirectory("cli_counts")
+    Seq("keep1.txt", "keep2.txt", "chg.txt", "gone.txt")
+      .foreach(f => Files.writeString(tree.resolve(f), f))
+    val out = Files.createTempDirectory("cli_counts_out").toString
+    def run(): Seq[String] = {
+      val buf = new java.io.ByteArrayOutputStream
+      Console.withOut(new java.io.PrintStream(buf, true)) {
+        Main.main(Array("-i", "cli-counts", tree.toString, "--out", out))
+      }
+      buf.toString("UTF-8").linesIterator
+        .filter(_.startsWith("scan complete:")).toSeq
+    }
+    val first = run()
+    Files.delete(tree.resolve("gone.txt"))                     // vanished
+    Files.writeString(tree.resolve("chg.txt"), "chg.txt, longer") // changed
+    Files.writeString(tree.resolve("new.txt"), "new.txt")     // new
+    val (second, plans) = plansDuring(run())
+    // the merge write reads the state once; nothing else reads it
+    val stateReads = plans.filter(p => p.contains("Scan parquet") &&
+      p.contains(out) && !p.contains("InsertIntoHadoopFsRelationCommand"))
+    assert(stateReads.isEmpty,
+      s"a query re-read the state after the merge:\n${stateReads.mkString("\n")}")
+    assert(first == Seq(s"scan complete: 4 inserted, 0 updated, " +
+      s"0 unchanged, 0 deleted at $out"))
+    assert(second == Seq(s"scan complete: 1 inserted, 1 updated, " +
+      s"2 unchanged, 1 deleted at $out"))
+  }
+
   private val pgHost = sys.env.getOrElse("PGWIRE_HOST", "127.0.0.1")
   private val pgPort = sys.env.get("PGPORT").flatMap(_.toIntOption)
     .getOrElse(54329)

@@ -17,7 +17,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * `graft-s3`): the listing helpers build no RDD of their own. The scan
   * daemon has one cycle engine: every mode is a streaming query, with no
   * loop, sleep or thread pool of its own, started by a library entry
-  * ([[Scan]], [[WatchPg]]); `Main` only parses argv and prints. */
+  * ([[Scan]], [[WatchPg]]); `Main` only parses argv and prints. No
+  * shipped handler swallows a fatal error: a `Throwable` catch rethrows,
+  * every other catch-all is `NonFatal`. */
 class LayoutSpec extends AnyFunSuite {
   private val root = Paths.get("src/main/scala")
 
@@ -169,5 +171,37 @@ class LayoutSpec extends AnyFunSuite {
         "sinks.PgMerge.publishScanWire(batch)", "PgMerge.publishScan(b)")
       .foreach(src => assert(engine.findFirstIn(src).isDefined, src))
     assert(gone.findFirstIn("def runAvailable(spark: SparkSession)").isDefined)
+  }
+
+  /** The handler bodies of every `case x: Throwable =>` in `src`: the
+    * text after the arrow up to the brace that closes its catch block. */
+  private def throwableHandlers(src: String): Seq[String] =
+    raw"case\s+(\w+|_)\s*:\s*Throwable\s*=>".r.findAllMatchIn(src).map { m =>
+      var depth = 0
+      var i = m.end
+      while (i < src.length && depth >= 0) {
+        if (src(i) == '{') depth += 1 else if (src(i) == '}') depth -= 1
+        i += 1
+      }
+      src.substring(m.end, i)
+    }.toSeq
+
+  test("no shipped Throwable catch swallows a fatal error") {
+    val rethrow = raw"\bthrow\b".r
+    val swallowing = sources.flatMap { case (f, src) =>
+      throwableHandlers(src).filter(rethrow.findFirstIn(_).isEmpty)
+        .map(h => s"$f: case …: Throwable =>${h.take(60)}")
+    }
+    assert(swallowing.isEmpty,
+      s"Throwable catches that do not rethrow (use NonFatal):\n" +
+        swallowing.mkString("\n"))
+    // the guard sees the forms it names
+    def swallows(src: String): Seq[Boolean] =
+      throwableHandlers(src).map(rethrow.findFirstIn(_).isEmpty)
+    assert(swallows("catch { case _: Throwable => }") == Seq(true))
+    assert(swallows("} catch { case t: Throwable => false }") == Seq(true))
+    assert(swallows("try f() catch { case e: Throwable =>\n" +
+      "  try c.close() catch { case NonFatal(_) => () }\n  throw e\n}") ==
+      Seq(false))
   }
 }

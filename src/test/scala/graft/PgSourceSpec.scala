@@ -33,11 +33,15 @@ class PgSourceSpec extends AnyFunSuite {
     * database is left, waiting at most 30 s: a previous read's shard
     * sessions flush their table counters as they exit, and one that
     * exits after the reset adds its blocks to the next measurement (a
-    * ctid read once counted exactly 4× its true blocks that way). */
-  private def resetStats(): Unit = withClient { c =>
+    * ctid read once counted exactly 4× its true blocks that way).
+    * `held` are backends a still-running stream keeps open; they never
+    * exit, so they are not waited for. */
+  private def resetStats(held: Seq[String] = Nil): Unit = withClient { c =>
+    val notHeld = held.map(p => s" AND pid <> ${p.toInt}").mkString
     def others: Long = c.queryOne("SELECT count(*) FROM pg_stat_activity " +
       "WHERE datname = current_database() AND pid <> pg_backend_pid() " +
-      "AND backend_type = 'client backend'").map(_.toLong).getOrElse(0L)
+      "AND backend_type = 'client backend'" + notHeld)
+      .map(_.toLong).getOrElse(0L)
     val deadline = System.currentTimeMillis() + 30000L
     while (others > 0L && System.currentTimeMillis() < deadline)
       Thread.sleep(100L)
@@ -716,6 +720,11 @@ class PgSourceSpec extends AnyFunSuite {
       while (withClient(_.queryOne("SELECT count(*) FROM " +
         s"pg_replication_slots WHERE slot_name = '$slot'")) != Some("1") &&
         System.currentTimeMillis() < deadline) Thread.sleep(100L)
+      // the stream's own client backends, open for as long as it runs
+      val streamPids = withClient(_.query("SELECT pid FROM " +
+        "pg_stat_activity WHERE datname = current_database() AND " +
+        "pid <> pg_backend_pid() AND backend_type = 'client backend'"))
+        .flatMap(_.head)
       withClient { c =>
         c.exec(s"INSERT INTO ${PgMerge.table} VALUES " +
           "('CDC', '/w', 'a.txt', 'text/plain', NULL, " +
@@ -756,7 +765,7 @@ class PgSourceSpec extends AnyFunSuite {
       // O(changes): with DML quiet, triggers keep firing (WAL advances
       // server-wide) but the TABLE is never touched — zero scans, zero
       // heap blocks, while the rescan watch would read 3 rows per 250ms
-      resetStats()
+      resetStats(held = streamPids)
       Thread.sleep(2000L)
       val scans = withClient(_.queryOne(
         "SELECT coalesce(seq_scan, 0) + coalesce(idx_scan, 0) " +

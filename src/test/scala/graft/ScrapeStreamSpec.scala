@@ -3,7 +3,12 @@ package graft
 import java.nio.file.{Files, Path, Paths}
 import java.sql.Timestamp
 
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.command.DataWritingCommandExec
+import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.streaming.ScrapeStream
@@ -12,7 +17,7 @@ import graft.streaming.ScrapeStream
   * recovery, and, end to end through [[Scan.start]], two rescans of a
   * tree whose state must show inserts, updates, and the vanished-key
   * tombstone after the second. */
-class ScrapeStreamSpec extends AnyFunSuite {
+class ScrapeStreamSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
@@ -120,6 +125,62 @@ class ScrapeStreamSpec extends AnyFunSuite {
     assert(rows.keySet == Set("a.txt", "b.txt"), "a.txt must not be lost")
     assert(!rows("a.txt").isNullAt(8), "a.txt tombstoned")
     assert(rows("b.txt").isNullAt(8))
+  }
+
+  /** `body`'s result and every query it ran in the test session. A
+    * sentinel query flushes the listener bus: its event is delivered
+    * after every earlier one. */
+  private def queriesDuring[A](body: => A): (A, Seq[QueryExecution]) = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]
+    val sentinel = new java.util.concurrent.CountDownLatch(1)
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (qe.analyzed.toString.contains("Range (7340033")) sentinel.countDown()
+        else { seen.add(qe); () }
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val r = body
+      spark.range(7340033L, 7340034L).collect()
+      assert(sentinel.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "listener bus did not flush")
+      import scala.jdk.CollectionConverters._
+      (r, seen.asScala.toSeq)
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  test("the merge write is one join over one scan of the state partition") {
+    val state = Files.createTempDirectory("scrape_state_shape").toString
+    ScrapeStream.mergeBatch(spark, state)(
+      scanOf("sS", "a.txt", "b.txt", "c.txt"), 0L, at(0))
+    ScrapeStream.mergeBatch(spark, state)(scanOf("sT", "t.txt"), 1L, at(1))
+    val churned = scanOf("sS", "b.txt", "d.txt")
+      .unionByName(Seq(("sS", "/d", "c.txt", Option("text/plain"),
+        Option.empty[Timestamp], ts("2026-01-02 10:00:00"), Option(9L)))
+        .toDF(scanOf("sS").columns.toIndexedSeq: _*))
+    val (counts, queries) = queriesDuring(
+      ScrapeStream.mergeBatch(spark, state)(churned, 2L, at(2)))
+    val writes = queries.map(_.executedPlan).filter(p => find(p) {
+      case _: DataWritingCommandExec => true
+      case _ => false
+    }.isDefined)
+    assert(writes.size == 1, s"one merge write: $writes")
+    val plan = writes.head
+    val joins = collect(plan) { case j: BaseJoinExec => j }
+    val stateScans = collect(plan) {
+      case s: FileSourceScanExec
+          if s.relation.location.rootPaths.exists(_.toString.contains(
+            Paths.get(state).getFileName.toString)) => s
+    }
+    assert(joins.size == 1, s"one merge join:\n$plan")
+    assert(stateScans.size == 1, s"one scan of the state:\n$plan")
+    assert(counts == ScrapeStream.CycleCounts(inserted = 1L, updated = 1L,
+      unchanged = 1L, deleted = 1L))
+    val rows = ScrapeStream.readState(spark, state)
+      .collect().map(r => r.getString(3) -> r).toMap
+    assert(rows.keySet == Set("a.txt", "b.txt", "c.txt", "d.txt", "t.txt"))
+    assert(!rows("a.txt").isNullAt(8) && rows("c.txt").getLong(7) == 9L)
   }
 
   test("two-batch incremental scrape: insert, update, tombstone") {
