@@ -66,25 +66,25 @@ object Scan {
       case Out(dir) => (batch, cycle, at) =>
         onCycle(ScrapeStream.mergeBatch(spark, dir, scanned)(batch, cycle, at))
       case Pg(t) => (batch, _, _) =>
-        scanned.foreach(src => PgMerge.publishScanWire(
-          batch.filter(col("external_source") === src), t.host, t.port,
+        // each declared source publishes its slice: list the batch once
+        val listed = batch.persist()
+        try scanned.foreach(src => PgMerge.publishScanWire(
+          listed.filter(col("external_source") === src), t.host, t.port,
           t.database, t.userOrEnv, src, password = t.passwordOrEnv,
           sslMode = t.sslMode, sslRootCert = t.sslRootCert))
+        finally { listed.unpersist(); () }
     }
     paths.map(rescanStream(spark, _, identifier, listing)).reduce(_ union _)
       .writeStream
       .foreachBatch { (df: DataFrame, cycle: Long) =>
         val at = new java.sql.Timestamp(System.currentTimeMillis())
         // repeated or nested PATHs (`/a /a`, `-i X /data /data/sub`) list
-        // one file twice: keep one row per key, or the merge's left join
+        // one file twice: keep one row per key, or the merge's join
         // multiplies the file's rows every cycle. One PATH lists each key
         // once and skips the shuffle.
-        val keyed = if (paths.size > 1)
+        val batch = if (paths.size > 1)
           df.dropDuplicates("external_source", "path", "filename") else df
-        // the sinks read the listing more than once: list it once
-        val batch = keyed.persist()
-        try publish(batch, cycle, at)
-        finally { batch.unpersist(); () }
+        publish(batch, cycle, at)
       }
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)

@@ -164,8 +164,7 @@ object Capstone {
     * the tombstone count, and the seen-set size — all from ONE
     * full-outer merge join + one aggregate ([[Scrape.scanCycleAudit]]
     * folds [[Scrape.cycle]], the same per-key frame the `--out` merge
-    * writes; the separate-operator formulation costs three joins over
-    * the same keys). */
+    * writes and the J1–J4 operators view). */
   def qCapstoneScrape(s: SparkSession, dir: String): DataFrame =
     Scrape.scanCycleAudit(Scrape.filesCurrent(s, dir), Scrape.filesScan(s, dir))
 

@@ -16,6 +16,12 @@ import graft.functions.Mime
   *  - J1 inner equi-join re-find + J4 union-distinct seen-set
   *    (`db.rs:101-104,120-123`).
   *
+  * All four are views of ONE full-outer merge join, [[cycle]]: the
+  * scanned keys ([[upsertClassify]], [[seenKeys]]), the missed keys
+  * ([[deletions]]), or every key (the `--out` merge, [[scanCycleAudit]],
+  * the S3 composition row). The DuckDB oracles of the `q_scrape_*` rows
+  * therefore check the merge the `--out` sink writes.
+  *
   * Documented deviations from Postgres-exact behavior (intentional; see
   * SURVEY §7.7):
   *  - Change detection uses null-safe IS-DISTINCT-FROM semantics (Spark
@@ -28,11 +34,10 @@ import graft.functions.Mime
   *  - Key comparisons are on (external_source, path, filename) — the
   *    uniqueness constraint inferred at `db.rs:108`.
   *
-  * Scale notes: [[cycle]] (the `--out` merge and the audit) is ONE
-  * full-outer join that shuffles both sides by the natural key and reads
-  * the current slice once; at 100 TB the `current` side arrives
-  * partitioned from the previous scan's output (or bucketed storage), so
-  * only the new scan shuffles.
+  * Scale notes: [[cycle]] is ONE full-outer join that shuffles both sides
+  * by the natural key and reads the current slice once; at 100 TB the
+  * `current` side arrives partitioned from the previous scan's output
+  * (or bucketed storage), so only the new scan shuffles.
   */
 object Scrape {
 
@@ -47,65 +52,53 @@ object Scrape {
   /** J3: classify each scanned row against the current snapshot.
     * Returns scan rows + `action` ∈ insert|update|unchanged, with
     * mime_type resolved per the preservation rule and the re-found
-    * `uuid_external_file` (null for inserts).
+    * `uuid_external_file` (null for inserts): [[cycle]]'s keys the scan
+    * saw.
     */
-  def upsertClassify(current: DataFrame, scan: DataFrame): DataFrame = {
-    val c = current.as("c")
-    val n = scan.as("n")
-    val joinCond = keyCols.map(k => n(k) === c(k)).reduce(_ && _)
-    n.join(c, joinCond, "left")
-      .select(
-        n("external_source"), n("path"), n("filename"),
-        when(c("filename").isNull, "insert")
-          .when(changed(n, c), "update")
-          .otherwise("unchanged").as("action"),
-        when(c("filename").isNotNull && !changed(n, c), c("mime_type"))
-          .otherwise(n("mime_type")).as("mime_type"),
-        n("created"), n("modified"), n("size"),
-        c("uuid_external_file"))
-  }
+  def upsertClassify(current: DataFrame, scan: DataFrame): DataFrame =
+    classified(current, scan, lit(null).cast("timestamp"))
+      .filter(col("action") =!= "deleted")
+      .select(Seq("external_source", "path", "filename", "action",
+        "mime_type", "created", "modified", "size", "uuid_external_file")
+        .map(col): _*)
 
   /** J2: rows of `current` whose key is absent from this scan →
     * tombstoned with the scan-constant instant (P8: one instant per scan,
     * the analog of transaction-start `NOW()` — never per-row
-    * `current_timestamp()`). Faithfully re-stamps already-deleted rows,
-    * as the reference's UPDATE does (`db.rs:54-58` has no
-    * `deleted IS NULL` guard).
+    * `current_timestamp()`): [[cycle]]'s deleted keys. Faithfully
+    * re-stamps already-deleted rows, as the reference's UPDATE does
+    * (`db.rs:54-58` has no `deleted IS NULL` guard).
     */
-  def deletions(current: DataFrame, scan: DataFrame, scanInstant: Column): DataFrame = {
-    current
-      .join(scan.select(keyCols.map(col): _*), keyCols, "left_anti")
+  def deletions(current: DataFrame, scan: DataFrame, scanInstant: Column): DataFrame =
+    cycle(current, scan, scanInstant).filter(col("action") === "deleted")
       .select(col("uuid_external_file"), col("external_source"), col("path"),
-        col("filename"), scanInstant.as("deleted"))
-  }
+        col("filename"), col("deleted"))
 
   /** J1 + J4: the seen-set — uuids returned by the upsert (insert/update;
     * inserts carry null until the sink assigns a key) unioned DISTINCT with
     * the J1 re-find (key + null-safe size match).
     *
-    * The union collapses into ONE join + or-filter: the merge join's
-    * equality on (path, filename) means a matched row's current-side key
-    * equals its scan-side key, so whenever BOTH branches fire they emit
-    * the identical (uuid, path, filename) tuple — the r7 two-branch
-    * union computed the join subtree twice only to have distinct remove
-    * the overlap. One scan, one merge shuffle, one filter; the closing
-    * `distinct` (the reference's set semantics — a real scan can list
-    * the same file twice, `db.rs:120-123`) exchanges only the final
-    * bounded key set. */
-  def seenKeys(current: DataFrame, scan: DataFrame): DataFrame = {
-    val c = current.as("c")
-    val n = scan.as("n")
-    val joinCond = keyCols.map(k => n(k) === c(k)).reduce(_ && _)
-    n.join(c, joinCond, "left")
-      .filter((c("filename").isNull || changed(n, c)) ||
-        (c("filename").isNotNull && (n("size") <=> c("size"))))
-      .select(c("uuid_external_file"), n("path"), n("filename"))
+    * The union is every row of [[upsertClassify]]: the upsert branch is
+    * its inserts and updates, and the re-find fires on matched rows only
+    * (updates and unchanged), where every unchanged row has an equal
+    * size. A matched row's current-side key equals its scan-side key, so
+    * both branches emit the same (uuid, path, filename) tuple for it.
+    * The closing `distinct` is the reference's set semantics — a real
+    * scan can list the same file twice (`db.rs:120-123`). */
+  def seenKeys(current: DataFrame, scan: DataFrame): DataFrame =
+    upsertClassify(current, scan)
+      .select(col("uuid_external_file"), col("path"), col("filename"))
       .distinct()
-  }
+
+  /** [[cycle]] with an insert's uuid NULL: the sink assigns it. */
+  private def classified(current: DataFrame, scan: DataFrame,
+      scanInstant: Column): DataFrame =
+    cycle(current, scan, scanInstant).withColumn("uuid_external_file",
+      when(col("action") =!= "insert", col("uuid_external_file")))
 
   /** The WHOLE scan cycle per key from ONE full-outer merge join and one
-    * projection — the reference's transaction (`db.rs:48-124`) without
-    * the three joins the operators above cost. Each key comes back as
+    * projection — the reference's transaction (`db.rs:48-124`), of which
+    * the J1–J4 operators above are views. Each key comes back as
     * its next state row plus `action` (insert|update|unchanged|deleted)
     * and `mime_preserved` (an unchanged row whose kept mime differs from
     * the scan's guess, `db.rs:88-90`). The uuid is the current one, else
@@ -298,10 +291,10 @@ object Scrape {
   // filename) with the root-key semantics the reference panics on
   // (`s3.rs:104-108` vs P2's `path=""`), mime inferred from the key,
   // `created` ALWAYS NULL (`s3.rs:123`) — replayed deterministically
-  // from `orders` and pushed through the REAL merge operators
-  // (upsertClassify + deletions) against a current snapshot. The key
-  // split below is the COLUMN form of [[graft.sources.S3Wire.splitKey]];
-  // ScrapeSpec pins the two in lockstep over adversarial keys.
+  // from `orders` and pushed through the `--out` sink's merge
+  // ([[cycle]]) against a current snapshot. The key split below is the
+  // COLUMN form of [[graft.sources.S3Wire.splitKey]]; ScrapeSpec pins
+  // the two in lockstep over adversarial keys.
   // ---------------------------------------------------------------------
 
   /** Bucket keys from orders: %9==0 are ROOT-LEVEL (no '/'), the rest
@@ -380,23 +373,18 @@ object Scrape {
 
   /** The composed rescan: classification of every listed key PLUS the
     * tombstone set, one event-shaped frame (`action` ∈
-    * insert|update|unchanged|deleted) — exactly what `--s3-wire --pg`
-    * applies per cycle, oracle-checked end to end. */
+    * insert|update|unchanged|deleted) — the `--out` merge ([[cycle]])
+    * over the S3 listing shape, oracle-checked end to end. A deleted key
+    * carries only its identity and stamp, an insert no uuid. */
   def qScrapeS3(s: SparkSession, dir: String): DataFrame = {
-    val cur = s3Current(s, dir).drop("deleted")
-    val scan = s3Scan(s, dir)
-    val up = upsertClassify(cur, scan)
-      .withColumn("deleted", lit(null).cast("timestamp"))
-    val del = deletions(s3Current(s, dir), scan,
-      lit(scanInstant).cast("timestamp"))
-      .select(col("external_source"), col("path"), col("filename"),
-        lit("deleted").as("action"),
-        lit(null).cast("string").as("mime_type"),
-        lit(null).cast("timestamp").as("created"),
-        lit(null).cast("timestamp").as("modified"),
-        lit(null).cast("bigint").as("size"),
-        col("uuid_external_file"), col("deleted"))
-    up.unionByName(del).orderBy("path", "filename")
+    val a = col("action")
+    def listed(f: String) = when(a =!= "deleted", col(f)).as(f)
+    classified(s3Current(s, dir), s3Scan(s, dir),
+        lit(scanInstant).cast("timestamp"))
+      .select(col("external_source"), col("path"), col("filename"), a,
+        listed("mime_type"), listed("created"), listed("modified"),
+        listed("size"), col("uuid_external_file"), col("deleted"))
+      .orderBy("path", "filename")
   }
 
   // ---------------------------------------------------------------------

@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.operators.Scrape
 
@@ -13,8 +14,9 @@ import graft.operators.Scrape
   *    one complete listing of every PATH per trigger (`graft-files`, or
   *    `graft-s3` for `s3://` over the REST lister);
   *  - `foreachBatch`: each cycle merges into the persistent state
-  *    ([[mergeBatch]]: J3 upsert classify + J2 deletion tombstoning in
-  *    one join, stamped with the cycle's scan instant), then publishes
+  *    ([[mergeBatch]]: [[Scrape.cycle]], J3 upsert classify + J2
+  *    deletion tombstoning in one join over the declared sources,
+  *    stamped with the cycle's scan instant), then publishes
   *    partition-incrementally. State is a parquet snapshot dir
   *    Hive-partitioned by `external_source`, and only the scanned
   *    sources' partition dirs are swapped (staged write → rename old
@@ -35,27 +37,30 @@ object ScrapeStream {
       s"updated, $unchanged unchanged, $deleted deleted"
   }
 
-  private val stateCols = Seq("uuid_external_file", "external_source",
-    "path", "filename", "mime_type", "created", "modified", "size", "deleted")
+  /** The state's columns and types: its read, the empty state and the
+    * merge's output. */
+  private val stateSchema = StructType.fromDDL("uuid_external_file string, " +
+    "external_source string, path string, filename string, " +
+    "mime_type string, created timestamp, modified timestamp, size bigint, " +
+    "deleted timestamp")
+  private val stateCols = stateSchema.fieldNames.toSeq.map(col)
 
-  /** Read the current snapshot (empty-schema DataFrame when absent).
-    * Columns come back in canonical order regardless of the partition
-    * layout (partition columns append last on read). The existence check
-    * goes through the session's Hadoop filesystem, like the swap, so a
+  /** Read the current snapshot (empty when absent) with the state's fixed
+    * schema: no job infers it, and a partition value such as
+    * `external_source=007` stays the string it was written as. Columns
+    * come back in canonical order regardless of the partition layout
+    * (partition columns append last on read). The existence check goes
+    * through the session's Hadoop filesystem, like the swap, so a
     * `file:`, `hdfs://` or `s3a://` state dir is seen, not read as
     * empty. */
   def readState(spark: SparkSession, stateDir: String): DataFrame = {
     val p = new org.apache.hadoop.fs.Path(stateDir)
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
     if (fs.exists(p) && fs.listStatus(p).nonEmpty)
-      spark.read.parquet(stateDir).select(stateCols.map(col): _*)
+      spark.read.schema(stateSchema).parquet(stateDir).select(stateCols: _*)
     else
       spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType.fromDDL(
-          "uuid_external_file string, external_source string, path string, " +
-            "filename string, mime_type string, created timestamp, " +
-            "modified timestamp, size bigint, deleted timestamp"))
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], stateSchema)
   }
 
   /** One batch of the merge loop: [[Scrape.cycle]] (one join, one read
@@ -83,10 +88,11 @@ object ScrapeStream {
     * HDFS/POSIX; on object stores without atomic rename (raw S3) state
     * belongs in a log-structured table format instead.
     *
-    * `scanned` declares sources this batch is a complete scan of even
-    * when it holds none of their rows: an empty rescan tombstones every
-    * live row of its source (the reference's J2, `db.rs:48-65`). The
-    * sources found in the rows are merged too.
+    * `scanned` declares the sources this batch is a complete scan of;
+    * the merge and the swap cover exactly those, and the batch's rows of
+    * any other source are filtered out in the plan. A declared source
+    * with no rows is an empty rescan: it tombstones every live row of
+    * its source (the reference's J2, `db.rs:48-65`).
     *
     * `scanInstant` is the cycle's scan time, read once by the caller when
     * the batch starts: it stamps every row this batch finds missing, so
@@ -94,22 +100,17 @@ object ScrapeStream {
     * reference's UPDATE (`README.md:6-8`, `db.rs:48-65`). `batchId`
     * names the batch's staging and holding dirs. */
   def mergeBatch(spark: SparkSession, stateDir: String,
-      scanned: Seq[String] = Nil)(scan: DataFrame, batchId: Long,
+      scanned: Seq[String])(scan: DataFrame, batchId: Long,
       scanInstant: java.sql.Timestamp): CycleCounts = {
-    // Bounded driver-side collect: at most one row per declared or
-    // scanned source.
-    val sources = (scanned ++ scan.select("external_source").distinct()
-      .collect().map(_.getString(0))).distinct.toIndexedSeq
-    if (sources.isEmpty) return CycleCounts(0L, 0L, 0L, 0L)
     recoverSwaps(spark, stateDir)
-    val current = readState(spark, stateDir)
-      .filter(col("external_source").isin(sources: _*))
+    val ofSources = col("external_source").isin(scanned: _*)
+    val current = readState(spark, stateDir).filter(ofSources)
     // the per-action counts ride the write's own job
     val counts = Observation()
     def n(a: String) = count(when(col("action") === a, 1)).as(a)
-    val newState = Scrape.cycle(current, scan, lit(scanInstant))
+    val newState = Scrape.cycle(current, scan.filter(ofSources), lit(scanInstant))
       .observe(counts, n("insert"), n("update"), n("unchanged"), n("deleted"))
-      .select(stateCols.map(col): _*)
+      .select(stateCols: _*)
     // Stage the batch output beside the state dir (never inside it — the
     // stage must stay invisible to readState's partition discovery), then
     // swap the scanned partitions in explicitly. Hive-partitioned by
@@ -119,7 +120,7 @@ object ScrapeStream {
     val stageDir = s"$stateDir.stage-$batchId"
     newState.write.mode(SaveMode.Overwrite)
       .partitionBy("external_source").parquet(stageDir)
-    publishPartitions(spark, stageDir, stateDir, sources, batchId)
+    publishPartitions(spark, stageDir, stateDir, scanned, batchId)
     val m = counts.get.map { case (a, v) => a -> v.asInstanceOf[Long] }
     CycleCounts(m("insert"), m("update"), m("unchanged"), m("deleted"))
   }

@@ -781,27 +781,34 @@ class CliSpec extends AnyFunSuite {
       s"stamps are the scans' instants: $d2, $d3")
   }
 
-  /** `body`'s result and the physical plan of every SQL execution run
-    * while it ran, in any session. A sentinel job in its own group
-    * flushes the listener bus: its start is delivered after every
-    * earlier event. */
-  private def plansDuring[A](body: => A): (A, Seq[String]) = {
+  /** `body`'s result, the physical plan of every SQL execution run while
+    * it ran, by execution id, and the SQL execution id of every job it
+    * started (in any session). A sentinel job in its own group flushes
+    * the listener bus: its start is delivered after every earlier event. */
+  private def runDuring[A](body: => A): (A, Map[Long, String],
+      Seq[Option[Long]]) = {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
       SparkListenerJobStart}
     import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
     val sc = spark.sparkContext
-    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val plans = new java.util.concurrent.ConcurrentHashMap[Long, String]
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[Option[Long]]
     val flushed = new java.util.concurrent.CountDownLatch(1)
     val listener = new SparkListener {
       override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
         case s: SparkListenerSQLExecutionStart =>
-          plans.add(s.physicalPlanDescription); ()
+          plans.put(s.executionId, s.physicalPlanDescription); ()
         case _ =>
       }
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(
-            _.getProperty("spark.jobGroup.id") == "plans-flush"))
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val props = Option(e.properties)
+        if (props.exists(_.getProperty("spark.jobGroup.id") == "plans-flush"))
           flushed.countDown()
+        else {
+          jobs.add(props.flatMap(p => Option(p.getProperty(
+            "spark.sql.execution.id"))).map(_.toLong)); ()
+        }
+      }
     }
     sc.addSparkListener(listener)
     try {
@@ -811,7 +818,7 @@ class CliSpec extends AnyFunSuite {
       assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS),
         "listener bus did not flush")
       import scala.jdk.CollectionConverters._
-      (r, plans.asScala.toSeq)
+      (r, plans.asScala.toMap, jobs.asScala.toSeq)
     } finally {
       sc.clearJobGroup()
       sc.removeSparkListener(listener)
@@ -837,16 +844,50 @@ class CliSpec extends AnyFunSuite {
     Files.delete(tree.resolve("gone.txt"))                     // vanished
     Files.writeString(tree.resolve("chg.txt"), "chg.txt, longer") // changed
     Files.writeString(tree.resolve("new.txt"), "new.txt")     // new
-    val (second, plans) = plansDuring(run())
+    val (second, plans, jobs) = runDuring(run())
     // the merge write reads the state once; nothing else reads it
-    val stateReads = plans.filter(p => p.contains("Scan parquet") &&
+    val stateReads = plans.values.filter(p => p.contains("Scan parquet") &&
       p.contains(out) && !p.contains("InsertIntoHadoopFsRelationCommand"))
     assert(stateReads.isEmpty,
       s"a query re-read the state after the merge:\n${stateReads.mkString("\n")}")
+    // and the cycle runs nothing beside that write: no collect of the
+    // batch's sources, no job inferring the state's schema
+    val writes = plans.collect {
+      case (id, p) if p.contains("InsertIntoHadoopFsRelationCommand") => id
+    }.toSet
+    val besides = jobs.filterNot(_.exists(writes))
+    assert(writes.size == 1 && besides.isEmpty,
+      s"jobs beside the merge write ${writes.mkString(",")}, by SQL " +
+        s"execution: ${besides.map(_.fold("none")(id =>
+          s"$id ${plans.getOrElse(id, "").take(300)}")).mkString("\n")}")
     assert(first == Seq(s"scan complete: 4 inserted, 0 updated, " +
       s"0 unchanged, 0 deleted at $out"))
     assert(second == Seq(s"scan complete: 1 inserted, 1 updated, " +
       s"2 unchanged, 1 deleted at $out"))
+  }
+
+  test("--out keeps a numeric-looking identifier's spelling: the second " +
+      "cycle of -i 007 merges into the state") {
+    val _ = spark
+    val tree = Files.createTempDirectory("cli_007")
+    Seq("a.txt", "b.txt", "c.txt")
+      .foreach(f => Files.writeString(tree.resolve(f), f))
+    val out = Files.createTempDirectory("cli_007_out").toString
+    def run(): Unit = Main.main(Array("-i", "007", tree.toString,
+      "--out", out))
+    run()
+    Files.delete(tree.resolve("c.txt"))
+    Files.writeString(tree.resolve("n.txt"), "n.txt")
+    run()
+    val rows = streaming.ScrapeStream.readState(spark, out).collect()
+      .map(r => r.getString(3) -> r).toMap
+    assert(rows.keySet == Set("a.txt", "b.txt", "c.txt", "n.txt"),
+      "the second cycle's new file is in the state")
+    assert(!rows("c.txt").isNullAt(8), "the vanished file is tombstoned")
+    assert(Seq("a.txt", "b.txt", "n.txt").forall(rows(_).isNullAt(8)))
+    assert(rows.values.map(_.getString(1)).toSet == Set("007"))
+    assert(Files.isDirectory(java.nio.file.Paths.get(out,
+      "external_source=007")))
   }
 
   private val pgHost = sys.env.getOrElse("PGWIRE_HOST", "127.0.0.1")

@@ -19,7 +19,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * loop, sleep or thread pool of its own, started by a library entry
   * ([[Scan]], [[WatchPg]]); `Main` only parses argv and prints. No
   * shipped handler swallows a fatal error: a `Throwable` catch rethrows,
-  * every other catch-all is `NonFatal`. */
+  * every other catch-all is `NonFatal`. The file table has one merge
+  * join: `Scrape`'s operators are views of `Scrape.cycle`. */
 class LayoutSpec extends AnyFunSuite {
   private val root = Paths.get("src/main/scala")
 
@@ -58,8 +59,8 @@ class LayoutSpec extends AnyFunSuite {
     // read.format("parquet"); readStream does not infer a schema
     val batchRead =
       raw"""\bread\s*\.(\s*\w+\([^)]*\)\s*\.)*\s*parquet\(|\bread\s*\.\s*format\(\s*"parquet"""".r
-    // ScrapeStream.readState reads the daemon's own state directory,
-    // whose schema can differ between builds; it keeps Spark's inference
+    // ScrapeStream.readState reads the daemon's own state directory with
+    // the state's fixed schema, so it infers nothing either
     val exempt = Map("graft/streaming/ScrapeStream.scala" -> 1)
     assert(sources.exists(_._1 == "graft/Tables.scala"))
     val bad = sources.collect {
@@ -73,6 +74,21 @@ class LayoutSpec extends AnyFunSuite {
       assert(batchRead.findFirstIn(src).isDefined, src)
     }
     assert(batchRead.findFirstIn("s.readStream.schema(x).parquet(dir)").isEmpty)
+  }
+
+  test("one merge join for the file table: Scrape's operators are views " +
+      "of Scrape.cycle") {
+    val scrape = sources.collectFirst {
+      case ("graft/operators/Scrape.scala", src) => src
+    }
+    assert(scrape.nonEmpty)
+    val join = raw"\.join\(".r
+    val hits = join.findAllIn(scrape.get).size
+    assert(hits == 1, s"Scrape.scala holds $hits joins, not Scrape.cycle's one")
+    // the guard sees the form it names
+    Seq("n.join(c, joinCond, \"left\")",
+        "current\n      .join(scan.select(keys: _*), keys, \"left_anti\")")
+      .foreach(src => assert(join.findFirstIn(src).isDefined, src))
   }
 
   test("the wire publish and read exist once, in the graft-pg table") {

@@ -34,8 +34,10 @@ class ScrapeStreamSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
           "created", "modified", "size")
     val t1 = ts("2026-01-01 10:00:00")
     val t2 = ts("2026-01-02 10:00:00")
-    ScrapeStream.mergeBatch(spark, state)(scanDF("sA", "a.txt", t1, 1L), 0L, at(0))
-    ScrapeStream.mergeBatch(spark, state)(scanDF("sB", "b.txt", t1, 2L), 1L, at(1))
+    ScrapeStream.mergeBatch(spark, state, Seq("sA"))(
+      scanDF("sA", "a.txt", t1, 1L), 0L, at(0))
+    ScrapeStream.mergeBatch(spark, state, Seq("sB"))(
+      scanDF("sB", "b.txt", t1, 2L), 1L, at(1))
 
     def snapshot(p: Path): Seq[(String, Long, Long)] = {
       import scala.jdk.CollectionConverters._
@@ -48,7 +50,8 @@ class ScrapeStreamSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     assert(before.nonEmpty)
 
     // a scan of sB must leave sA's partition files physically untouched
-    ScrapeStream.mergeBatch(spark, state)(scanDF("sB", "b.txt", t2, 20L), 2L, at(2))
+    ScrapeStream.mergeBatch(spark, state, Seq("sB"))(
+      scanDF("sB", "b.txt", t2, 20L), 2L, at(2))
     assert(snapshot(aDir) == before)
 
     val rows = ScrapeStream.readState(spark, state)
@@ -64,8 +67,8 @@ class ScrapeStreamSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
         ts("2026-01-01 10:00:00"), Option(1L)))
         .toDF("external_source", "path", "filename", "mime_type",
           "created", "modified", "size")
-    ScrapeStream.mergeBatch(spark, state)(scanDF("sA", "a.txt"), 0L, at(0))
-    ScrapeStream.mergeBatch(spark, state)(scanDF("sB", "b.txt"), 1L, at(1))
+    ScrapeStream.mergeBatch(spark, state, Seq("sA"))(scanDF("sA", "a.txt"), 0L, at(0))
+    ScrapeStream.mergeBatch(spark, state, Seq("sB"))(scanDF("sB", "b.txt"), 1L, at(1))
 
     // crash between "old aside" and "new in": sA's live partition is gone,
     // its only copy sits under the holding dir
@@ -101,8 +104,9 @@ class ScrapeStreamSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   test("a declared source whose rescan came back empty tombstones all its " +
       "live rows") {
     val state = Files.createTempDirectory("scrape_state_empty").toString
-    ScrapeStream.mergeBatch(spark, state)(scanOf("sA", "a.txt", "b.txt"), 0L, at(0))
-    ScrapeStream.mergeBatch(spark, state)(scanOf("sB", "c.txt"), 1L, at(1))
+    ScrapeStream.mergeBatch(spark, state, Seq("sA"))(
+      scanOf("sA", "a.txt", "b.txt"), 0L, at(0))
+    ScrapeStream.mergeBatch(spark, state, Seq("sB"))(scanOf("sB", "c.txt"), 1L, at(1))
     ScrapeStream.mergeBatch(spark, state, scanned = Seq("sA"))(
       scanOf("sA"), 2L, at(2))
     val rows = ScrapeStream.readState(spark, state)
@@ -118,8 +122,9 @@ class ScrapeStreamSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     val dir = Files.createTempDirectory("scrape_state_uri")
     val state = dir.toUri.toString.stripSuffix("/")
     assert(state.startsWith("file:"))
-    ScrapeStream.mergeBatch(spark, state)(scanOf("sU", "a.txt", "b.txt"), 0L, at(0))
-    ScrapeStream.mergeBatch(spark, state)(scanOf("sU", "b.txt"), 1L, at(1))
+    ScrapeStream.mergeBatch(spark, state, Seq("sU"))(
+      scanOf("sU", "a.txt", "b.txt"), 0L, at(0))
+    ScrapeStream.mergeBatch(spark, state, Seq("sU"))(scanOf("sU", "b.txt"), 1L, at(1))
     val rows = ScrapeStream.readState(spark, state)
       .collect().map(r => r.getString(3) -> r).toMap
     assert(rows.keySet == Set("a.txt", "b.txt"), "a.txt must not be lost")
@@ -152,15 +157,15 @@ class ScrapeStreamSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
 
   test("the merge write is one join over one scan of the state partition") {
     val state = Files.createTempDirectory("scrape_state_shape").toString
-    ScrapeStream.mergeBatch(spark, state)(
+    ScrapeStream.mergeBatch(spark, state, Seq("sS"))(
       scanOf("sS", "a.txt", "b.txt", "c.txt"), 0L, at(0))
-    ScrapeStream.mergeBatch(spark, state)(scanOf("sT", "t.txt"), 1L, at(1))
+    ScrapeStream.mergeBatch(spark, state, Seq("sT"))(scanOf("sT", "t.txt"), 1L, at(1))
     val churned = scanOf("sS", "b.txt", "d.txt")
       .unionByName(Seq(("sS", "/d", "c.txt", Option("text/plain"),
         Option.empty[Timestamp], ts("2026-01-02 10:00:00"), Option(9L)))
         .toDF(scanOf("sS").columns.toIndexedSeq: _*))
     val (counts, queries) = queriesDuring(
-      ScrapeStream.mergeBatch(spark, state)(churned, 2L, at(2)))
+      ScrapeStream.mergeBatch(spark, state, Seq("sS"))(churned, 2L, at(2)))
     val writes = queries.map(_.executedPlan).filter(p => find(p) {
       case _: DataWritingCommandExec => true
       case _ => false

@@ -72,7 +72,7 @@ class ScrapeTwsSpec extends AnyFunSuite {
       // --- batch path: replay through the foreachBatch merge loop
       val stateDir = Files.createTempDirectory("tws_scrape_state").toString + "/st"
       (0 to 3).foreach { i =>
-        ScrapeStream.mergeBatch(spark, stateDir)(
+        ScrapeStream.mergeBatch(spark, stateDir, Seq("s1"))(
           scanDf(i).drop("observed"), i.toLong,
           new java.sql.Timestamp(base + i))
       }
@@ -170,7 +170,7 @@ class ScrapeTwsSpec extends AnyFunSuite {
         val stateDir = Files.createTempDirectory(s"tws_rand_state$seed")
           .toString + "/st"
         (0 to 3).foreach { i =>
-          ScrapeStream.mergeBatch(spark, stateDir)(
+          ScrapeStream.mergeBatch(spark, stateDir, Seq("s1"))(
             df(i).drop("observed"), i.toLong,
             new java.sql.Timestamp(base + i))
         }
@@ -398,7 +398,7 @@ class ScrapeTwsSpec extends AnyFunSuite {
       val stateDir = Files.createTempDirectory("tws_onebatch_state")
         .toString + "/st"
       (0 to 3).foreach { i =>
-        ScrapeStream.mergeBatch(spark, stateDir)(
+        ScrapeStream.mergeBatch(spark, stateDir, Seq("s1"))(
           scanDf(i).drop("observed"), i.toLong,
           new java.sql.Timestamp(base + i))
       }
@@ -549,7 +549,7 @@ class ScrapeTwsSpec extends AnyFunSuite {
       // batch truth over all 4 scans
       val stateDir = Files.createTempDirectory("tws_rb_state").toString + "/st"
       (0 to 3).foreach { i =>
-        ScrapeStream.mergeBatch(spark, stateDir)(
+        ScrapeStream.mergeBatch(spark, stateDir, Seq("s1"))(
           scanDf(i).drop("observed"), i.toLong,
           new java.sql.Timestamp(base + i))
       }
