@@ -22,10 +22,13 @@ private[graft] object BenchPg {
   def port: Int =
     sys.env.get("PGPORT").flatMap(_.toIntOption).getOrElse(54329)
 
-  def withClient[A](f: PgWireClient => A): A = {
-    val c = new PgWireClient(host, port, "postgres", "postgres")
-    try f(c) finally c.close()
-  }
+  /** The harness server's `postgres` database: the benches' own
+    * connections and what they hand to `PgChangeFeed` and the
+    * `graft-pg` table. */
+  def target: PgMerge.PgTarget =
+    PgMerge.PgTarget(host, port, "postgres", "postgres", None, "disable")
+
+  def withClient[A](f: PgWireClient => A): A = target.withClient(f)
 
   /** True when the server answers at all; benches omit their row
     * cleanly when it does not. */

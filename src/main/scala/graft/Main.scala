@@ -60,9 +60,10 @@ object Main {
       listing: Scan.Listing, rebuildState: Boolean,
       override val verbosity: Int) extends Command
 
-  private[graft] final case class WatchRun(addr: String, sources: Seq[String],
-      out: String, interval: Option[Long], maxChanges: Option[Long],
-      maxRetainMb: Option[Long], override val verbosity: Int) extends Command
+  private[graft] final case class WatchRun(target: PgMerge.PgTarget,
+      sources: Seq[String], out: String, interval: Option[Long],
+      maxChanges: Option[Long], maxRetainMb: Option[Long],
+      override val verbosity: Int) extends Command
 
   private[graft] final case class CompactRun(out: String,
       rebuildState: Boolean, sources: Seq[String]) extends Command
@@ -166,7 +167,7 @@ object Main {
     jdbc.foreach(u => require(u.startsWith("jdbc:"),
       s"--jdbc expects a jdbc:postgresql://host[:port]/db URL, got '$u' " +
         "(--pg takes HOST:PORT/DB or postgres://…)"))
-    val target = pg.orElse(jdbc).map(PgMerge.parsePgTarget)
+    val target = pg.orElse(jdbc).map(PgMerge.parsePgTarget(_))
     require(!(streamEvents && target.nonEmpty),
       "--stream-events emits parquet change events; use --out")
     require(watchPg.isEmpty || !(streamEvents || rebuildState || s3Wire ||
@@ -178,9 +179,9 @@ object Main {
     require(maxRetainMb.isEmpty || watchPg.nonEmpty,
       "--max-retain-mb monitors the --watch-pg slot's retained WAL")
     require(maxRetainMb.forall(_ >= 0L), "--max-retain-mb must be >= 0")
+    val watchTarget = watchPg.map(PgMerge.parsePgTarget(_))
     // duplicate SOURCE args would collide on one log/checkpoint
-    watchPg.foreach { a =>
-      PgMerge.parsePgTarget(a)
+    if (watchPg.nonEmpty) {
       val dup = paths.groupBy(identity).filter(_._2.size > 1).keys
       require(dup.isEmpty,
         s"duplicate --watch-pg SOURCE args: ${dup.mkString(", ")}")
@@ -203,8 +204,8 @@ object Main {
       "--rebuild-state applies to the --stream-events checkpoint")
     val listing = Scan.Listing(s3Wire, opts.get("--s3-endpoint"))
     val verbosity = bare.count(_ == "-v")
-    watchPg.map[Command](a => WatchRun(a, paths.toSeq, outDir, interval,
-        maxChanges, maxRetainMb, verbosity))
+    watchTarget.map[Command](t => WatchRun(t, paths.toSeq, outDir,
+        interval, maxChanges, maxRetainMb, verbosity))
       .getOrElse(if (streamEvents) EventsRun(paths.toSeq, identifier, outDir,
         interval, listing, rebuildState, verbosity)
       else ScanRun(paths.toSeq, identifier,
@@ -288,7 +289,7 @@ object Main {
           s"events at ${s.dir}" + s.seenSet.fold("")(r => s" (seen-set: $r files)"))
       }
     case w: WatchRun =>
-      val watch = WatchPg.start(spark, w.addr, w.sources, w.out,
+      val watch = WatchPg.start(spark, w.target, w.sources, w.out,
         Scan.trigger(w.interval), w.maxChanges, w.maxRetainMb, println(_))
       try Scan.awaitRun(Seq(watch.query)) finally watch.close()
       watch.logs.foreach { case (src, dir) =>

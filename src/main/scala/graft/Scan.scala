@@ -69,9 +69,8 @@ object Scan {
         // each declared source publishes its slice: list the batch once
         val listed = batch.persist()
         try scanned.foreach(src => PgMerge.publishScanWire(
-          listed.filter(col("external_source") === src), t.host, t.port,
-          t.database, t.userOrEnv, src, password = t.passwordOrEnv,
-          sslMode = t.sslMode, sslRootCert = t.sslRootCert))
+          listed.filter(col("external_source") === src), t, src,
+          maxConnections = 2))
         finally { listed.unpersist(); () }
     }
     paths.map(rescanStream(spark, _, identifier, listing)).reduce(_ union _)

@@ -117,8 +117,7 @@ object Slots {
           .map(slot => slot -> st.getPath.toString)
       }
     }.groupBy(_._1).view.mapValues(_.map(_._2)).toMap
-    val c = PgWireClient.connect(target.host, target.port, target.userOrEnv,
-      target.database, target.passwordOrEnv, target.sslMode, target.sslRootCert)
+    val c = target.connect()
     try {
       val slots = c.query(
         "SELECT slot_name, active::text, coalesce(pg_size_pretty(" +

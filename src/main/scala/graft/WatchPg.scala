@@ -8,7 +8,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.sinks.PgWireClient
+import graft.sinks.{PgMerge, PgWireClient}
 import graft.sources.v2.PgChangeFeed
 
 /** `--watch-pg` as a library: watch a PG-backed `external_file` through
@@ -43,8 +43,8 @@ object WatchPg {
       if (m != null) m.close()
     } catch { case NonFatal(_) => () }
 
-  /** Start the watch of `sources` on the server at `addr`. The sources
-    * form one WATCH GROUP sharing one slot and one stream: logical
+  /** Start the watch of `sources` on the server `target` addresses. The
+    * sources form one WATCH GROUP sharing one slot and one stream: logical
     * decoding pays the table's WAL once per slot, and each decoded batch
     * fans out to the per-source logs. First run (no markers):
     * the CONSISTENT handoff —
@@ -60,9 +60,9 @@ object WatchPg {
     * loudly. `maxChanges` bounds each trigger at commit boundaries;
     * `maxRetainMb` notes a slot whose retained WAL exceeds it; `note`
     * receives the handoff's and the monitor's lines. */
-  def start(spark: SparkSession, addr: String, sources: Seq[String],
-      out: String, trigger: Trigger, maxChanges: Option[Long] = None,
-      maxRetainMb: Option[Long] = None,
+  def start(spark: SparkSession, target: PgMerge.PgTarget,
+      sources: Seq[String], out: String, trigger: Trigger,
+      maxChanges: Option[Long] = None, maxRetainMb: Option[Long] = None,
       note: String => Unit = _ => ()): Watch = {
     val hadoopConf = spark.sessionState.newHadoopConf()
     def fsOf(s: String) =
@@ -139,15 +139,13 @@ object WatchPg {
           " — they are not one watch group; run them from their " +
           "original --out dirs")
     }
-    val opts = Map("url" -> addr, "slot" -> slot)
-
     if (markers.forall(_._2.isEmpty)) {
       // other slots with this group's digest = other logs' cursors or
       // orphans of removed logs; an orphan retains WAL forever, so name
       // them once, visibly (never auto-drop: only the OTHER logs'
       // markers know which is which — `graft.Main slots` cross-checks
       // and garbage-collects them safely)
-      val siblings = PgChangeFeed.siblingSlots(opts,
+      val siblings = PgChangeFeed.siblingSlots(target,
         s"graft_cf_${groupDigest}_")
       if (siblings.nonEmpty)
         note(s"note — existing slots for this watch group: " +
@@ -174,12 +172,12 @@ object WatchPg {
       // or every rerun refuses until the user removes it by hand; only a
       // hard crash leaves it, the case the redo guidance covers.
       val h =
-        try PgChangeFeed.bootstrapSnapshot(opts)
+        try PgChangeFeed.bootstrapSnapshot(target, slot)
         catch { case e: Throwable =>
           // bootstrap can fail AFTER its CREATE_REPLICATION_SLOT
           // succeeded; the slot name carries THIS run's random token, so
           // if it exists it is ours and would retain WAL unclaimed
-          try { PgChangeFeed.dropSlot(opts); () }
+          try { PgChangeFeed.dropSlot(target, slot); () }
           catch { case NonFatal(_) => () }
           try { lockFs.delete(lockPath, false); () }
           catch { case NonFatal(_) => () }
@@ -189,7 +187,7 @@ object WatchPg {
         // every source's seed reads the SAME exported snapshot — one
         // consistent point for the whole group
         entries.foreach { case (src, sub) =>
-          val state = spark.read.format("graft-pg").option("url", addr)
+          val state = spark.read.format("graft-pg").options(target.options)
             .option("snapshot", h.snapshotName).load()
             .filter(col("external_source") === lit(src))
           PgChangeFeed.stateAsScrapeEvents(state, h.originMs)
@@ -214,7 +212,7 @@ object WatchPg {
         // a CLEAN failure (not a crash) drops its own just-created slot
         // — no marker claims it yet, and leaving it would retain WAL
         // forever; best-effort (the failure may BE the lost server)
-        try { h.close(); PgChangeFeed.dropSlot(opts) }
+        try { h.close(); PgChangeFeed.dropSlot(target, slot) }
         catch { case NonFatal(_) => () }
         throw e
       } finally {
@@ -223,7 +221,7 @@ object WatchPg {
         catch { case NonFatal(_) => () }
       }
     } else
-      require(PgChangeFeed.slotExists(opts),
+      require(PgChangeFeed.slotExists(target, slot),
         s"the logs at $out name slot '$slot' but the server has no " +
           "such slot — changes since the logs' horizon are " +
           "unrecoverable; remove the logs to restart from a fresh " +
@@ -232,7 +230,7 @@ object WatchPg {
     // ONE stream, decoded once; each batch fans out to the per-source
     // logs (the adapter drops the other sources' rows per pass)
     val feed = maxChanges.foldLeft(
-      spark.readStream.format("graft-pg").option("url", addr)
+      spark.readStream.format("graft-pg").options(target.options)
         .option("mode", "changefeed").option("slot", slot))(
       (r, n) => r.option("maxchangespertrigger", n.toString)).load()
     // one long-lived advisory monitor connection, reconnected on the
@@ -256,7 +254,7 @@ object WatchPg {
         maxRetainMb.foreach { mb =>
           try {
             if (monitor.get() == null)
-              monitor.set(PgChangeFeed.monitorConnection(opts))
+              monitor.set(target.connect())
             PgChangeFeed.retainedWalBytes(monitor.get(), slot).foreach {
               bytes =>
                 if (bytes > mb * 1048576L) {

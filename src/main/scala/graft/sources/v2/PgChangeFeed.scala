@@ -9,6 +9,7 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.sinks.{PgMerge, PgWireClient}
+import graft.sinks.PgMerge.PgTarget
 
 /** INCREMENTAL change feed over `external_file` — PostgreSQL logical
   * decoding (the public `pgoutput` plugin + replication-slot SQL
@@ -396,39 +397,33 @@ object PgChangeFeed {
     override def close(): Unit = repl.close()
   }
 
-  /** Create a NEW changefeed slot with its exported consistent snapshot.
-    * `options` is the same map the `graft-pg` reader takes (`url` +
-    * credential/TLS overrides, `slot`, `publication`). Fails loudly when
-    * the slot already exists: an existing slot's horizon is already
-    * fixed, so a consistent handoff can only start from a fresh one. */
-  def bootstrapSnapshot(options: Map[String, String]): SnapshotHandle = {
-    val merged = options.map { case (k, v) => k.toLowerCase -> v }
-    val conn = PgConnInfo.resolve(merged)
-    val slot = checkedName("slot", merged.getOrElse("slot", "graft_slot"))
-    val pub = checkedName("publication",
-      merged.getOrElse("publication", "graft_pub"))
-    val ctl = PgWireClient.connect(conn.host, conn.port, conn.user,
-      conn.database, conn.password, conn.sslMode, conn.sslRootCert)
-    val originMs =
-      try {
-        ensureFeedObjects(ctl, pub)
-        require(ctl.queryOne("SELECT count(*) FROM pg_replication_slots " +
-          s"WHERE slot_name = ${PgWireClient.sqlLit(slot)}").contains("0"),
-          s"graft-pg changefeed: slot '$slot' already exists — the " +
-            "snapshot bootstrap hands off from a FRESH slot (drop the old " +
-            "one with pg_drop_replication_slot, or resume the existing " +
-            "feed without a bootstrap)")
-        // server clock BEFORE the slot exists: every feed commit is later
-        ctl.queryOne(
-          "SELECT (extract(epoch FROM now()) * 1000)::bigint").get.toLong
-      } finally ctl.close()
+  /** Create a NEW changefeed slot named `slot` with its exported
+    * consistent snapshot, on the server `target` addresses, for the
+    * publication `publication` (the `graft-pg` reader's own `slot` and
+    * `publication` options name the same two). Fails loudly when the slot
+    * already exists: an existing slot's horizon is already fixed, so a
+    * consistent handoff can only start from a fresh one. */
+  def bootstrapSnapshot(target: PgTarget, slot: String,
+      publication: String = "graft_pub"): SnapshotHandle = {
+    checkedName("slot", slot)
+    val pub = checkedName("publication", publication)
+    val originMs = target.withClient { ctl =>
+      ensureFeedObjects(ctl, pub)
+      require(ctl.queryOne("SELECT count(*) FROM pg_replication_slots " +
+        s"WHERE slot_name = ${PgWireClient.sqlLit(slot)}").contains("0"),
+        s"graft-pg changefeed: slot '$slot' already exists — the " +
+          "snapshot bootstrap hands off from a FRESH slot (drop the old " +
+          "one with pg_drop_replication_slot, or resume the existing " +
+          "feed without a bootstrap)")
+      // server clock BEFORE the slot exists: every feed commit is later
+      ctl.queryOne(
+        "SELECT (extract(epoch FROM now()) * 1000)::bigint").get.toLong
+    }
     // the walsender session: CREATE_REPLICATION_SLOT responds over the
     // normal result-set messages, so the plain query path reads it
     // (connect(): the same bounded connect-phase retry as every other
     // engine connection)
-    val repl = PgWireClient.connect(conn.host, conn.port, conn.user,
-      conn.database, conn.password, conn.sslMode, conn.sslRootCert,
-      extraStartupParams = Seq("replication" -> "database"))
+    val repl = target.connect(Seq("replication" -> "database"))
     try {
       // legacy keyword form: accepted by every version with logical
       // decoding (the option-list form only appeared in PG 15)
@@ -443,43 +438,26 @@ object PgChangeFeed {
     } catch { case e: Throwable => repl.close(); throw e }
   }
 
-  /** Does the named slot exist? The resume-vs-handoff decision for a
-    * changefeed consumer (same option map as the reader/bootstrap). */
-  /** Resolve options → one connection + the checked slot name, run
-    * `f`, close — the shared preamble of every slot utility (review
-    * r18: four drifting verbatim copies collapsed). */
-  private def withSlotConn[A](options: Map[String, String])(
+  /** One connection + the checked slot name, run `f`, close — the shared
+    * preamble of the slot utilities. */
+  private def withSlotConn[A](target: PgTarget, slot: String)(
       f: (PgWireClient, String) => A): A = {
-    val merged = options.map { case (k, v) => k.toLowerCase -> v }
-    val conn = PgConnInfo.resolve(merged)
-    val slot = checkedName("slot", merged.getOrElse("slot", "graft_slot"))
-    val c = PgWireClient.connect(conn.host, conn.port, conn.user,
-      conn.database, conn.password, conn.sslMode, conn.sslRootCert)
-    try f(c, slot) finally c.close()
+    val checked = checkedName("slot", slot)
+    target.withClient(f(_, checked))
   }
 
-  /** One long-lived connection for advisory monitors: the watch
-    * daemon's --max-retain-mb check runs per TRIGGER, and a fresh
-    * TCP/TLS/auth handshake per trigger is connection churn for one
-    * catalog row (review r18). Caller owns `close()` and reconnects
-    * on error. */
-  def monitorConnection(options: Map[String, String]): PgWireClient = {
-    val merged = options.map { case (k, v) => k.toLowerCase -> v }
-    val conn = PgConnInfo.resolve(merged)
-    PgWireClient.connect(conn.host, conn.port, conn.user, conn.database,
-      conn.password, conn.sslMode, conn.sslRootCert)
-  }
-
-  def slotExists(options: Map[String, String]): Boolean =
-    withSlotConn(options)((c, slot) =>
+  /** Does the named slot exist? The resume-vs-handoff decision for a
+    * changefeed consumer. */
+  def slotExists(target: PgTarget, slot: String): Boolean =
+    withSlotConn(target, slot)((c, slot) =>
       c.queryOne("SELECT count(*) FROM pg_replication_slots " +
         s"WHERE slot_name = ${PgWireClient.sqlLit(slot)}").contains("1"))
 
   /** Drop the named slot if it exists (releasing its retained WAL) —
     * the failed-handoff cleanup and the orphan-GC primitive. Returns
     * whether a slot was dropped. */
-  def dropSlot(options: Map[String, String]): Boolean =
-    withSlotConn(options)((c, slot) =>
+  def dropSlot(target: PgTarget, slot: String): Boolean =
+    withSlotConn(target, slot)((c, slot) =>
       c.queryOne("SELECT count(pg_drop_replication_slot(slot_name)) " +
         "FROM pg_replication_slots WHERE slot_name = " +
         PgWireClient.sqlLit(slot)).contains("1"))
@@ -490,11 +468,11 @@ object PgChangeFeed {
     * confirms lag pins every WAL segment since its `restart_lsn` on the
     * SERVER's disk. None when the slot does not exist (or the column is
     * unexpectedly null). */
-  def retainedWalBytes(options: Map[String, String]): Option[Long] =
-    withSlotConn(options)(retainedWalBytes)
+  def retainedWalBytes(target: PgTarget, slot: String): Option[Long] =
+    withSlotConn(target, slot)(retainedWalBytes)
 
-  /** Core form over a caller-owned connection — the per-trigger
-    * monitor reuses one [[monitorConnection]] instead of
+  /** Core form over a caller-owned connection — the watch daemon's
+    * per-trigger monitor reuses one long-lived connection instead of
     * reconnecting. */
   def retainedWalBytes(c: PgWireClient, slot: String): Option[Long] =
     c.query("SELECT pg_wal_lsn_diff(pg_current_wal_lsn(), " +
@@ -506,9 +484,8 @@ object PgChangeFeed {
     * LIKE — a slot-charset prefix is full of `_` wildcards) — the
     * other-logs'-cursors / orphaned-slot visibility surface for
     * per-log slot naming. */
-  def siblingSlots(options: Map[String, String],
-      prefix: String): Seq[String] =
-    withSlotConn(options)((c, _) =>
+  def siblingSlots(target: PgTarget, prefix: String): Seq[String] =
+    target.withClient(c =>
       c.query("SELECT slot_name FROM pg_replication_slots " +
         s"WHERE starts_with(slot_name, ${PgWireClient.sqlLit(prefix)}) " +
         "ORDER BY slot_name").flatMap(_.headOption.flatten))
@@ -606,16 +583,16 @@ private[v2] case class LsnOffset(lsn: Long) extends Offset {
   override def json(): String = lsn.toString
 }
 
-private[v2] class PgChangeFeedScan(conn: PgConnInfo, slot: String,
+private[v2] class PgChangeFeedScan(target: PgTarget, slot: String,
     pub: String, maxChanges: Option[Long]) extends Scan {
   override def readSchema(): StructType = PgChangeFeed.schema
   override def description(): String =
-    s"graft-pg changefeed ${conn.host}:${conn.port}/${conn.database} " +
+    s"graft-pg changefeed ${target.host}:${target.port}/${target.database} " +
       s"slot=$slot publication=$pub" +
       maxChanges.map(n => s" maxChangesPerTrigger=$n").getOrElse("")
   override def toMicroBatchStream(
       checkpointLocation: String): MicroBatchStream =
-    new PgChangeFeedStream(conn, slot, pub, maxChanges)
+    new PgChangeFeedStream(target, slot, pub, maxChanges)
 }
 
 /** LSN-offset micro-batch stream over the logical slot. The driver
@@ -654,7 +631,7 @@ private[v2] class PgChangeFeedScan(conn: PgConnInfo, slot: String,
   * server's bounded disk spill for unbounded client heap plus repeated
   * wire shipping: a net loss for this architecture, documented here
   * instead of implemented. */
-private[v2] class PgChangeFeedStream(conn: PgConnInfo, slot: String,
+private[v2] class PgChangeFeedStream(target: PgTarget, slot: String,
     pub: String, maxChanges: Option[Long]) extends MicroBatchStream
     with org.apache.spark.sql.connector.read.streaming
       .SupportsAdmissionControl
@@ -719,8 +696,7 @@ private[v2] class PgChangeFeedStream(conn: PgConnInfo, slot: String,
 
   private def ctl: PgWireClient = synchronized {
     if (client == null)
-      client = PgWireClient.connect(conn.host, conn.port, conn.user,
-        conn.database, conn.password, conn.sslMode, conn.sslRootCert)
+      client = target.connect()
     client
   }
 
@@ -770,7 +746,7 @@ private[v2] class PgChangeFeedStream(conn: PgConnInfo, slot: String,
 
   override def planInputPartitions(start: Offset,
       end: Offset): Array[InputPartition] =
-    Array(PgCdcPartition(conn, slot, pub,
+    Array(PgCdcPartition(target, slot, pub,
       end.asInstanceOf[LsnOffset].lsn, tableNamespace))
 
   override def createReaderFactory(): PartitionReaderFactory =
@@ -799,16 +775,14 @@ private[v2] class PgChangeFeedStream(conn: PgConnInfo, slot: String,
   }
 }
 
-private[v2] case class PgCdcPartition(conn: PgConnInfo, slot: String,
+private[v2] case class PgCdcPartition(target: PgTarget, slot: String,
     pub: String, endLsn: Long, namespace: String) extends InputPartition
 
 private[v2] class PgCdcReaderFactory extends PartitionReaderFactory {
   override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-    val PgCdcPartition(conn, slot, pub, endLsn, namespace) = p
+    val PgCdcPartition(target, slot, pub, endLsn, namespace) = p
     new PartitionReader[InternalRow] {
-      private val client = PgWireClient.connect(conn.host, conn.port,
-        conn.user, conn.database, conn.password, conn.sslMode,
-        conn.sslRootCert)
+      private val client = target.connect()
       private val rows =
         try {
           client.exec("SET TIME ZONE 'UTC'")

@@ -238,16 +238,10 @@ object StreamBench {
     * — and the artifact omits the row — when no server with
     * `wal_level=logical` is reachable. */
   def changefeedStats(s: SparkSession, nRows: Long): Option[OpStats] = {
+    import graft.BenchPg.withClient
     import graft.sinks.{PgMerge, PgWireClient}
-    val host = sys.env.getOrElse("PGWIRE_HOST", "127.0.0.1")
-    val port = sys.env.get("PGPORT").flatMap(_.toIntOption).getOrElse(54329)
-    val url = s"$host:$port/postgres"
     val slot = "graft_cf_streambench"
     val pub = "graft_streambench_pub"
-    def withClient[A](f: PgWireClient => A): A = {
-      val c = new PgWireClient(host, port, "postgres", "postgres")
-      try f(c) finally c.close()
-    }
     val usable =
       try withClient(_.queryOne("SHOW wal_level").contains("logical"))
       catch { case scala.util.control.NonFatal(_) => false }
@@ -273,8 +267,8 @@ object StreamBench {
       dropFeedObjects(c)
     }
     try {
-      graft.sources.v2.PgChangeFeed.bootstrapSnapshot(Map(
-        "url" -> url, "slot" -> slot, "publication" -> pub)).close()
+      graft.sources.v2.PgChangeFeed.bootstrapSnapshot(graft.BenchPg.target,
+        slot, pub).close()
       // seed OUTSIDE the timed region (the drain is what the row grades)
       def seed(round: Int): Unit = withClient { c =>
         var lo = 0L
@@ -332,7 +326,8 @@ object StreamBench {
       // spread printed for PLANS.
       val rounds = (1 to 3).map { r =>
         seed(r)
-        val feed = s.readStream.format("graft-pg").option("url", url)
+        val feed = s.readStream.format("graft-pg")
+          .options(graft.BenchPg.target.options)
           .option("mode", "changefeed").option("slot", slot)
           .option("publication", pub).load()
         val st = runOp(s, feed, "append")

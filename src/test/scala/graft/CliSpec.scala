@@ -7,6 +7,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * with parquet output (the analytics analog of the scrape CLI path). */
 class CliSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
+  // what an address without credentials resolves to
+  private val envUser =
+    sys.env.get("PGUSER").filter(_.nonEmpty).getOrElse("postgres")
+  private val envPassword = sys.env.get("PGPASSWORD").filter(_.nonEmpty)
 
   test("query subcommand writes a registered query's result to parquet") {
     val _ = spark // materialize the shared session so Main reuses it
@@ -680,7 +684,7 @@ class CliSpec extends AnyFunSuite {
         case Main.ScanRun(_, _, Scan.Pg(t), _, _, _, fromEnv) =>
           assert(fromEnv)
           assert((t.host, t.port, t.database, t.user, t.password) ==
-            (("dbhost", 6543, "scans", Some("u"), Some("p"))))
+            (("dbhost", 6543, "scans", "u", Some("p"))))
         case other => fail(s"DATABASE_URL not the sink: $other")
       }
       assert(Main.parse(Array("--out", "/o", "/t")) match {
@@ -717,17 +721,32 @@ class CliSpec extends AnyFunSuite {
     assert(Main.parse(Array("/data/a", "/data/a")).isInstanceOf[Main.ScanRun])
   }
 
+  test("argv parsing: --watch-pg resolves its address once, into the " +
+      "watch's PgTarget; a malformed one fails before any session") {
+    assert(Main.parse(Array("--watch-pg",
+        "postgres://u:p%40@h:6543/db?sslmode=require", "SRC")) ==
+      Main.WatchRun(sinks.PgMerge.PgTarget("h", 6543, "db", "u", Some("p@"),
+        "require"), Seq("SRC"), "./scan_out", None, None, None, 0))
+    // main parses before it builds a session: the same refusal
+    Seq[Array[String] => Unit](Main.parse(_), Main.main(_)).foreach { run =>
+      val e = intercept[IllegalArgumentException](
+        run(Array("--watch-pg", "h:1", "SRC")))
+      assert(e.getMessage.contains("--pg expects HOST:PORT/DBNAME") &&
+        e.getMessage.contains("'h:1'"), e.getMessage)
+    }
+  }
+
   test("--jdbc is the wire sink's alias: a jdbc:postgresql URL parses " +
       "into the PG target, any other JDBC URL is refused before any " +
       "listing, naming --pg") {
     val t = sinks.PgMerge.parsePgTarget(
       "jdbc:postgresql://10.0.0.7/scans?user=graft&password=p%40ss&sslmode=require")
     assert(t == sinks.PgMerge.PgTarget("10.0.0.7", 5432, "scans",
-      Some("graft"), Some("p@ss"), "require"))
+      "graft", Some("p@ss"), "require"))
     assert(Main.parse(Array("--jdbc", "jdbc:postgresql://h:7/db", "/t")) ==
       Main.ScanRun(Seq("/t"), None, Scan.Pg(sinks.PgMerge.PgTarget(
-        "h", 7, "db", None, None, "prefer")), None, Scan.Listing(), 0,
-        fromEnv = false))
+        "h", 7, "db", envUser, envPassword, "prefer")), None, Scan.Listing(),
+        0, fromEnv = false))
     val tree = Files.createTempDirectory("cli_jdbc_duck")
     Files.writeString(tree.resolve("a.txt"), "alpha")
     val duck = tree.resolve("x.duckdb")

@@ -20,7 +20,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * ([[Scan]], [[WatchPg]]); `Main` only parses argv and prints. No
   * shipped handler swallows a fatal error: a `Throwable` catch rethrows,
   * every other catch-all is `NonFatal`. The file table has one merge
-  * join: `Scrape`'s operators are views of `Scrape.cycle`. */
+  * join: `Scrape`'s operators are views of `Scrape.cycle`. A PostgreSQL
+  * address has one shape, `PgMerge.PgTarget`, which opens every
+  * connection. */
 class LayoutSpec extends AnyFunSuite {
   private val root = Paths.get("src/main/scala")
 
@@ -91,10 +93,12 @@ class LayoutSpec extends AnyFunSuite {
       .foreach(src => assert(join.findFirstIn(src).isDefined, src))
   }
 
+  /** file → number of matches of `re`, for the files that match. */
+  private def count(re: scala.util.matching.Regex): Map[String, Int] =
+    sources.map { case (f, src) => f -> re.findAllMatchIn(src).size }
+      .filter(_._2 > 0).toMap
+
   test("the wire publish and read exist once, in the graft-pg table") {
-    def count(re: scala.util.matching.Regex): Map[String, Int] =
-      sources.map { case (f, src) => f -> re.findAllMatchIn(src).size }
-        .filter(_._2 > 0).toMap
     // PgMerge's wire calls go through the table: no Spark job, RDD or
     // COPY channel of their own
     val ownJob =
@@ -187,6 +191,77 @@ class LayoutSpec extends AnyFunSuite {
         "sinks.PgMerge.publishScanWire(batch)", "PgMerge.publishScan(b)")
       .foreach(src => assert(engine.findFirstIn(src).isDefined, src))
     assert(gone.findFirstIn("def runAvailable(spark: SparkSession)").isDefined)
+  }
+
+  /** The parameter lists of every `def` in `src`, each def's lists as
+    * one string: the balanced `[…]` and `(…)` groups after its name. */
+  private def defParams(src: String): Seq[String] =
+    raw"\bdef\s+\w+".r.findAllMatchIn(src).map { m =>
+      val out = new StringBuilder
+      var i = m.end
+      def skipSpace(): Unit =
+        while (i < src.length && src(i).isWhitespace) i += 1
+      skipSpace()
+      while (i < src.length && (src(i) == '(' || src(i) == '[')) {
+        val start = i
+        var depth = 1
+        i += 1
+        while (i < src.length && depth > 0) {
+          if (src(i) == '(' || src(i) == '[') depth += 1
+          else if (src(i) == ')' || src(i) == ']') depth -= 1
+          i += 1
+        }
+        out ++= src.substring(start, i)
+        skipSpace()
+      }
+      out.toString
+    }.toSeq
+
+  test("one PostgreSQL address: every connection opens through " +
+      "PgTarget.connect, and no second address shape is left") {
+    val gone = raw"\b(PgConnInfo|wireOptions|userOrEnv|passwordOrEnv)\b".r
+    assert(count(gone).isEmpty,
+      s"a second address shape is back: ${count(gone)}")
+    // the client's connect is called once, by PgTarget.connect, and its
+    // constructor only by that connect
+    val connect = raw"PgWireClient\.connect\(".r
+    assert(count(connect) == Map("graft/sinks/PgMerge.scala" -> 1),
+      s"PgWireClient.connect outside PgTarget.connect: ${count(connect)}")
+    val construct = raw"new\s+PgWireClient\(".r
+    assert(count(construct) == Map("graft/sinks/PgWire.scala" -> 1),
+      s"a PgWireClient built outside its connect: ${count(construct)}")
+    val merge = sources.collectFirst {
+      case ("graft/sinks/PgMerge.scala", src) => src
+    }.get
+    // …inside PgTarget's def connect, with no other def between them
+    val opens =
+      raw"(?s)case class PgTarget\(.*?\bdef connect\b(?:(?!\bdef\b).)*PgWireClient\.connect\(".r
+    assert(opens.findFirstIn(merge).isDefined,
+      "PgTarget.connect does not open the connection")
+    // the changefeed's helpers take a PgTarget, not an option map
+    val feed = sources.collectFirst {
+      case ("graft/sources/v2/PgChangeFeed.scala", src) => src
+    }.get
+    val stringMap = raw"Map\[String,\s*String\]".r
+    val mapDefs = defParams(feed).filter(stringMap.findFirstIn(_).isDefined)
+    assert(mapDefs.isEmpty, s"PgChangeFeed defs taking an option map: $mapDefs")
+    // the guards see the forms they name
+    assert(gone.findFirstIn("PgConnInfo.resolve(merged)").isDefined)
+    assert(connect.findFirstIn(
+      "val c = PgWireClient.connect(conn.host, conn.port,").isDefined)
+    assert(construct.findFirstIn(
+      "val c = new PgWireClient(host, port, \"postgres\", \"postgres\")")
+      .isDefined)
+    assert(opens.findFirstIn("case class PgTarget(h: String) {\n  def " +
+      "connect(): C =\n    PgWireClient.connect(h)").isDefined)
+    assert(opens.findFirstIn("case class PgTarget(h: String) {\n  def " +
+      "connect(): C = c\n  def other(): C = PgWireClient.connect(h)").isEmpty)
+    assert(defParams("private def withSlotConn[A](options: Map[String, " +
+      "String])(\n    f: (PgWireClient, String) => A): A = {").exists(
+      stringMap.findFirstIn(_).isDefined))
+    assert(defParams("  def siblingSlots(target: PgMerge.PgTarget,\n" +
+      "      prefix: String): Seq[String] =") ==
+      Seq("(target: PgMerge.PgTarget,\n      prefix: String)"))
   }
 
   /** The handler bodies of every `case x: Throwable =>` in `src`: the

@@ -4,15 +4,15 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.prop.TableDrivenPropertyChecks
 
 import graft.sinks.PgMerge
-import graft.sources.v2.{PgConnInfo, PgFilterSql}
+import graft.sources.v2.PgFilterSql
 
 /** OFFLINE coverage for the `graft-pg` planning pieces that need no
   * server: the ctid block-range carving (pure function behind VERDICT
   * r15 #1 — the live 8.0× heap-block measurement rides on these
   * boundaries being airtight) and the filter→remote-SQL whitelist
   * shared by plan-time pushdown and runtime (DPP) filtering, and the
-  * options through which `publishScanWire`/`readCurrentWire` address the
-  * table. The
+  * one PostgreSQL address resolver with the `PgTarget` ↔ `graft-pg`
+  * options pair. The
   * PG-less CI path would otherwise skip every shard-planning property
   * behind `assume(live)`. */
 class PgShardPlanSpec extends AnyFunSuite with TableDrivenPropertyChecks {
@@ -224,18 +224,16 @@ class PgShardPlanSpec extends AnyFunSuite with TableDrivenPropertyChecks {
   test("publishScanWire/readCurrentWire options resolve to exactly the " +
       "target they were given: IPv6 literal, password with @ : %, no " +
       "password, verify-ca with a root cert") {
+    // the pair they go through: PgTarget.options, and
+    // PgTarget.fromOptions in the graft-pg table
     import scala.jdk.CollectionConverters._
     import org.apache.spark.sql.util.CaseInsensitiveStringMap
     // the path the table takes: DataFrame options are case-insensitive,
-    // merged, then resolved
-    def resolved(host: String, port: Int, db: String, user: String,
-        password: Option[String], sslMode: String,
-        sslRootCert: Option[String]): PgConnInfo =
-      PgConnInfo.resolve(PgConnInfo.merged(
-        new CaseInsensitiveStringMap(PgMerge.wireOptions(host, port, db,
-          user, password, sslMode, sslRootCert).asJava),
-        CaseInsensitiveStringMap.empty()))
-    // with no password the table's credential chain reads PGPASSWORD
+    // lower-cased, then resolved
+    def resolved(t: PgMerge.PgTarget): PgMerge.PgTarget =
+      PgMerge.PgTarget.fromOptions(new CaseInsensitiveStringMap(
+        t.options.asJava).asScala.toMap)
+    // with no password the credential chain reads PGPASSWORD
     val envPassword = sys.env.get("PGPASSWORD").filter(_.nonEmpty)
     val targets = Table(
       ("host", "port", "db", "user", "password", "sslMode", "sslRootCert"),
@@ -250,9 +248,73 @@ class PgShardPlanSpec extends AnyFunSuite with TableDrivenPropertyChecks {
       ("localhost", 5432, "postgres", "postgres", Some(""),
         "verify-full", Some("root.pem")))
     forAll(targets) { (host, port, db, user, password, sslMode, root) =>
-      assert(resolved(host, port, db, user, password, sslMode, root) ==
-        PgConnInfo(host, port, db, user, password.orElse(envPassword),
+      assert(resolved(PgMerge.PgTarget(host, port, db, user, password,
+        sslMode, root)) ==
+        PgMerge.PgTarget(host, port, db, user, password.orElse(envPassword),
           sslMode, root))
     }
+  }
+
+  test("one credential chain: an option beats the address, which beats " +
+      "PGUSER/PGPASSWORD, which beat the role postgres") {
+    val env = Map("PGUSER" -> "envuser", "PGPASSWORD" -> "envpw").get _
+    def t(addr: String, opts: (String, String)*) =
+      PgMerge.parsePgTarget(addr, opts.toMap, env)
+    val creds = Table(("target", "user", "password"),
+      (t("postgres://alice:apw@h/d", "user" -> "bob", "password" -> "bpw"),
+        "bob", Some("bpw")),
+      (t("postgres://alice:apw@h/d"), "alice", Some("apw")),
+      (t("postgres://alice@h/d", "password" -> ""), "alice", Some("")),
+      (t("jdbc:postgresql://h/d?user=carol&password=cpw", "user" -> "bob"),
+        "bob", Some("cpw")),
+      (t("h:1/d"), "envuser", Some("envpw")),
+      (t("postgres://@h/d", "user" -> ""), "envuser", Some("envpw")),
+      (PgMerge.parsePgTarget("h:1/d", Map.empty, _ => None), "postgres",
+        None))
+    forAll(creds) { (target, user, password) =>
+      assert((target.user, target.password) == ((user, password)))
+    }
+  }
+
+  test("the graft-pg sslmode option climbs the URL's ladder: allow is " +
+      "prefer, a verify mode takes the root from every source the URL " +
+      "parameter does, and one without a root is refused at resolution") {
+    def fromOptions(opts: (String, String)*) =
+      PgMerge.PgTarget.fromOptions(opts.toMap)
+    // allow maps to prefer, as ?sslmode=allow does
+    assert(fromOptions("url" -> "h:1/d", "sslmode" -> "allow").sslMode ==
+      "prefer")
+    assert(fromOptions("url" -> "h:1/d", "sslmode" -> "allow") ==
+      fromOptions("url" -> "postgres://h:1/d?sslmode=allow"))
+    // the option overrides the URL's mode, either way
+    assert(fromOptions("url" -> "postgres://h/d?sslmode=require",
+      "sslmode" -> "disable").sslMode == "disable")
+    assert(fromOptions("url" -> "h:1/d", "sslmode" -> "require").sslMode ==
+      "require")
+    // verify-ca over a URL without an sslmode: the root comes from the
+    // option, the URL, the graft.pgSslRootCert property or PGSSLROOTCERT
+    assert(fromOptions("url" -> "postgres://h/d?sslrootcert=/u.pem",
+      "sslmode" -> "verify-ca").sslRootCert == Some("/u.pem"))
+    assert(fromOptions("url" -> "h:1/d", "sslmode" -> "verify-full",
+      "sslrootcert" -> "/o.pem").sslRootCert == Some("/o.pem"))
+    assert(PgMerge.parsePgTarget("h:1/d", Map("sslmode" -> "verify-ca"),
+      Map("PGSSLROOTCERT" -> "/env.pem").get _).sslRootCert ==
+      Some("/env.pem"))
+    sys.props("graft.pgSslRootCert") = "/prop.pem"
+    try {
+      val v = fromOptions("url" -> "h:1/d", "sslmode" -> "verify-ca")
+      assert((v.sslMode, v.sslRootCert) == (("verify-ca", Some("/prop.pem"))))
+    } finally sys.props.remove("graft.pgSslRootCert")
+    // no root anywhere: refused when the options resolve, on the driver,
+    // not in every read task
+    val e = intercept[IllegalArgumentException](PgMerge.parsePgTarget(
+      "h:1/d", Map("sslmode" -> "verify-ca"), _ => None))
+    assert(e.getMessage.contains("sslmode=verify-ca needs a root " +
+      "certificate"), e.getMessage)
+    // a non-verify mode carries no root; an unknown mode is refused
+    assert(fromOptions("url" -> "h:1/d", "sslmode" -> "require",
+      "sslrootcert" -> "/o.pem").sslRootCert.isEmpty)
+    intercept[IllegalArgumentException](
+      fromOptions("url" -> "h:1/d", "sslmode" -> "bogus"))
   }
 }

@@ -19,6 +19,7 @@ class PgSourceSpec extends AnyFunSuite {
     .getOrElse(54329)
   private val db = "postgres"
   private def url = s"$host:$port/$db"
+  private def target = PgMerge.parsePgTarget(url)
 
   private def live: Boolean =
     try { new PgWireClient(host, port, "postgres", db).close(); true }
@@ -827,8 +828,9 @@ class PgSourceSpec extends AnyFunSuite {
     }
     dropFeed()
     import org.apache.spark.sql.functions._
-    val opts = Map("url" -> url, "slot" -> slot, "publication" -> pubName)
-    val handle = graft.sources.v2.PgChangeFeed.bootstrapSnapshot(opts)
+    def bootstrap() = graft.sources.v2.PgChangeFeed.bootstrapSnapshot(
+      target, slot, pubName)
+    val handle = bootstrap()
     var snapRows: Map[String, Long] = Map.empty
     var nowRows: Map[String, Long] = Map.empty
     try {
@@ -869,7 +871,7 @@ class PgSourceSpec extends AnyFunSuite {
         !nowRows.contains("f600") && nowRows.contains("new1.txt"))
       // a second bootstrap over the live slot refuses loudly
       val dup = intercept[IllegalArgumentException](
-        graft.sources.v2.PgChangeFeed.bootstrapSnapshot(opts))
+        bootstrap())
       assert(dup.getMessage.contains("already exists"), dup.getMessage)
     } finally handle.close()
     // a frozen snapshot under the RESCAN watch is rejected at plan time
@@ -941,8 +943,8 @@ class PgSourceSpec extends AnyFunSuite {
     // the slot first (bootstrap + close — its snapshot is not the point
     // here), then a BACKLOG of 6 separate transactions before the
     // stream ever runs: the after-a-long-stop shape
-    graft.sources.v2.PgChangeFeed.bootstrapSnapshot(
-      Map("url" -> url, "slot" -> slot, "publication" -> pubName)).close()
+    graft.sources.v2.PgChangeFeed.bootstrapSnapshot(target, slot, pubName)
+      .close()
     withClient { c =>
       (0 until 6).foreach { t =>
         c.exec(s"INSERT INTO ${PgMerge.table} " +
@@ -1041,8 +1043,7 @@ class PgSourceSpec extends AnyFunSuite {
     withClient(createTable)
     dropSlot()
     try {
-      graft.sources.v2.PgChangeFeed.bootstrapSnapshot(Map(
-        "url" -> url, "slot" -> slot)).close()
+      graft.sources.v2.PgChangeFeed.bootstrapSnapshot(target, slot).close()
       withClient { c =>
         // inserts, a non-identity update, a RENAME (old image used), a
         // physical delete — every message family the decoder handles
@@ -1082,8 +1083,8 @@ class PgSourceSpec extends AnyFunSuite {
       // the dropSlot primitive (failed-handoff cleanup / orphan GC):
       // true when a slot went, false when nothing was there to drop
       import graft.sources.v2.PgChangeFeed
-      assert(PgChangeFeed.dropSlot(Map("url" -> url, "slot" -> slot)))
-      assert(!PgChangeFeed.dropSlot(Map("url" -> url, "slot" -> slot)))
+      assert(PgChangeFeed.dropSlot(target, slot))
+      assert(!PgChangeFeed.dropSlot(target, slot))
     } finally {
       dropSlot()
       withClient(_.exec(s"DROP TABLE ${PgMerge.table}"))
@@ -1758,8 +1759,8 @@ class PgSourceSpec extends AnyFunSuite {
           .resolve("_graft_changefeed")
         java.nio.file.Files.readString(marker).linesIterator.next()
       }
-      val lag = graft.sources.v2.PgChangeFeed.retainedWalBytes(
-        Map("url" -> url, "slot" -> slotName))
+      val lag = graft.sources.v2.PgChangeFeed.retainedWalBytes(target,
+        slotName)
       assert(lag.exists(_ > 0L), s"held-back confirms show WAL lag: $lag")
       // a 0 MiB threshold trips at trigger time; the note prints on the
       // stream-execution thread, which inherits withOut's binding
@@ -1773,8 +1774,8 @@ class PgSourceSpec extends AnyFunSuite {
         txt.contains("over --max-retain-mb 0") &&
         txt.contains("disk fills"), s"note text pinned, got:\n$txt")
       // a missing slot reads as None, not a throw (monitor never kills)
-      assert(graft.sources.v2.PgChangeFeed.retainedWalBytes(
-        Map("url" -> url, "slot" -> "graft_cf_nosuchslot")).isEmpty)
+      assert(graft.sources.v2.PgChangeFeed.retainedWalBytes(target,
+        "graft_cf_nosuchslot").isEmpty)
     } finally {
       withClient { c =>
         c.query("SELECT pg_drop_replication_slot(slot_name) FROM " +
