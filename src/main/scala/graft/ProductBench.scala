@@ -215,7 +215,6 @@ object ProductBench {
   def run(spark: SparkSession, nObjects: Int = 100000)
       : Option[CycleStats] = {
     import graft.BenchPg.withClient
-    val (host, port) = (BenchPg.host, BenchPg.port)
     val src = "bench_s3"
     if (!BenchPg.reachable) return None
     // destructive-setup guard, FAIL-CLOSED and shared with the stream
@@ -232,8 +231,8 @@ object ProductBench {
       def cycle(): Double = {
         val t0 = System.nanoTime()
         val df = S3Wire.listDF(spark, conf, "bench", "", Some(src))
-        PgMerge.publishScanWire(df, host, port, "postgres", "postgres",
-          src)
+        PgMerge.publishScanWire(df, BenchPg.target, src,
+          maxConnections = 2)
         (System.nanoTime() - t0) / 1e9
       }
       def counts(): (Long, Long) = withClient { c =>

@@ -731,8 +731,9 @@ class CliSpec extends AnyFunSuite {
     Seq[Array[String] => Unit](Main.parse(_), Main.main(_)).foreach { run =>
       val e = intercept[IllegalArgumentException](
         run(Array("--watch-pg", "h:1", "SRC")))
-      assert(e.getMessage.contains("--pg expects HOST:PORT/DBNAME") &&
-        e.getMessage.contains("'h:1'"), e.getMessage)
+      assert(e.getMessage.contains("a PostgreSQL address is " +
+        "HOST:PORT/DBNAME") && e.getMessage.contains("'h:1'") &&
+        !e.getMessage.contains("--pg"), e.getMessage)
     }
   }
 

@@ -12,7 +12,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * apart again. Query and stream builders read parquet only through
   * [[Tables]], so none brings back Spark's schema-inference job. The
   * wire transport to PostgreSQL stages and merges in one place: the
-  * `graft-pg` table, whose commit runs `PgMerge.mergeWire`. Each store
+  * `graft-pg` table, whose commit runs `PgMerge.mergeWire`, and it is
+  * the one transport: no JDBC, and the merge statements are built for
+  * `mergeWire` alone. Each store
   * has one listing path, its DataSource V2 table (`graft-files`,
   * `graft-s3`): the listing helpers build no RDD of their own. The scan
   * daemon has one cycle engine: every mode is a streaming query, with no
@@ -128,6 +130,39 @@ class LayoutSpec extends AnyFunSuite {
       .isDefined)
     assert(wireUpsert.findFirstIn("c.exec(PgMerge.upsertSql(scratch))").isDefined)
     assert(wireUpsert.findFirstIn("st.execute(upsertSql(scratch, t))").isEmpty)
+    // the wire is the one transport: no JDBC connection, read or write
+    val jdbc = raw"\bDriverManager\b|\.jdbc\(|\borg\.postgresql\b".r
+    assert(count(jdbc).isEmpty, s"a JDBC transport in src/main: ${count(jdbc)}")
+    // the merge statements are built only for mergeWire: each occurs as
+    // its definition and its one call there
+    Seq("upsertSql", "markDeletedSql").foreach { stmt =>
+      assert(count(raw"\b$stmt\(".r) == Map("graft/sinks/PgMerge.scala" -> 2),
+        s"$stmt built outside its definition and mergeWire's call")
+    }
+    assert(count(raw"\.execBound\(\s*markDeletedSql\(".r) ==
+      Map("graft/sinks/PgMerge.scala" -> 1))
+    // the merge SQL runs offline in PgMergeSpec, not in dev scripts
+    val devScript = raw"pgmerge_\w*\.py".r
+    val scripts = {
+      val ls = Files.list(Paths.get("dev"))
+      try ls.iterator.asScala.map(_.getFileName.toString)
+        .filter(devScript.matches).toSeq
+      finally ls.close()
+    }
+    assert(scripts.isEmpty, s"merge SQL scripts in dev/: $scripts")
+    // the guards see the forms they name
+    Seq("val c = DriverManager.getConnection(url, user, password)",
+        "scan.write.mode(SaveMode.Append)\n  .jdbc(jdbcUrl, scratch, props)",
+        "spark.read.jdbc(jdbcUrl, table, props)",
+        "val pgDriver = \"org.postgresql.Driver\"")
+      .foreach(src => assert(jdbc.findFirstIn(src).isDefined, src))
+    assert(raw"\bmarkDeletedSql\(".r.findAllIn(
+      "def markDeletedSql(scratch: String)\n" +
+        "conn.prepareStatement(markDeletedSql(scratch))\n" +
+        "markDeletedSql(scratch).replace(\"?\", \"$1\")").size == 3)
+    assert(raw"\bupsertSql\(".r.findFirstIn("st.execute(upsertSql(s, t))").isDefined)
+    Seq("pgmerge_check.py", "pgmerge_live_check.py")
+      .foreach(f => assert(devScript.matches(f), f))
   }
 
   test("one listing path per store: the listing files build no RDD") {

@@ -210,11 +210,11 @@ class PgAuthSpec extends AnyFunSuite {
       ("S", "/d", "b.json", "application/json", ts, ts, 9L))
       .toDF("external_source", "path", "filename", "mime_type",
         "created", "modified", "size")
-    PgMerge.publishScanWire(df, host, port, db, "graft_scram", "S",
-      password = pw)
+    val scram = PgMerge.PgTarget(host, port, db, "graft_scram", pw, "disable")
+    PgMerge.publishScanWire(df, scram, "S", maxConnections = 2)
     // rescan with one file gone: tombstone path under the same auth
-    PgMerge.publishScanWire(df.filter($"filename" === "a.txt"),
-      host, port, db, "graft_scram", "S", password = pw)
+    PgMerge.publishScanWire(df.filter($"filename" === "a.txt"), scram, "S",
+      maxConnections = 2)
     val v = connect("graft_scram", pw)
     try {
       assert(v.queryOne(s"SELECT count(*) FROM ${PgMerge.table}") ==
@@ -222,8 +222,7 @@ class PgAuthSpec extends AnyFunSuite {
       assert(v.queryOne(s"SELECT count(*) FROM ${PgMerge.table} " +
         "WHERE filename = 'b.json' AND deleted IS NOT NULL") == Some("1"))
       // the distributed read runs under the same credential
-      val back = PgMerge.readCurrentWire(spark, host, port, db,
-        "graft_scram", "S", numPartitions = 3, password = pw)
+      val back = PgMerge.readCurrentWire(spark, scram, "S", numPartitions = 3)
       assert(back.count() == 2)
       v.exec(s"DROP TABLE ${PgMerge.table}")
     } finally v.close()
@@ -736,8 +735,9 @@ class PgAuthSpec extends AnyFunSuite {
         "NULL, TIMESTAMPTZ '2026-01-02 03:04:05.678901+00', i, NULL " +
         "FROM generate_series(1, 1000000) g(i)")
     }
-    val df = PgMerge.readCurrentWire(spark, host, port, db, "postgres",
-      "BIG", numPartitions = 8)
+    val df = PgMerge.readCurrentWire(spark,
+      PgMerge.PgTarget(host, port, db, "postgres", None, "disable"), "BIG",
+      numPartitions = 8)
     assert(df.rdd.getNumPartitions == 8)
     import org.apache.spark.sql.functions._
     val r = df.agg(count(lit(1)), sum("size"), countDistinct("filename"),

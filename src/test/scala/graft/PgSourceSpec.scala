@@ -399,8 +399,9 @@ class PgSourceSpec extends AnyFunSuite {
     assert(agg.getTimestamp(3).toInstant ==
       java.time.Instant.parse("2026-01-02T03:04:05.678901Z"))
     // equality with the library-call form (same transport, same slice)
-    val viaCall = PgMerge.readCurrentWire(spark, host, port, db,
-      "postgres", "BIG", numPartitions = 8)
+    val viaCall = PgMerge.readCurrentWire(spark,
+      PgMerge.PgTarget(host, port, db, "postgres", None, "disable"), "BIG",
+      numPartitions = 8)
       .agg(count(lit(1)), sum("size"), countDistinct("filename")).collect()(0)
     assert(viaCall.getLong(0) == agg.getLong(0) &&
       viaCall.getLong(1) == agg.getLong(1) &&

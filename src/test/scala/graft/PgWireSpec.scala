@@ -9,12 +9,14 @@ import graft.sinks.{PgMerge, PgWireClient}
   * the staged COPY write runs from Spark executors, the merge transaction
   * (BEGIN → upsert with the reference's named-constraint conflict target
   * verbatim, `db.rs:105-108` → tombstone → COMMIT) runs on one driver
-  * connection, and every scenario of dev/pgmerge_live_check.py is
-  * re-asserted here THROUGH that code path.
+  * connection, and every merge scenario (insert, conditional update,
+  * corrected-mime no-op, resurrect, NULL-created, tombstone, scope,
+  * rollback, idempotent rescan) is asserted here THROUGH that code path.
   *
-  * Requires the harness server (see pgmerge_live_check.py's bootstrap:
-  * trust auth, 127.0.0.1:54329); the whole suite cancels cleanly when no
-  * server is reachable so `sbt test` stays green on a bare box.
+  * Requires a throwaway server (the live-PostgreSQL recipe of the verify
+  * skill, `skills/verify/SKILL.md`: trust auth, 127.0.0.1:54329); the
+  * whole suite cancels cleanly when no server is reachable so `sbt test`
+  * stays green on a bare box.
   */
 class PgWireSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -24,6 +26,7 @@ class PgWireSpec extends AnyFunSuite {
     .getOrElse(54329)
   private val user = "postgres"
   private val db = "postgres"
+  private val target = PgMerge.PgTarget(host, port, db, user, None, "disable")
 
   private def live: Boolean =
     try { new PgWireClient(host, port, user, db).close(); true }
@@ -42,7 +45,7 @@ class PgWireSpec extends AnyFunSuite {
       .parse(s.replace(" ", "T").replace("+00", "Z")).toInstant)
 
   /** Fresh external_file with the reference's NAMED constraint, seeded
-    * with the six pre-existing rows of the live-check fixture. */
+    * with the six pre-existing rows of the merge fixture. */
   private def seed(c: PgWireClient): Unit = {
     c.exec(s"DROP TABLE IF EXISTS ${PgMerge.table}")
     c.exec(
@@ -68,7 +71,7 @@ class PgWireSpec extends AnyFunSuite {
       rows.map(_.map(lit).mkString("(", ",", ")")).mkString(","))
   }
 
-  /** The live-check's scan listing as a Spark frame (what the engine
+  /** The merge fixture's scan listing as a Spark frame (what the engine
     * actually stages over COPY). */
   private def scanDf = {
     val rows = Seq(
@@ -84,7 +87,7 @@ class PgWireSpec extends AnyFunSuite {
   }
 
   private def publish(): Unit =
-    PgMerge.publishScanWire(scanDf, host, port, db, user, "A")
+    PgMerge.publishScanWire(scanDf, target, "A", maxConnections = 2)
 
   private def t(c: PgWireClient, sql: String): Boolean =
     c.queryOne(sql).contains("t")
@@ -150,12 +153,12 @@ class PgWireSpec extends AnyFunSuite {
     }
   }
 
-  test("publishScanWire end-to-end: all pgmerge_live_check scenarios " +
+  test("publishScanWire end-to-end: every merge scenario " +
       "through the engine (real PostgreSQL, named constraint verbatim)") {
     assume(live, s"no PostgreSQL server at $host:$port")
     withClient(seed)
 
-    // K2 first (as the live check runs it): a transaction that fails
+    // K2 first: a transaction that fails
     // mid-merge must leave NO trace — engine client, engine-generated
     // upsert SQL verbatim, injected failure, explicit ROLLBACK
     withClient { c =>
@@ -299,8 +302,7 @@ class PgWireSpec extends AnyFunSuite {
         lit(ts(T1)).as("created"), lit(ts(T1)).as("modified"),
         $"id".as("size"))
     PgWireClient.resetPeak()
-    PgMerge.publishScanWire(big, host, port, db, user, "K",
-      maxConnections = 2)
+    PgMerge.publishScanWire(big, target, "K", maxConnections = 2)
     assert(PgWireClient.peak <= 2,
       s"connection budget exceeded: peak=${PgWireClient.peak}")
     assert(PgWireClient.live == 0, "no leaked connections")
@@ -325,8 +327,7 @@ class PgWireSpec extends AnyFunSuite {
         s"TIMESTAMPTZ '$T1', TIMESTAMPTZ '2026-03-04 05:06:07.123456+00', " +
         "i, NULL FROM generate_series(1, 200) g(i)")
     }
-    val df = PgMerge.readCurrentWire(spark, host, port, db, user, "A",
-      numPartitions = 3)
+    val df = PgMerge.readCurrentWire(spark, target, "A", numPartitions = 3)
     assert(df.rdd.getNumPartitions == 3, "one shard per connection")
     val rows = df.collect()
     assert(rows.length == 205, "5 seeded A rows + 200 bulk; B excluded " +
@@ -355,7 +356,7 @@ class PgWireSpec extends AnyFunSuite {
     withClient(_.exec(s"INSERT INTO ${PgMerge.table} VALUES " +
       s"(${PgWireClient.sqlLit(hostile)}, '/h', 'f', 'text/plain', " +
       s"NULL, TIMESTAMPTZ '$T1', 1, NULL)"))
-    val h = PgMerge.readCurrentWire(spark, host, port, db, user, hostile,
+    val h = PgMerge.readCurrentWire(spark, target, hostile,
       numPartitions = 2).collect()
     assert(h.length == 1 && h(0).getString(0) == hostile)
     withClient(_.exec(s"DROP TABLE ${PgMerge.table}"))
@@ -531,7 +532,7 @@ class PgWireSpec extends AnyFunSuite {
            |  CONSTRAINT ${PgMerge.constraint}
            |    UNIQUE (external_source, path, filename))""".stripMargin)
     }
-    PgMerge.publishScanWire(df, host, port, db, user, "W")
+    PgMerge.publishScanWire(df, target, "W", maxConnections = 2)
     withClient { c =>
       assert(c.queryOne(s"SELECT count(*) FROM ${PgMerge.table}") ==
         Some("2"))
